@@ -15,13 +15,14 @@ Scale notes (100 TB corpus):
   handled by AQE skew-join + the band cap below.
 - banded LSH: probability tuning via (bands, rows-per-band); pairs
   within a bucket are generated bucket-locally, with an explicit cap
-  on bucket size (drop degenerate buckets, log them) so one viral
-  boilerplate string can't emit O(n^2) pairs.
+  on bucket size so one viral boilerplate string can't emit O(n^2)
+  pairs. Buckets over the cap are dropped, and nothing counts or
+  logs them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
@@ -86,28 +87,51 @@ def merge_token_arrays(toks_arr: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures_wide(toks_arr: DataFrame, k: int = 8) -> DataFrame:
-    """(id, _s0.._s{k-1}) from a (id, toks) array frame: per-row
-    sig_i = array_min(md5(i || ':' || tok)) over the row's token set
-    (identical to the groupBy-min over exploded tokens — min over
-    strings = lexicographic array_min), then a per-id min-merge so
-    duplicate-id rows collapse to the signature of their UNION set
-    (min-hash distributes over union: sig(A ∪ B) = min(sig(A),
-    sig(B))). The merge shuffles only k 32-char digests per row,
-    map-side combined — on unique-id input it is a cheap identity
-    exchange, and it is what keeps the array path bit-identical to the
-    oracle's DISTINCT (doc_id, token) pipeline when the injected-twin
-    id space collides with real ids (real from ~sf0.2 up)."""
+def _minhash_cols(k: int) -> list:
+    """_s0.._s{k-1} of a frame with a toks array column: per row,
+    sig_i = array_min(md5(i || ':' || tok)) over its token set."""
     def _seed_hash(s: int):
         # closure factory: a 2-parameter lambda would be read by
         # PySpark as the (element, index) form of transform
         return lambda t: F.md5(F.concat(F.lit(f"{s}:"), t))
 
-    cols = [
+    return [
         F.array_min(F.transform(F.col("toks"), _seed_hash(s))).alias(f"_s{s}")
         for s in range(k)
     ]
-    per_row = toks_arr.select("id", *cols)
+
+
+def _unpivot(df: DataFrame, keep: list, prefix: str, n: int, key: str, val: str) -> DataFrame:
+    """(*keep, key int, val) rows from the n columns {prefix}0..{prefix}{n-1}."""
+    stack = ", ".join(f"{i}, {prefix}{i}" for i in range(n))
+    return df.select(
+        *keep, F.expr(f"stack({n}, {stack}) AS ({key}, {val})")
+    ).select(*keep, F.col(key).cast("int").alias(key), val)
+
+
+def _band_keys(wide: DataFrame, bands: int, rows_per_band: int, *carry: str) -> DataFrame:
+    """(id, *carry, band, bucket) from a frame with the min-hash columns:
+    bucket = md5 of the band's SORTED sigs, exactly the oracle's
+    collect_list+sort_array key (no groupBy: the sigs are columns)."""
+    def _key(b: int):
+        sigs = [F.col(f"_s{b * rows_per_band + i}") for i in range(rows_per_band)]
+        return F.md5(F.concat_ws("|", F.sort_array(F.array(*sigs)))).alias(f"_b{b}")
+
+    keyed = wide.select("id", *carry, *[_key(b) for b in range(bands)])
+    return _unpivot(keyed, ["id", *carry], "_b", bands, "band", "bucket")
+
+
+def minhash_signatures_wide(toks_arr: DataFrame, k: int = 8) -> DataFrame:
+    """(id, _s0.._s{k-1}) from a (id, toks) array frame: per-row
+    min-hashes (identical to the groupBy-min over exploded tokens),
+    then a per-id min-merge so duplicate-id rows collapse to the
+    signature of their UNION set (min-hash distributes over union:
+    sig(A ∪ B) = min(sig(A), sig(B))). The merge shuffles only k 32-char digests per row,
+    map-side combined — on unique-id input it is a cheap identity
+    exchange, and it is what keeps the array path bit-identical to the
+    oracle's DISTINCT (doc_id, token) pipeline when the injected-twin
+    id space collides with real ids (real from ~sf0.2 up)."""
+    per_row = toks_arr.select("id", *_minhash_cols(k))
     return per_row.groupBy("id").agg(
         *[F.min(f"_s{s}").alias(f"_s{s}") for s in range(k)]
     )
@@ -184,18 +208,6 @@ def _group_pairs(keyed: DataFrame, *group_cols: str, max_bucket: int | None = No
     )
 
 
-def _fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
-    """Explicit exchange before a bucket-local self-join whose output
-    FANS OUT quadratically per key group (C(n,2) pairs): AQE coalesces
-    post-shuffle partitions by INPUT bytes and cannot see the fan-out,
-    so a dense corpus lands the whole pair generation on one task
-    (measured at sf1.0: a 2.2M-row frame coalesced to ONE task emitting
-    ~10^8 pairs — a 30+ min straggler). A user-specified partition
-    count is exempt from AQE coalescing."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 4
-    return df.repartition(n, *cols)
-
-
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Clusters of byte-identical documents:
     (rep_id, dup_id) for every duplicate, rep = min id of the cluster."""
@@ -224,10 +236,7 @@ def minhash_signatures_from_tokens(toks: DataFrame, k: int = 8) -> DataFrame:
         for s in range(k)
     ]
     wide = toks.groupBy("id").agg(*aggs)
-    stack = ", ".join(f"{s}, _s{s}" for s in range(k))
-    return wide.select(
-        "id", F.expr(f"stack({k}, {stack}) AS (seed, sig)")
-    ).select("id", F.col("seed").cast("int").alias("seed"), "sig")
+    return _unpivot(wide, ["id"], "_s", k, "seed", "sig")
 
 
 def minhash_signatures(
@@ -238,10 +247,7 @@ def minhash_signatures(
     Computed per row from the doc's distinct-token array (no explode,
     no shuffle), unpivoted to the long form."""
     wide = minhash_signatures_wide(token_arrays(df, id_col, text_col), k)
-    stack = ", ".join(f"{s}, _s{s}" for s in range(k))
-    return wide.select(
-        "id", F.expr(f"stack({k}, {stack}) AS (seed, sig)")
-    ).select("id", F.col("seed").cast("int").alias("seed"), "sig")
+    return _unpivot(wide, ["id"], "_s", k, "seed", "sig")
 
 
 def minhash_candidate_pairs(
@@ -265,40 +271,79 @@ def banded_lsh_pairs(
 ) -> DataFrame:
     """Classic (b, r) MinHash-LSH: signature of b*r hashes, one bucket
     key per band = md5 of the band's r concatenated min-hashes.
-    Buckets larger than max_bucket are dropped (boilerplate guard —
-    'no silent caps': caller can count them via lsh_bucket_stats).
+    Buckets larger than max_bucket are dropped (boilerplate guard);
+    nothing counts or logs the dropped buckets.
 
     tokens_arr_df: optional prepared (id, toks) array frame
     (token_arrays) — pass a persisted one to share the tokenize stage
     with the verification pass."""
-    k = bands * rows_per_band
-    if tokens_arr_df is not None:
-        wide = minhash_signatures_wide(tokens_arr_df, k)
-    else:
-        wide = minhash_signatures_wide(token_arrays(df, id_col, text_col), k)
-    # band bucket per row (no groupBy: the band's r sigs are already
-    # columns) — md5 of the band's SORTED sigs, exactly the former
-    # collect_list+sort_array key
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.sort_array(
-                    F.array(
-                        *[F.col(f"_s{b * rows_per_band + i}") for i in range(rows_per_band)]
-                    )
-                ),
-            )
-        ).alias(f"_b{b}")
-        for b in range(bands)
-    ]
-    stack = ", ".join(f"{b}, _b{b}" for b in range(bands))
-    band_key = (
-        wide.select("id", *band_cols)
-        .select("id", F.expr(f"stack({bands}, {stack}) AS (band, bucket)"))
-        .select("id", F.col("band").cast("int").alias("band"), "bucket")
-    )
+    if tokens_arr_df is None:
+        tokens_arr_df = token_arrays(df, id_col, text_col)
+    wide = minhash_signatures_wide(tokens_arr_df, bands * rows_per_band)
+    band_key = _band_keys(wide, bands, rows_per_band)
     return _group_pairs(band_key, "band", "bucket", max_bucket=max_bucket)
+
+
+_KERNEL_CELLS = 1 << 22  # bucket rows x token columns per dense chunk
+
+
+def _bucket_jaccard(ids, toks, threshold: float):
+    """All-pairs set Jaccard of ONE bucket as numpy (id_a, id_b,
+    jaccard), id_a < id_b, jaccard >= threshold. ids are unique; toks[i]
+    is the DISTINCT token set of ids[i]. Tokens are interned to ints,
+    those held by one member are dropped (they never intersect), and
+    all C(n,2) intersection sizes come from 0/1 products M·Mᵀ chunked
+    over the token axis: each dense chunk has at most _KERNEL_CELLS
+    cells, so its float32 sums (< 2^24) are exact. The n×n matrices are
+    bounded by the bucket cap (8 MB at max_bucket 1000). Jaccard is one
+    IEEE double division of the same integers the JVM form divides, so
+    every value is bit-identical to it and to the DuckDB oracle."""
+    import numpy as np
+    import pandas as pd
+
+    ids = np.asarray(ids)
+    n = len(ids)
+    if n < 2:
+        return ids[:0], ids[:0], np.empty(0)
+    order = np.argsort(ids, kind="stable")
+    ids, toks = ids[order], [toks[i] for i in order]
+    sizes = np.fromiter((len(t) for t in toks), np.int64, n)
+    codes = pd.factorize(np.concatenate(toks))[0]
+    shared = np.bincount(codes)[codes] >= 2
+    rows = np.repeat(np.arange(n), sizes)[shared]
+    uniq, cols = np.unique(codes[shared], return_inverse=True)
+    width = max(1, _KERNEL_CELLS // n)
+    inter = np.zeros((n, n), np.int64)
+    for t0 in range(0, len(uniq), width):
+        sel = (cols >= t0) & (cols < t0 + width)
+        m = np.zeros((n, min(width, len(uniq) - t0)), np.float32)
+        m[rows[sel], cols[sel] - t0] = 1.0
+        inter += (m @ m.T).astype(np.int64)
+    jac = inter / (sizes[:, None] + sizes[None, :] - inter)
+    a, b = np.nonzero(np.triu(jac >= threshold, 1))
+    return ids[a], ids[b], jac[a, b]
+
+
+def _capped_buckets(keyed: DataFrame, max_bucket: int) -> GroupedData:
+    """(band, bucket) groups for a bucket-local Python verify stage.
+    Buckets over max_bucket (and singletons) are dropped in the JVM by
+    a window count over the clustering the grouped stage needs anyway,
+    so they never reach Python and no exchange is added.
+
+    The stage's task count follows its input: a plain hash exchange
+    that AQE coalesces by bytes (the embedding gram stage of
+    embedding_near_dup_bucketed is sized the same way). A bucket never
+    splits across tasks and its work is vectorized, so a fixed fan-out
+    only spread whole, capped buckets. And each Python task pays ~0.2 s of worker set-up before its first
+    row (170-310 ms on a 4-vCPU host: pyspark.worker_util.
+    setup_spark_files calls importlib.invalidate_caches(), which under
+    Python 3.11 re-reads every cached zip importer — ~10.6 ms per
+    pyspark.zip entry, ~45 ms per spark-core jar), so the former fixed
+    4 x defaultParallelism fan-out spent 16 set-ups on a few MB of
+    input. The set-up cost itself is not fixed here."""
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    keyed = keyed.withColumn("_n", size).where(F.col("_n").between(2, max_bucket))
+    return keyed.drop("_n").groupBy("band", "bucket")
 
 
 def banded_lsh_jaccard(
@@ -310,23 +355,17 @@ def banded_lsh_jaccard(
 ) -> DataFrame:
     """Fused banded-LSH candidates + exact set-Jaccard verify, bucket
     locally: the (id, token-set) rows travel ONCE into their band
-    buckets and every same-bucket pair is verified in a vectorized
-    pandas stage — the candidate pairs themselves are never shuffled
-    or joined (the staged form shuffles the pair set three times:
-    distinct + two attach-joins). Same guards as banded_lsh_pairs
-    (viral buckets dropped at max_bucket; fan-out repartition keeps
-    the quadratic expansion spread under AQE). Jaccard values are
-    bit-identical to the JVM form (integer set sizes, one IEEE double
-    division); a pair sharing several buckets is verified once per
-    bucket with an identical result and deduped at the end. The
-    size-ratio prune (jaccard ≤ min/max) uses a conservative epsilon
-    so float rounding can never drop a qualifying pair.
+    buckets and every same-bucket pair is verified by one numpy kernel
+    per bucket (_bucket_jaccard) — the candidate pairs themselves are
+    never shuffled or joined (the staged form shuffles the pair set
+    three times: distinct + two attach-joins). Buckets over max_bucket
+    are dropped in the JVM, as in banded_lsh_pairs. A pair sharing
+    several buckets is verified once per bucket with an identical
+    result and deduped at the end.
 
     Returns distinct (id_a, id_b, jaccard RAW double) with
     jaccard >= threshold; callers round for presentation."""
     import pandas as pd
-
-    k = bands * rows_per_band
 
     # duplicate-id rows must collapse to their union token set BEFORE
     # banding (the oracle tokenizes through DISTINCT (doc_id, token)):
@@ -334,70 +373,19 @@ def banded_lsh_jaccard(
     # signatures, and the two rows of a colliding id may band into
     # different buckets — so the sig-level min-merge is not enough here
     toks_arr = merge_token_arrays(toks_arr)
-
     # carry toks through the signature projection (no join)
-    def _seed_hash(s: int):
-        return lambda t: F.md5(F.concat(F.lit(f"{s}:"), t))
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("toks"), _seed_hash(s))).alias(f"_s{s}")
-        for s in range(k)
-    ]
-    wide = toks_arr.select("id", "toks", *sig_cols)
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.sort_array(
-                    F.array(
-                        *[F.col(f"_s{b * rows_per_band + i}") for i in range(rows_per_band)]
-                    )
-                ),
-            )
-        ).alias(f"_b{b}")
-        for b in range(bands)
-    ]
-    stack = ", ".join(f"{b}, _b{b}" for b in range(bands))
-    keyed = (
-        wide.select("id", "toks", *band_cols)
-        .select("id", "toks", F.expr(f"stack({bands}, {stack}) AS (band, bucket)"))
-        .select("id", "toks", F.col("band").cast("int").alias("band"), "bucket")
-    )
-    keyed = _fanout_repartition(keyed, "band", "bucket")
-    id_type = dict(
-        (f.name, f.dataType.simpleString()) for f in toks_arr.schema.fields
-    )["id"]
+    wide = toks_arr.select("id", "toks", *_minhash_cols(bands * rows_per_band))
+    keyed = _band_keys(wide, bands, rows_per_band, "toks")
+    id_type = toks_arr.schema["id"].dataType.simpleString()
 
     def _verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "jaccard": []})
-        if n < 2 or n > max_bucket:
-            return empty
-        pdf = pdf.sort_values("id")  # id_a < id_b via order
-        ids = pdf["id"].to_numpy()
-        sets = [frozenset(t) for t in pdf["toks"]]
-        sizes = [len(s) for s in sets]
-        out_a, out_b, out_j = [], [], []
-        for i in range(n - 1):
-            si, ni = sets[i], sizes[i]
-            for j in range(i + 1, n):
-                nj = sizes[j]
-                lo, hi = (ni, nj) if ni <= nj else (nj, ni)
-                if lo < threshold * hi - 1e-9:  # jaccard <= lo/hi < thr
-                    continue
-                inter = len(si & sets[j])
-                union = ni + nj - inter
-                jac = inter / union  # same IEEE division as the JVM
-                if jac >= threshold:
-                    out_a.append(ids[i])
-                    out_b.append(ids[j])
-                    out_j.append(jac)
-        if not out_a:
-            return empty
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "jaccard": out_j})
+        a, b, j = _bucket_jaccard(
+            pdf["id"].to_numpy(), pdf["toks"].to_numpy(), threshold
+        )
+        return pd.DataFrame({"id_a": a, "id_b": b, "jaccard": j})
 
     return (
-        keyed.groupBy("band", "bucket")
+        _capped_buckets(keyed, max_bucket)
         .applyInPandas(_verify, f"id_a {id_type}, id_b {id_type}, jaccard double")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -581,7 +569,6 @@ def embedding_near_dup_bucketed(
         .where(F.col("nrm") > 0)
         .withColumn("bucket", lsh_bucket(F.col("v"), planes))
     )
-    v = _fanout_repartition(v, "bucket")
     if backend == "gram":
         import numpy as np
         import pandas as pd
@@ -626,6 +613,7 @@ def embedding_near_dup_bucketed(
                 }
             )
 
+        # no fixed fan-out: AQE sizes the stage by input (see _capped_buckets)
         pairs = v.groupBy("bucket").applyInPandas(
             _bucket_gram, f"id_a {id_type}, id_b {id_type}, cosine double"
         )

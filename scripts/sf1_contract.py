@@ -27,11 +27,16 @@ sets get genuinely large. This script:
    protocol and reports the scale factor (contract: within 2x of
    linear, i.e. sf1_wall <= 20 * sf01_wall).
 
-Writes CORRECTNESS_SF1.json at the repo root and prints it.
+Writes CORRECTNESS_SF1.json at the repo root (or --out) and prints it.
+
+    python scripts/sf1_contract.py                      # all of QUERY_SET
+    python scripts/sf1_contract.py --queries dedup_jaccard,dedup_simhash \
+        --out /tmp/sf1_dedup.json                       # a subset
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -218,11 +223,28 @@ def _tolerant_match(sdf, ddf) -> dict:
     }
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--queries", default=",".join(QUERY_SET),
+        help="comma-separated contract queries to check (default: all of QUERY_SET)",
+    )
+    ap.add_argument(
+        "--out", default=os.path.join(ROOT, "CORRECTNESS_SF1.json"),
+        help="report path (default: CORRECTNESS_SF1.json at the repo root)",
+    )
+    args = ap.parse_args(argv)
+
     import duckdb
 
     from kbase_cdm_ontologies_spark.queries import oracle_sql, queries
     from kbase_cdm_ontologies_spark.session import get_spark
+
+    qs, oracles = queries(), oracle_sql()
+    query_set = [q for q in args.queries.split(",") if q]
+    unknown = [q for q in query_set if q not in qs or q not in oracles]
+    if not query_set or unknown:
+        ap.error(f"unknown or empty --queries: {unknown or args.queries!r}")
 
     spark = get_spark(app_name="sf1-contract")
     generate(spark)
@@ -238,9 +260,8 @@ def main() -> int:
             f"CREATE OR REPLACE VIEW {t} AS "
             f"SELECT * FROM read_parquet('{SF1}/{t}.parquet/*.parquet')"
         )
-    qs, oracles = queries(), oracle_sql()
     report: dict = {"sf": 1.0, "dir": SF1, "queries": {}}
-    for name in QUERY_SET:
+    for name in query_set:
         entry: dict = {}
         # --- wall at sf0.1 and sf1.0 (noop sink, min of 2, warm) ---
         for label, d in [("sf01_sec", SF01), ("sf1_sec", SF1)]:
@@ -317,7 +338,7 @@ def main() -> int:
     report["all_within_2x_linear"] = all(
         e["within_2x_linear"] for e in report["queries"].values()
     )
-    with open(os.path.join(ROOT, "CORRECTNESS_SF1.json"), "w") as f:
+    with open(args.out, "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
     print(json.dumps(report))
     return 0 if report["all_match"] else 1

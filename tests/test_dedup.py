@@ -2,6 +2,10 @@
 
 import hashlib
 
+import numpy as np
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kbase_cdm_ontologies_spark.operators import dedup
@@ -293,6 +297,79 @@ def test_banded_lsh_jaccard_equals_staged(spark):
     }
     assert fused == staged
     assert len(fused) > 0
+
+
+# --- the bucket-local Jaccard kernel vs a plain frozenset oracle ---
+
+def _frozenset_jaccard(ids, sets, thr):
+    out = {}
+    for x, a in enumerate(ids):
+        for y, b in enumerate(ids):
+            if a < b:
+                inter = len(sets[x] & sets[y])
+                j = inter / (len(sets[x]) + len(sets[y]) - inter)
+                if j >= thr:
+                    out[(a, b)] = j
+    return out
+
+
+def _kernel(ids, sets, thr):
+    a, b, j = dedup._bucket_jaccard(
+        np.array(ids, dtype=np.int64), [sorted(t) for t in sets], thr
+    )
+    return dict(zip(zip(a.tolist(), b.tolist()), j.tolist()))
+
+
+@given(
+    st.lists(
+        st.frozensets(st.sampled_from([f"t{i}" for i in range(12)]), min_size=1),
+        max_size=40,
+    ),
+    st.sampled_from([0.0, 0.25, 1 / 3, 0.5, 0.8, 1.0]),
+    st.sampled_from([1 << 22, 7, 1]),  # forces 1..many token chunks
+    st.randoms(use_true_random=False),
+)
+@settings(max_examples=200, deadline=None)
+def test_bucket_jaccard_kernel_equals_frozenset_oracle(sets, thr, cells, rnd):
+    """Random buckets: same pairs and bit-identical raw doubles."""
+    ids = rnd.sample(range(1000), len(sets))  # unique, unsorted
+    saved, dedup._KERNEL_CELLS = dedup._KERNEL_CELLS, cells
+    try:
+        got = _kernel(ids, sets, thr)
+    finally:
+        dedup._KERNEL_CELLS = saved
+    assert got == _frozenset_jaccard(ids, sets, thr)
+
+
+def test_bucket_jaccard_kernel_edges():
+    s = frozenset
+    assert _kernel([7], [s("ab")], 0.0) == {}  # n = 1: no pair
+    # a pair at exactly the threshold is kept, one just under is not
+    got = _kernel([1, 2, 3], [s("ab"), s("abcd"), s("aef")], 0.5)
+    assert got == {(1, 2): 0.5}
+    # identical sets -> 1.0; disjoint sets -> 0.0, kept only at 0.0
+    assert _kernel([5, 4], [s("xyz"), s("zyx")], 1.0) == {(4, 5): 1.0}
+    assert _kernel([1, 2], [s("ab"), s("cd")], 0.0) == {(1, 2): 0.0}
+    assert _kernel([1, 2], [s("ab"), s("cd")], 1e-9) == {}
+
+
+@pytest.mark.parametrize("n, kept", [(5, True), (6, False)])
+def test_banded_lsh_jaccard_bucket_cap(spark, n, kept):
+    """n identical docs share one bucket in every band: kept at
+    n = max_bucket, dropped in the JVM at max_bucket + 1; the other
+    bucket's pair is verified either way."""
+    rows = [(i, "a b c") for i in range(n)] + [(100, "x y z"), (101, "x y z w")]
+    toks = dedup.token_arrays(spark.createDataFrame(rows, ["doc_id", "text"]), "doc_id", "text")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in dedup.banded_lsh_jaccard(toks, 4, 2, max_bucket=5, threshold=0.5).collect()
+    }
+    want = _frozenset_jaccard(
+        [i for i, _ in rows], [frozenset(t.split()) for _, t in rows], 0.5
+    )
+    if not kept:
+        want = {p: j for p, j in want.items() if p[0] >= 100}
+    assert got == want and (100, 101) in got
 
 
 # --- duplicate-id inputs (the injected-twin id space collides with
