@@ -3,9 +3,9 @@
 measurement; everything exploratory lives here).
 
 Modes:
-  --explain [--out-suffix before|after] [--queries a,b,c]
+  --explain [--out-suffix before|after] [--queries a,b,c] [--out-dir DIR]
       Write .explain("formatted") for headline queries to
-      plans/r06/<query>_<suffix>.txt.
+      DIR/<query>_<suffix>.txt (default DIR: plans/r06).
   --time [--queries a,b,c] [--repeats N]
       Per-query noop-sink timing (same methodology as bench.py:
       1 warm pass, then min of N) printed as one JSON line.
@@ -58,12 +58,13 @@ def _spark(master):
     return get_spark(app_name="bench-extra", master=master)
 
 
-def run_explain(sf_dir: str, master: str | None, names: list[str], suffix: str) -> None:
+def run_explain(
+    sf_dir: str, master: str | None, names: list[str], suffix: str, out_dir: str
+) -> None:
     from kbase_cdm_ontologies_spark.queries import queries
 
     spark = _spark(master)
     qs = queries()
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
@@ -104,6 +105,11 @@ def main() -> int:
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--queries", default=None, help="comma-separated; default headline")
     ap.add_argument("--out-suffix", default="before")
+    ap.add_argument(
+        "--out-dir",
+        default=os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06"),
+        help="where --explain writes its plans",
+    )
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
@@ -111,7 +117,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = args.queries.split(",") if args.queries else HEADLINE
     if args.explain:
-        run_explain(sf_dir, args.master, names, args.out_suffix)
+        run_explain(sf_dir, args.master, names, args.out_suffix, args.out_dir)
     if args.time:
         run_time(sf_dir, args.master, names, args.repeats)
     return 0

@@ -8,11 +8,14 @@ bit-for-bit).
 Scale notes (100 TB corpus):
 - exact dedup: one hash-shuffle on a 32-char digest — balanced keys by
   construction; group sizes are the duplicate clusters.
-- MinHash: explode(tokens) is the big intermediate; distinct per
-  (doc, token) first so hub tokens don't multiply, then k min-aggs
-  which partial-aggregate map-side. Candidate join is on (seed,
-  signature) — a hot signature (boilerplate text) is a real skew risk,
-  handled by AQE skew-join + the band cap below.
+- MinHash: no explode. Each row's distinct token array
+  (array_distinct over the split) yields its k signatures per row
+  (array_min over seeded md5s); duplicate ids min-merge in one small
+  groupBy. Candidates come from ONE groupBy collect_list per key and
+  streamed in-task pair expansion (_group_pairs) — there is no
+  candidate join. A hot signature (boilerplate text) is the skew risk:
+  the expansion cuts each group into _PAIR_BLOCK blocks spread across
+  tasks, and the banded path caps bucket size.
 - banded LSH: probability tuning via (bands, rows-per-band); pairs
   within a bucket are generated bucket-locally, with an explicit cap
   on bucket size so one viral boilerplate string can't emit O(n^2)
@@ -28,26 +31,14 @@ from pyspark.sql import functions as F
 TOKEN_SPLIT_RE = r"\s+"
 
 
-def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Distinct (id, token) pairs — whitespace tokenization."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), TOKEN_SPLIT_RE)).alias("token"),
-        )
-        .where(F.col("token") != "")
-        .distinct()
-    )
-
-
 def token_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, toks): per-document DISTINCT token set as one array — the
-    zero-shuffle form of `tokens()`. All downstream consumers (min-hash,
-    set Jaccard) are order- and multiplicity-insensitive, so the
-    explode → distinct → groupBy round-trip of the long form is pure
-    shuffle cost; array_distinct over the split does the same dedup
-    inside the scan task. Documents with no tokens are dropped,
-    matching the long form (they produce zero (id, token) rows)."""
+    """(id, toks): per-document DISTINCT whitespace-token set as one
+    array, i.e. the oracles' DISTINCT (doc_id, token) rows of
+    string_split_regex(text, '\\s+') without an explode or a shuffle:
+    array_distinct over the split dedups inside the scan task. Every
+    consumer (min-hash, set Jaccard, simhash votes) is order- and
+    multiplicity-insensitive. Documents with no tokens are dropped
+    (they have zero (doc_id, token) rows)."""
     arr = F.array_distinct(
         F.filter(
             F.split(F.col(text_col), TOKEN_SPLIT_RE), lambda t: t != ""
@@ -141,21 +132,14 @@ _PAIR_BLOCK = 1024  # ids per expansion block: bounds per-eval memory
 # and splits one viral key group across tasks
 
 
-def _group_pairs(keyed: DataFrame, *group_cols: str, max_bucket: int | None = None) -> DataFrame:
-    """Distinct (id_a, id_b), id_a < id_b, for ids sharing a key group:
-    ONE shuffle (groupBy collect_list) + in-task pair expansion +
-    distinct, replacing the self-join formulation whose two join inputs
-    each recompute the whole upstream.
+def _expand_pairs(sets: DataFrame, arr: str, left: str, right: str) -> DataFrame:
+    """(left, right) = (arr[i], arr[j]) for every i < j of each row's
+    SORTED array column arr — the block-streaming pair expansion shared
+    by _group_pairs and simhash_near_pairs. Callers dedup identical sets
+    first (the pair set of a group depends only on its set) and the
+    emitted pairs after.
 
-    Expansion shape (the scale-critical part):
-
-    1. Identical SORTED id sets collapse before expansion
-       (``.distinct()`` on the array): near-dup clusters agree on many
-       seeds/bands, so the same id set recurs once per agreeing key —
-       the former shape expanded (and then pair-distinct'ed) each
-       recurrence. The pair set of a group depends only on its id set,
-       so deduping sets first is exact.
-    2. Each set is cut into _PAIR_BLOCK-sized blocks of left-elements
+    1. Each set is cut into _PAIR_BLOCK-sized blocks of left-elements
        (explode of a stepped sequence) and the BLOCK rows are
        round-robin repartitioned: a user-specified repartition is
        AQE-coalescing-exempt (AQE sizes partitions by input bytes and
@@ -163,12 +147,44 @@ def _group_pairs(keyed: DataFrame, *group_cols: str, max_bucket: int | None = No
        onto ONE task emitting ~10^8 pairs, a 30+ min straggler at
        sf1.0), and blocking also splits one viral group across tasks
        instead of pinning its whole C(n,2) on one task.
-    3. Per block row, pairs stream through posexplode (left ids) +
+    2. Per block row, pairs stream through posexplode (left elements) +
        explode of the remaining suffix — peak per-eval memory is
-       O(|set|), where the former single-eval
-       ``flatten(transform(transform(...)))`` materialized ALL C(n,2)
+       O(|set|), where a single-eval
+       ``flatten(transform(transform(...)))`` materializes ALL C(n,2)
        pair structs of a group at once (an uncapped hot group of ~46k
-       ids = ~10^9 structs in one allocation: OOM on any heap).
+       ids = ~10^9 structs in one allocation: OOM on any heap)."""
+    n_out = sets.sparkSession.sparkContext.defaultParallelism * 4
+    blocks = sets.select(
+        arr,
+        F.explode(
+            F.sequence(F.lit(0), F.size(arr) - 2, F.lit(_PAIR_BLOCK))
+        ).alias("_b0"),
+    ).repartition(n_out)
+    lefts = blocks.select(
+        arr,
+        "_b0",
+        F.posexplode(F.slice(arr, F.col("_b0") + 1, _PAIR_BLOCK)).alias(
+            "_p", left
+        ),
+    )
+    return lefts.select(
+        left,
+        F.explode(
+            F.slice(arr, F.col("_b0") + F.col("_p") + 2, F.size(arr))
+        ).alias(right),
+    )
+
+
+def _group_pairs(keyed: DataFrame, *group_cols: str, max_bucket: int | None = None) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, for ids sharing a key group:
+    ONE shuffle (groupBy collect_list) + in-task pair expansion
+    (_expand_pairs) + distinct, replacing the self-join formulation
+    whose two join inputs each recompute the whole upstream.
+
+    Identical SORTED id sets collapse before expansion (``.distinct()``
+    on the array): near-dup clusters agree on many seeds/bands, so the
+    same id set recurs once per agreeing key, and expanding each
+    recurrence would only feed the pair distinct.
 
     max_bucket: drop key groups larger than this (viral-bucket guard)
     — applied on the grouped sizes, identical to the former
@@ -181,31 +197,7 @@ def _group_pairs(keyed: DataFrame, *group_cols: str, max_bucket: int | None = No
         .select(F.sort_array("_ids").alias("_ids"))
         .distinct()
     )
-    n_out = keyed.sparkSession.sparkContext.defaultParallelism * 4
-    blocks = sets.select(
-        "_ids",
-        F.explode(
-            F.sequence(F.lit(0), F.size("_ids") - 2, F.lit(_PAIR_BLOCK))
-        ).alias("_b0"),
-    ).repartition(n_out)
-    lefts = blocks.select(
-        "_ids",
-        "_b0",
-        F.posexplode(F.slice("_ids", F.col("_b0") + 1, _PAIR_BLOCK)).alias(
-            "_p", "id_a"
-        ),
-    )
-    return (
-        lefts.select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    "_ids", F.col("_b0") + F.col("_p") + 2, F.size("_ids")
-                )
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
+    return _expand_pairs(sets, "_ids", "id_a", "id_b").distinct()
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -220,23 +212,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .where((F.col("cluster_size") > 1) & (F.col("id") != F.col("rep_id")))
         .select("rep_id", F.col("id").alias("dup_id"))
     )
-
-
-def minhash_signatures_from_tokens(toks: DataFrame, k: int = 8) -> DataFrame:
-    """(id, seed, sig) from a prepared (id, token) frame — the shared
-    signature stage: compute tokens ONCE (persist at the call site) and
-    feed both candidate generation and exact verification.
-
-    Shape: ONE groupBy with k min-aggregates (map-side combined), then
-    an unpivot — not a tokens×seeds crossJoin, which would multiply the
-    shuffle volume by k. Duplicate tokens need no distinct: min() is
-    idempotent."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("token")))).alias(f"_s{s}")
-        for s in range(k)
-    ]
-    wide = toks.groupBy("id").agg(*aggs)
-    return _unpivot(wide, ["id"], "_s", k, "seed", "sig")
 
 
 def minhash_signatures(
@@ -267,19 +242,14 @@ def banded_lsh_pairs(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int = 1000,
-    tokens_arr_df: DataFrame | None = None,
 ) -> DataFrame:
     """Classic (b, r) MinHash-LSH: signature of b*r hashes, one bucket
     key per band = md5 of the band's r concatenated min-hashes.
     Buckets larger than max_bucket are dropped (boilerplate guard);
-    nothing counts or logs the dropped buckets.
-
-    tokens_arr_df: optional prepared (id, toks) array frame
-    (token_arrays) — pass a persisted one to share the tokenize stage
-    with the verification pass."""
-    if tokens_arr_df is None:
-        tokens_arr_df = token_arrays(df, id_col, text_col)
-    wide = minhash_signatures_wide(tokens_arr_df, bands * rows_per_band)
+    nothing counts or logs the dropped buckets."""
+    wide = minhash_signatures_wide(
+        token_arrays(df, id_col, text_col), bands * rows_per_band
+    )
     band_key = _band_keys(wide, bands, rows_per_band)
     return _group_pairs(band_key, "band", "bucket", max_bucket=max_bucket)
 
@@ -391,109 +361,6 @@ def banded_lsh_jaccard(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    candidates: DataFrame,
-    threshold: float = 0.5,
-    tokens_df: DataFrame | None = None,
-) -> DataFrame:
-    """Exact token-set Jaccard over candidate pairs:
-    (id_a, id_b, jaccard) with jaccard >= threshold.
-
-    Token-level join form: shuffles (id, token) rows — robust when
-    single documents are huge. For bounded-size documents prefer
-    jaccard_pairs_sets (one array_intersect per pair, no token-level
-    fan-out shuffle)."""
-    toks = tokens_df if tokens_df is not None else tokens(df, id_col, text_col)
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
-    ta = toks.select(F.col("id").alias("id_a"), "token")
-    tb = toks.select(F.col("id").alias("id_b"), "token")
-    inter = (
-        candidates.join(ta, "id_a")
-        .join(tb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_tok").alias("na")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_tok").alias("nb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def jaccard_pairs_sets(
-    toks: DataFrame,
-    candidates: DataFrame,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact token-set Jaccard over candidates via per-doc token arrays:
-    two equi-joins + one JVM array_intersect per pair, instead of the
-    token-level fan-out join + groupBy of jaccard_pairs. The right
-    shape when per-document token sets are bounded (web pages): the
-    heavy shuffle is two (id -> array) joins on the candidate ids, and
-    intersections never leave whole-stage codegen.
-
-    toks: either the long (id, token) form (grouped to sets here) or a
-    token_arrays (id, toks) frame, used directly — the zero-shuffle
-    path.
-
-    Attach-join strategy: when the per-doc set frame is provably small
-    (one count, conf spark.graft.jaccard.broadcastSetRows, default
-    200k — sized so token arrays stay inside the broadcast budget),
-    broadcast it on BOTH sides so the candidate pairs never shuffle;
-    a corpus-scale set frame falls back to shuffled joins under AQE."""
-    from ..config import conf_threshold as _conf_threshold
-
-    if "toks" in toks.columns:
-        # merge duplicate-id rows to their union set — the long form's
-        # groupBy collect_set does this implicitly
-        sets = merge_token_arrays(toks).select(
-            "id", F.col("toks").alias("tset")
-        )
-    else:
-        sets = toks.groupBy("id").agg(F.collect_set("token").alias("tset"))
-    bcast_cap = _conf_threshold(
-        toks, "spark.graft.jaccard.broadcastSetRows", 200_000
-    )
-    if sets.count() <= bcast_cap:
-        sets = F.broadcast(sets)
-    a = sets.select(F.col("id").alias("id_a"), F.col("tset").alias("ta"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("tset").alias("tb"))
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    union = F.size("ta") + F.size("tb") - inter
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct (id, shingle) word n-grams — JVM-side via split +
-    transform over index range (no Python)."""
-    toks = F.split(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), " ")
-    # docs with < n tokens yield no shingles; the guard keeps sequence()
-    # from ever seeing a descending (0, -1) span, which would make
-    # slice() throw INVALID_PARAMETER_VALUE.START on short/empty docs
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.expr("CAST(array() AS array<int>)"))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
-        .where(F.col("shingle") != "")
-        .distinct()
-    )
-
-
 def embedding_near_dup(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -555,8 +422,9 @@ def embedding_near_dup_bucketed(
     the scan+bucket subtree for both join sides. Python-side
     pre-filtering uses a sound margin (threshold - 1e-5 on the RAW
     cosine); the authoritative round+threshold gate stays in Spark.
-    backend="join": the all-JVM equi-join formulation (kept for
-    environments without the Python worker pool)."""
+    backend="join": the all-JVM equi-join formulation — the reference
+    that test_embedding_bucketed_gram_equals_join_backend compares the
+    gram backend against (no query runs it)."""
     from .similarity import _dot, _norm, _seeded_hyperplanes, lsh_bucket
 
     planes = _seeded_hyperplanes(dim, n_planes, seed)
@@ -690,41 +558,18 @@ def simhash_near_pairs(
         "ckey",
         F.expr("shiftright(simhash, CAST(chunk * 16 AS INT)) & 65535"),
     )
-    # group-local pair expansion (same block-streaming shape as
-    # _group_pairs, with the simhash carried in the struct payload)
-    # instead of a self-join whose both sides recompute the whole
-    # simhash aggregation. SimHash CONCENTRATES near-dup corpora into
-    # shared chunk buckets by design, so the same hazards apply:
-    # identical member sets recur across the 4 chunks (dedup before
-    # expansion), and one viral bucket must neither materialize its
-    # whole C(n,2) in a single eval nor pin it on one task.
+    # group-local pair expansion (_expand_pairs, the simhash carried in
+    # the struct payload), not a self-join whose both sides recompute
+    # the simhash aggregation. SimHash CONCENTRATES near-dup corpora
+    # into shared chunk buckets by design: identical member sets recur
+    # across the 4 chunks (deduped before expansion), and a viral bucket
+    # is exactly the hot group the block streaming is for.
     grouped = chunks.groupBy("chunk", "ckey").agg(
         F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("_m")
     )
-    sets = (
-        grouped.where(F.size("_m") >= 2).select("_m").distinct()
-    )
-    n_out = df.sparkSession.sparkContext.defaultParallelism * 4
-    blocks = sets.select(
-        "_m",
-        F.explode(
-            F.sequence(F.lit(0), F.size("_m") - 2, F.lit(_PAIR_BLOCK))
-        ).alias("_b0"),
-    ).repartition(n_out)
-    lefts = blocks.select(
-        "_m",
-        "_b0",
-        F.posexplode(F.slice("_m", F.col("_b0") + 1, _PAIR_BLOCK)).alias(
-            "_p", "_a"
-        ),
-    )
+    sets = grouped.where(F.size("_m") >= 2).select("_m").distinct()
     cand = (
-        lefts.select(
-            "_a",
-            F.explode(
-                F.slice("_m", F.col("_b0") + F.col("_p") + 2, F.size("_m"))
-            ).alias("_b"),
-        )
+        _expand_pairs(sets, "_m", "_a", "_b")
         .select(
             F.col("_a.id").alias("id_a"),
             F.col("_b.id").alias("id_b"),

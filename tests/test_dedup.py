@@ -1,6 +1,7 @@
 """Dedup operator family vs pure-Python oracles."""
 
 import hashlib
+import re
 
 import numpy as np
 import pytest
@@ -76,15 +77,18 @@ def test_banded_lsh_subset_of_rows1(spark):
 
 
 def test_jaccard_exact_values(spark):
-    cand = spark.createDataFrame([(1, 2), (1, 3), (4, 6)], ["id_a", "id_b"])
+    """Exact set-Jaccard through the verify that queries run. With one
+    row per band, any shared min-hash is a candidate, so docs 1/3 meet;
+    disjoint docs share no token, hence no min-hash and no bucket."""
+    toks = dedup.token_arrays(_df(spark), "doc_id", "text")
     got = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 4)
-        for r in dedup.jaccard_pairs(_df(spark), "doc_id", "text", cand, 0.0).collect()
+        for r in dedup.banded_lsh_jaccard(toks, 16, 1, threshold=0.0).collect()
     }
     assert got[(1, 2)] == 1.0
     # docs 1/3: tokens differ by jumps vs leaps: |inter|=7, |union|=9
     assert got[(1, 3)] == round(7 / 9, 4)
-    # zero-intersection pairs never join -> absent, not 0.0
+    # zero-intersection pairs never become candidates -> absent, not 0.0
     assert (4, 6) not in got
 
 
@@ -111,7 +115,10 @@ def test_simhash_matches_python(spark):
         assert got[doc_id] == _py_simhash(text), doc_id
 
 
-def test_simhash_near_pairs(spark):
+@pytest.mark.parametrize("block", [1024, 1])
+def test_simhash_near_pairs(spark, monkeypatch, block):
+    """block=1 streams every left id in its own block (boundary case)."""
+    monkeypatch.setattr(dedup, "_PAIR_BLOCK", block)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in dedup.simhash_near_pairs(_df(spark), "doc_id", "text", 10).collect()
@@ -120,27 +127,6 @@ def test_simhash_near_pairs(spark):
     assert pairs[(4, 5)] == 0  # token-set based: same set, same simhash
     if (1, 3) in pairs:
         assert pairs[(1, 3)] <= 10
-
-
-def test_ngram_shingles(spark):
-    sh = {
-        r["shingle"]
-        for r in dedup.ngram_shingles(
-            spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"]), "doc_id", "text", 2
-        ).collect()
-    }
-    assert sh == {"a b", "b c", "c d"}
-
-
-def test_ngram_shingles_short_docs_yield_nothing(spark):
-    # docs with fewer than n tokens (incl. empty/whitespace-only) must
-    # produce zero shingles, not an INVALID_PARAMETER_VALUE.START crash
-    df = spark.createDataFrame(
-        [(1, "solo"), (2, ""), (3, "   "), (4, "two words"), (5, "a b c")],
-        ["doc_id", "text"],
-    )
-    rows = dedup.ngram_shingles(df, "doc_id", "text", 3).collect()
-    assert {(r["id"], r["shingle"]) for r in rows} == {(5, "a b c")}
 
 
 def test_chunk_documents_window_shapes(spark):
@@ -187,34 +173,30 @@ def test_normalize_urls_rules(spark):
     )
 
 
-# --- r6 optimization equivalence: array-form internals vs long form ---
+# --- r6 optimization equivalence: array-form internals vs references ---
 
 def test_token_arrays_equals_tokens(spark):
-    """token_arrays (per-row array_distinct) must carry exactly the
-    distinct (id, token) sets of the exploded long form, and drop
-    token-less docs identically."""
-    df = spark.createDataFrame(
-        DOCS + [(7, ""), (8, "   "), (9, "x  x\t x\nx")], ["doc_id", "text"]
-    )
-    long = {
-        (r["id"], r["token"])
-        for r in dedup.tokens(df, "doc_id", "text").collect()
+    """token_arrays carries exactly each doc's distinct whitespace-token
+    set and drops token-less docs. The character class is Java's \\s,
+    the regex Spark's split runs."""
+    rows = DOCS + [(7, ""), (8, "   "), (9, "x  x\t x\nx\x0b\x0cy\rz")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    want = {
+        (i, t) for i, text in rows for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t
     }
-    arr = {
-        (r["id"], t)
-        for r in dedup.token_arrays(df, "doc_id", "text").collect()
-        for t in r["toks"]
-    }
-    assert arr == long
+    got = dedup.token_arrays(df, "doc_id", "text").collect()
+    assert {(r["id"], t) for r in got for t in r["toks"]} == want
     # per-row arrays are duplicate-free
-    for r in dedup.token_arrays(df, "doc_id", "text").collect():
-        assert len(r["toks"]) == len(set(r["toks"]))
+    assert all(len(r["toks"]) == len(set(r["toks"])) for r in got)
 
 
-def test_group_pairs_equals_self_join(spark):
+@pytest.mark.parametrize("block", [1024, 2, 1])
+def test_group_pairs_equals_self_join(spark, monkeypatch, block):
     """_group_pairs (collect_list + in-task expansion) must emit the
     same distinct ordered pairs as the equi-self-join it replaced,
-    including the max_bucket drop."""
+    including the max_bucket drop; blocks of 2 and 1 cross the
+    expansion's block boundaries inside each group."""
+    monkeypatch.setattr(dedup, "_PAIR_BLOCK", block)
     rows = (
         [(i, 0, "hot") for i in range(12)]          # viral bucket: dropped at cap 10
         + [(i, 1, "warm") for i in (3, 1, 7)]       # C(3,2) pairs
@@ -267,8 +249,9 @@ def test_embedding_bucketed_gram_equals_join_backend(spark):
 
 
 def test_banded_lsh_jaccard_equals_staged(spark):
-    """Fused bucket-local verify == staged candidates + set-Jaccard,
-    pair set AND raw jaccard values identical."""
+    """Fused bucket-local verify == the staged pipeline (band buckets,
+    then set-Jaccard of every same-bucket pair) in pure Python: pair
+    set AND raw jaccard values identical."""
     import random
 
     rng = random.Random(11)
@@ -288,14 +271,10 @@ def test_banded_lsh_jaccard_equals_staged(spark):
             toks, 4, 2, max_bucket=50, threshold=0.4
         ).collect()
     }
-    cand = dedup.banded_lsh_pairs(
-        df, "doc_id", "text", 4, 2, max_bucket=50, tokens_arr_df=toks
-    )
-    staged = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs_sets(toks, cand, threshold=0.4).collect()
-    }
-    assert fused == staged
+    merged = {}
+    for i, text in rows:
+        merged.setdefault(i, set()).update(text.split())
+    assert fused == _py_banded_jaccard(merged, cap=50, thr=0.4)
     assert len(fused) > 0
 
 
@@ -351,6 +330,10 @@ def test_bucket_jaccard_kernel_edges():
     assert _kernel([5, 4], [s("xyz"), s("zyx")], 1.0) == {(4, 5): 1.0}
     assert _kernel([1, 2], [s("ab"), s("cd")], 0.0) == {(1, 2): 0.0}
     assert _kernel([1, 2], [s("ab"), s("cd")], 1e-9) == {}
+    # docs 1/3 differ by jumps vs leaps: |inter| = 7, |union| = 9
+    assert _kernel(
+        [1, 3], [s(DOCS[0][1].split()), s(DOCS[2][1].split())], 0.0
+    ) == {(1, 3): 7 / 9}
 
 
 @pytest.mark.parametrize("n, kept", [(5, True), (6, False)])
