@@ -11,7 +11,14 @@ operators can retune the routing without code changes:
     spark.graft.unionElimination.localThreshold         (default 200k)
 
 plus the byte-level driver guard
-``spark.graft.propertyClosure.driverMaxBytes`` (default 256 MB).
+``spark.graft.propertyClosure.driverMaxBytes`` (default 256 MB), and
+two keys of the delta entailment (operators/delta_entail.py):
+
+    spark.graft.deltaEntail.driverThreshold   (default 100k) saved-state
+        rows (rtc, links, pruned statements, each) up to which a delta
+        re-saturates on the driver; 0 forces the distributed delta path
+    spark.graft.deltaEntail.coneKeyCap        (default 2M) cone keys up
+        to which the distributed delta path broadcasts its cone scan
 """
 
 from __future__ import annotations

@@ -682,22 +682,37 @@ def property_schema(pruned: DataFrame) -> tuple[dict[str, set[str]], set[str], l
             .select("subject", "predicate", "object")
             .collect()
         )
-    sub_rows = [r for r in schema_rows if r["predicate"] == "rdfs:subPropertyOf"]
-    trans = {r["subject"] for r in schema_rows if r["predicate"] == "rdf:type"}
-    chain_heads = [r for r in schema_rows if r["predicate"] == "owl:propertyChainAxiom"]
-    firsts = {
-        r["subject"]: r["object"] for r in schema_rows if r["predicate"] == "rdf:first"
+    return _schema_from_rows(schema_rows)
+
+
+def _schema_from_rows(
+    rows,
+) -> tuple[dict[str, set[str]], set[str], list[tuple[str, str, str]]]:
+    """Driver-side core of property_schema over (subject, predicate,
+    object) rows: reads the subPropertyOf / TransitiveProperty / chain
+    axioms and the rdf-list cells the chain heads point at, ignores
+    every other row (so a caller holding the whole pruned corpus on the
+    driver may pass it as is)."""
+    sub_rows = [(s, o) for s, p, o in rows if p == "rdfs:subPropertyOf"]
+    trans = {
+        s for s, p, o in rows
+        if p == "rdf:type" and o == "owl:TransitiveProperty"
     }
-    rests = {
-        r["subject"]: r["object"] for r in schema_rows if r["predicate"] == "rdf:rest"
-    }
+    chain_heads = [(s, o) for s, p, o in rows if p == "owl:propertyChainAxiom"]
+    firsts = {s: o for s, p, o in rows if p == "rdf:first"}
+    rests = {s: o for s, p, o in rows if p == "rdf:rest"}
     chains: list[tuple[str, str, str]] = []
-    for r in chain_heads:
-        sup, bn = r["subject"], r["object"]
+    for sup, bn in chain_heads:
         members: list[str] = []
         while bn and bn != "rdf:nil" and bn in firsts:
             members.append(firsts[bn])
             bn = rests.get(bn)
+            if len(members) > 64:  # same refusal as the spine walk
+                raise RuntimeError(
+                    "property_schema: rdf-list chain spine exceeds 64 cells "
+                    "(pathological propertyChainAxiom list) — refusing to "
+                    "truncate"
+                )
         if len(members) < 2:
             continue
         # binary decomposition: p1 o p2 o p3 ⊑ r becomes
@@ -709,8 +724,8 @@ def property_schema(pruned: DataFrame) -> tuple[dict[str, set[str]], set[str], l
             acc = target
     # reflexive-transitive subPropertyOf closure (tiny graph -> driver BFS)
     direct: dict[str, set[str]] = {}
-    for r in sub_rows:
-        direct.setdefault(r["subject"], set()).add(r["object"])
+    for s, o in sub_rows:
+        direct.setdefault(s, set()).add(o)
     props = set(direct) | {q for qs in direct.values() for q in qs} | trans
     props |= {p for c in chains for p in c}
     hierarchy: dict[str, set[str]] = {}
@@ -2113,6 +2128,23 @@ def restriction_nodes(pruned: DataFrame) -> DataFrame:
     return on_prop.join(some_from, "a")
 
 
+def _domain_expansion(
+    dom_rows, restr_props: set, hierarchy: dict[str, set[str]]
+) -> list[tuple[str, str]]:
+    """(prop, dom) for every restriction property `prop` and every
+    rdfs:domain `dom` of a q ∈ supers*(prop) — the driver-side core of
+    the domain rule, over (prop, dom) rows."""
+    doms_of: dict[str, list[str]] = {}
+    for prop, dom in dom_rows:
+        doms_of.setdefault(prop, []).append(dom)
+    return sorted({
+        (p, d)
+        for p in restr_props
+        for q in (hierarchy.get(p, set()) | {p})
+        for d in doms_of.get(q, ())
+    })
+
+
 def _domain_edges(
     pruned: DataFrame, hierarchy: dict[str, set[str]], restr: DataFrame
 ) -> DataFrame:
@@ -2125,16 +2157,8 @@ def _domain_edges(
     dom_rows = pruned.where(F.col("predicate") == "rdfs:domain").select(
         F.col("subject").alias("prop"), F.col("object").alias("dom")
     ).collect()
-    doms_of: dict[str, list[str]] = {}
-    for row in dom_rows:
-        doms_of.setdefault(row["prop"], []).append(row["dom"])
     restr_props = {row["prop"] for row in restr.select("prop").distinct().collect()}
-    dom_exp = sorted({
-        (p, d)
-        for p in restr_props
-        for q in (hierarchy.get(p, set()) | {p})
-        for d in doms_of.get(q, ())
-    })
+    dom_exp = _domain_expansion(dom_rows, restr_props, hierarchy)
     if dom_exp:
         dom_exp_df = F.broadcast(
             pruned.sparkSession.createDataFrame(dom_exp, ["prop", "dom"])
@@ -2362,3 +2386,156 @@ def entail(
         )
         .dropDuplicates()
     )
+
+
+def _local_expression_edges(rows) -> tuple[set, set]:
+    """expression_edges over driver (subject, predicate, object) rows:
+    (expression edges, union membership) as sets."""
+    firsts: dict = {}
+    rests: dict = {}
+    heads = []
+    for s, p, o in rows:
+        if p == "rdf:first":
+            firsts.setdefault(s, set()).add(o)
+        elif p == "rdf:rest":
+            rests.setdefault(s, set()).add(o)
+        elif p in ("owl:intersectionOf", "owl:unionOf"):
+            heads.append((s, p, o))
+
+    def list_members(head) -> set:
+        # rdf_list_members: the head's own cell (when it is one) plus
+        # every cell strictly reachable from it over rdf:rest
+        seen: set = set()
+        stack = list(rests.get(head, ()))
+        while stack:
+            x = stack.pop()
+            if x not in seen:
+                seen.add(x)
+                stack.extend(rests.get(x, ()))
+        seen.discard(head)
+        if head in firsts:
+            seen.add(head)
+        return {m for cell in seen for m in firsts.get(cell, ())}
+
+    inter, union_membership = set(), set()
+    for bn, p, h in heads:
+        pairs = {(bn, m) for m in list_members(h)}
+        if p == "owl:unionOf":
+            union_membership |= pairs
+        else:
+            inter |= pairs
+    return inter | {(m, bn) for bn, m in union_membership}, union_membership
+
+
+def _local_entail(rows, class_nodes) -> dict | None:
+    """entail() on the driver, over collected (subject, predicate,
+    object) rows that are already pruned and interned (the
+    canonicalize_expressions output). The rules run through entail()'s
+    own driver cores (_schema_from_rows, _domain_expansion,
+    _local_union_elimination, _local_property_saturation); only the
+    joins entail() runs as DataFrames are written here over Python
+    sets, and a null never matches a join key, as in Spark.
+
+    class_nodes: the class ids. Returns the saturated state under
+    entail(state_capture=...)'s keys as Python sets — sub, rtc, restr,
+    links (chain-step rows kept), type_asserts, union_membership,
+    schema — plus "edges", entail()'s output. Returns None when the
+    subclass closure exceeds _local_union_elimination's pair cap; the
+    caller then runs its distributed path."""
+    by_p: dict = {}
+    for s, p, o in rows:
+        by_p.setdefault(p, []).append((s, o))
+    hierarchy, transitive, chains = _schema_from_rows(rows)
+    classes = set(class_nodes)
+
+    expr, union_membership = _local_expression_edges(rows)
+    union_members: dict = {}
+    for bn, m in union_membership:
+        union_members.setdefault(bn, set()).add(m)
+    # restriction_nodes
+    on_prop: dict = {}
+    for a, prop in by_p.get("owl:onProperty", ()):
+        on_prop.setdefault(a, []).append(prop)
+    restr = {
+        (a, prop, c)
+        for a, c in by_p.get("owl:someValuesFrom", ())
+        if a is not None
+        for prop in on_prop.get(a, ())
+    }
+    # _domain_edges
+    doms: dict = {}
+    for prop, dom in _domain_expansion(
+        by_p.get("rdfs:domain", ()), {r[1] for r in restr}, hierarchy
+    ):
+        doms.setdefault(prop, []).append(dom)
+    sub = {(s, o) for s, o in by_p.get("rdfs:subClassOf", ()) if o is not None}
+    sub |= expr
+    sub |= {(a, d) for a, prop, _c in restr for d in doms.get(prop, ())}
+    sub, tc = _local_union_elimination(sub, union_members, 5)
+    if sub is None:
+        return None
+    rtc = set(tc)
+    rtc.update((n, n) for n in classes)
+    for a, _prop, c in restr:
+        rtc.update(((a, a), (c, c)))
+    ups: dict = {}
+    downs: dict = {}
+    for s, o in rtc:
+        ups.setdefault(s, set()).add(o)
+        downs.setdefault(o, set()).add(s)
+    # base existential links x ⊑ a, a ⊑ ∃p.c, c ⊑ d ⟹ (x, p, d), with
+    # the holders deduped per (p, c) between the two closure joins
+    holders: dict = {}
+    for a, prop, c in restr:
+        if c is not None and a in downs:
+            holders.setdefault((prop, c), set()).update(downs[a])
+    base = {
+        (x, prop, d)
+        for (prop, c), xs in holders.items()
+        for d in ups.get(c, ())
+        for x in xs
+    }
+    links = _local_property_saturation(
+        base, hierarchy, transitive, chains, keep_steps=True
+    )
+    type_asserts = {
+        (s, o)
+        for s, o in by_p.get("rdf:type", ())
+        if s is not None and not s.startswith("_:")
+        and o is not None and o in classes
+    }
+
+    def shown(s, o) -> bool:
+        return (
+            s is not None and o is not None
+            and not s.startswith("_:") and not o.startswith("_:")
+            and s not in ("owl:Nothing", "owl:Thing")
+            and o not in ("owl:Nothing", "owl:Thing")
+        )
+
+    edges = {
+        (s, "rdfs:subClassOf", o)
+        for s, o in rtc
+        if shown(s, o) and (s != o or s in classes)
+    }
+    edges |= {
+        (s, p, o)
+        for s, p, o in links
+        if shown(s, o) and not (p or "").startswith("_:step_")
+    }
+    edges |= {
+        (i, "rdf:type", d)
+        for i, c in type_asserts
+        for d in ups[c]
+        if shown(i, d)
+    }
+    return {
+        "sub": sub,
+        "rtc": rtc,
+        "restr": restr,
+        "links": links,
+        "type_asserts": type_asserts,
+        "union_membership": union_membership,
+        "schema": (hierarchy, transitive, chains),
+        "edges": edges,
+    }

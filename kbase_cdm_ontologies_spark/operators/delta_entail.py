@@ -38,6 +38,19 @@ one NEW fact are (re)derived. Concretely, for a statement delta Δ:
   5. Individual typing and the output projection run the same
      delta-against-full expansion.
 
+Regimes. The steps above are the distributed path: each is a few Spark
+jobs over cone-sized frames, so a dictionary-scale update pays job
+latency, not work. When the saved state fits on the driver — rtc,
+links and pruned each at most spark.graft.deltaEntail.driverThreshold
+rows (default 100k), read by limit-capped probes — entail_delta
+instead collects the saved pruned rows with the delta in one Arrow
+collect, re-saturates old ∪ new with closure._local_entail (entail()'s
+rules through the same driver cores) and rebuilds every state frame
+from the result, with the distributed path's column names and types.
+A state over the threshold, or a closure over the driver pair cap,
+runs the distributed path; either regime's state feeds the next delta
+and save()/load().
+
 The contract mirrors "add an ontology source": delta statements are
 complete axioms and bnode-disjoint from the saved corpus (merge.py's
 per-source bnode namespacing guarantees this; structurally identical
@@ -59,6 +72,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.stats_cut import cut as _statscut
 from .closure import (
@@ -67,7 +81,8 @@ from .closure import (
     _conf_threshold,
     _domain_edges,
     _generic_property_fixpoint,
-    _local_property_saturation,
+    _local_entail,
+    _local_expression_edges,
     _seminaive_closure,
     canonicalize_expressions,
     drop_non_el_axioms,
@@ -80,6 +95,10 @@ from .closure import (
 )
 
 _SPO = ["subject", "predicate", "object"]
+_UNION_GROWTH = (
+    "entail_delta: delta adds members to an existing union expression "
+    "node — bnode-disjointness contract violated"
+)
 
 
 def _schema_slice(pruned: DataFrame) -> DataFrame:
@@ -233,17 +252,104 @@ def _anti_vs_big(left: DataFrame, right: DataFrame, cols: list, key: str):
     return left.join(right.join(keys, key, "left_semi"), cols, "left_anti")
 
 
+def _frame(spark, rows, names) -> DataFrame:
+    """Driver-computed rows as a frame of nullable string columns
+    `names`, sorted (nulls first) so re-runs write identical files."""
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return _arrow_df(
+        spark,
+        sorted(rows, key=lambda r: tuple((x is not None, x or "") for x in r)),
+        schema,
+    )
+
+
+def _driver_delta(
+    state: EntailState,
+    pruned_delta: DataFrame,
+    delta_class_nodes: DataFrame,
+    max_rows: int,
+) -> tuple[DataFrame, EntailState] | None:
+    """entail_delta's driver regime: re-saturate old ∪ new on the
+    driver with closure._local_entail — one collect and one local
+    saturation instead of a Spark job per fixpoint step — and rebuild
+    every state frame from the result. Returns None, and the caller
+    runs the distributed path, when a saved rtc/links/pruned frame
+    holds more than max_rows rows or the subclass closure trips the
+    local pair cap."""
+    spark = pruned_delta.sparkSession
+    cap = max_rows + 1
+    # limit-capped probes: a corpus-sized state must not pay a full
+    # count just to learn that it is over the threshold
+    for saved in (state.rtc, state.links):
+        if saved.select(F.lit(0)).limit(cap).toArrow().num_rows > max_rows:
+            return None
+    # ONE collect: saved rows (capped), delta rows and both class-node
+    # sets, told apart by the tag k
+    none = F.lit(None).cast("string")
+
+    def tagged(df, k):
+        return df.select(
+            F.lit(k).alias("k"), F.col("id").alias("subject"),
+            none.alias("predicate"), none.alias("object"),
+        )
+
+    got = (
+        state.pruned.limit(cap).select(F.lit(0).alias("k"), *_SPO)
+        .unionByName(pruned_delta.select(F.lit(1).alias("k"), *_SPO))
+        .unionByName(tagged(state.class_nodes, 2))
+        .unionByName(tagged(delta_class_nodes, 3))
+        .toArrow()
+        .to_pydict()
+    )
+    parts: tuple[list, ...] = ([], [], [], [])
+    for k, s, p, o in zip(got["k"], got["subject"], got["predicate"], got["object"]):
+        parts[k].append((s, p, o))
+    if len(parts[0]) > max_rows:
+        return None
+    rows = set(parts[0]) | set(parts[1])
+    classes = {s for s, _p, _o in parts[2] + parts[3]}
+    sat = _local_entail(rows, classes)
+    if sat is None:
+        return None
+    # the saved membership is a function of the saved rows
+    _, old_mem = _local_expression_edges(parts[0])
+    old_bns = {bn for bn, _m in old_mem}
+    if any(
+        bn in old_bns and (bn, m) not in old_mem
+        for bn, m in sat["union_membership"]
+    ):
+        raise ValueError(_UNION_GROWTH)
+    pruned = _frame(spark, rows, _SPO)
+    edges = _frame(spark, sat["edges"], _SPO)
+    return edges, EntailState(
+        pruned=pruned,
+        schema_rows=_schema_slice(pruned),
+        sub=_frame(spark, sat["sub"], ["s", "o"]),
+        rtc=_frame(spark, sat["rtc"], ["s", "o"]),
+        restr=_frame(spark, sat["restr"], ["a", "prop", "c"]),
+        links=_frame(spark, sat["links"], ["s", "p", "o"]),
+        type_asserts=_frame(spark, sat["type_asserts"], ["ind", "cls"]),
+        edges=edges,
+        class_nodes=_frame(spark, [(c,) for c in classes], ["id"]),
+        union_membership=_frame(
+            spark, sat["union_membership"], ["bn", "member"]
+        ),
+        schema=sat["schema"],
+    )
+
+
 def entail_delta(
     state: EntailState,
     delta_statements: DataFrame,
     delta_class_nodes: DataFrame | None = None,
-    property_local_threshold: int | None = None,
     max_outer_rounds: int = 10,
 ) -> tuple[DataFrame, EntailState]:
     """Extend a saturated entailment with new statements — returns the
     full updated edge set (== entail() on the union, asserted by
-    tests/test_delta_entail.py) and the new state, touching only the
-    delta's derivation cone.
+    tests/test_delta_entail.py) and the new state. A state that fits
+    on the driver is re-saturated there in one pass; a larger one is
+    extended on the distributed path, touching only the delta's
+    derivation cone (module docstring, Regimes).
 
     delta_statements must be complete axioms, bnode-disjoint from the
     saved corpus (the add-a-source contract; see module docstring).
@@ -275,14 +381,21 @@ def entail_delta(
             .distinct()
         )
 
-    pruned_delta = _statscut(
+    pruned_delta = (
         canonicalize_expressions(
             prune_for_closure(drop_non_el_axioms(delta_statements))
         )
         .select(*_SPO)
-        .dropDuplicates(),
-        eager=True,
+        .dropDuplicates()
     )
+    driver_max = _conf_threshold(
+        spark, "spark.graft.deltaEntail.driverThreshold", 100_000
+    )
+    if driver_max:
+        out = _driver_delta(state, pruned_delta, delta_class_nodes, driver_max)
+        if out is not None:
+            return out
+    pruned_delta = _statscut(pruned_delta, eager=True)
     pruned_delta = _statscut(
         _anti_vs_big(pruned_delta, state.pruned, _SPO, "subject"),
         eager=True,
@@ -315,10 +428,7 @@ def entail_delta(
         .count()
     )
     if grown:
-        raise ValueError(
-            "entail_delta: delta adds members to an existing union "
-            "expression node — bnode-disjointness contract violated"
-        )
+        raise ValueError(_UNION_GROWTH)
     union_membership = _statscut(
         state.union_membership.unionByName(union_mem_d).dropDuplicates()
     )
@@ -636,9 +746,10 @@ def entail_delta(
         links_new = state.links
         links_d = seed if seed is not None else state.links.limit(0)
     else:
-        links_new, links_d = _warm_property_closure(
-            spark, state.links, seed, hierarchy, transitive, chains,
-            property_local_threshold,
+        links_new, links_d = _generic_property_fixpoint(
+            spark, state.links, transitive, chains,
+            [(p, q) for p, qs in hierarchy.items() for q in qs if q != p],
+            None, None, max_rounds=10, seed_delta=seed, return_new=True,
         )
         links_d = _statscut(links_d, eager=True)
 
@@ -770,57 +881,3 @@ def entail_delta(
     )
     return edges_new, new_state
 
-
-def _warm_property_closure(
-    spark,
-    links: DataFrame,
-    seed: DataFrame,
-    hierarchy: dict,
-    transitive: set,
-    chains: list,
-    local_threshold: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Warm-start property saturation: `links` is closed under the OLD
-    schema, `seed` is the frontier (new base links + old links fired
-    once through the schema delta). Hybrid like property_closure — a
-    dictionary-scale union re-saturates driver-side (exact same rule
-    set, already cheaper than the subclass closure it skips); larger
-    inputs run the fused distributed fixpoint seeded with the delta.
-    Returns (links_new, links_delta) — the delta comes from the
-    fixpoint's own frontier bookkeeping, never a closure-sized
-    anti-join."""
-    if local_threshold is None:
-        # deliberately FAR below propertyClosure.localThreshold (2M):
-        # the driver path re-saturates the whole link set from scratch,
-        # which wastes the warm start — it only wins on dictionary-
-        # scale corpora where scheduler latency dominates. The
-        # distributed seeded fixpoint does cone-proportional work.
-        local_threshold = _conf_threshold(
-            links, "spark.graft.deltaEntail.driverThreshold", 100_000
-        )
-    hier_rows = [(p, q) for p, qs in hierarchy.items() for q in qs if q != p]
-    if local_threshold:
-        u = links.unionByName(seed)
-        # limit-capped probe: a corpus-scale link set must not pay a
-        # full count just to learn it is over the driver threshold
-        if u.limit(local_threshold + 1).count() <= local_threshold:
-            pdf_old = links.toPandas()
-            rows_old = set(
-                zip(pdf_old["s"].tolist(), pdf_old["p"].tolist(), pdf_old["o"].tolist())
-            )
-            pdf_seed = seed.toPandas()
-            rows_in = rows_old | set(
-                zip(pdf_seed["s"].tolist(), pdf_seed["p"].tolist(), pdf_seed["o"].tolist())
-            )
-            closed = _local_property_saturation(
-                rows_in, hierarchy, transitive, chains, None,
-                keep_steps=True,
-            )
-            return (
-                _arrow_df(spark, sorted(closed), u.schema),
-                _arrow_df(spark, sorted(closed - rows_old), u.schema),
-            )
-    return _generic_property_fixpoint(
-        spark, links, transitive, chains, hier_rows, None, None,
-        max_rounds=10, seed_delta=seed, return_new=True,
-    )

@@ -664,10 +664,61 @@ def test_entail_degenerate_inputs(spark):
     ]
 
 
+def _union_fixture_statements(rnd, n, edges, mem):
+    """The union/subclass fixture as statements, plus restrictions, a
+    transitive property, a sub-property, a chain, a domain, an
+    intersection, individuals and null-object rows."""
+    rows = [(f"c{i}", "rdf:type", "owl:Class") for i in range(n)]
+    rows += [(s, "rdfs:subClassOf", o) for s, o in sorted(edges)]
+
+    def rdf_list(tag, items):
+        cells = [f"_:{tag}_{i}" for i in range(len(items))]
+        for i, item in enumerate(items):
+            nxt = cells[i + 1] if i + 1 < len(items) else "rdf:nil"
+            rows.extend([(cells[i], "rdf:first", item), (cells[i], "rdf:rest", nxt)])
+        return cells[0]
+
+    by_bn: dict = {}
+    for bn, m in sorted(set(mem)):
+        by_bn.setdefault(bn, []).append(m)
+    for bn, ms in by_bn.items():
+        rows.append((bn, "owl:unionOf", rdf_list(f"l{bn}", ms)))
+    # every member of u0 under "top": elimination must derive u0 ⊑ top
+    rows += [(m, "rdfs:subClassOf", "top") for m in by_bn["u0"]]
+    for k in range(6):
+        a, c = rnd.sample(range(n), 2)
+        rows += [
+            (f"c{a}", "rdfs:subClassOf", f"_:r{k}"),
+            (f"_:r{k}", "owl:onProperty", f"p{k % 3}"),
+            (f"_:r{k}", "owl:someValuesFrom", f"c{c}"),
+        ]
+    rows += [
+        ("p0", "rdf:type", "owl:TransitiveProperty"),
+        ("p1", "rdfs:subPropertyOf", "p0"),
+        ("p2", "owl:propertyChainAxiom", rdf_list("ch", ["p2", "p1"])),
+        ("p2", "rdfs:domain", f"c{rnd.randrange(n)}"),
+        ("_:i0", "owl:intersectionOf", rdf_list("il", ["c1", "c2"])),
+        ("c3", "rdfs:subClassOf", "_:i0"),
+        ("i0", "rdf:type", f"c{rnd.randrange(n)}"),
+        ("i1", "rdf:type", "u0"),
+        ("c4", "rdfs:subClassOf", None),
+        ("i2", "rdf:type", None),
+    ]
+    return rows
+
+
 def test_union_elimination_regimes_agree(spark):
     # driver fixpoint vs forced-distributed loop on randomized
-    # union/subclass fixtures — identical augmented edges AND closure
+    # union/subclass fixtures — identical augmented edges AND closure;
+    # the same fixtures as statements through entail() and the driver
+    # twin _local_entail — identical edges and saturated state
     import random
+
+    from kbase_cdm_ontologies_spark.operators.closure import (
+        _local_entail,
+        canonicalize_expressions,
+        drop_non_el_axioms,
+    )
 
     rnd = random.Random(17)
     for trial in range(3):
@@ -684,3 +735,29 @@ def test_union_elimination_regimes_agree(spark):
         x_sub, x_tc = union_eliminated_subclass(sub, um, local_threshold=0)
         assert set(map(tuple, d_sub.collect())) == set(map(tuple, x_sub.collect())), trial
         assert set(map(tuple, d_tc.collect())) == set(map(tuple, x_tc.collect())), trial
+
+        stmts = spark.createDataFrame(
+            _union_fixture_statements(rnd, n, edges, mem),
+            "subject string, predicate string, object string",
+        )
+        classes = [f"c{i}" for i in range(n)] + [f"u{u}" for u in range(4)] + ["top"]
+        cap: dict = {}
+        want = set(map(tuple, entail(
+            stmts, spark.createDataFrame([(c,) for c in classes], ["id"]),
+            state_capture=cap,
+        ).collect()))
+        pruned = canonicalize_expressions(
+            prune_for_closure(drop_non_el_axioms(stmts))
+        ).select("subject", "predicate", "object")
+        local = _local_entail(list(map(tuple, pruned.collect())), classes)
+        assert local["edges"] == want, (trial, sorted(local["edges"] ^ want)[:6])
+        assert ("u0", "rdfs:subClassOf", "top") in want
+        for key, cols in (
+            ("sub", ["s", "o"]), ("rtc", ["s", "o"]),
+            ("restr", ["a", "prop", "c"]), ("links", ["s", "p", "o"]),
+            ("type_asserts", ["ind", "cls"]),
+            ("union_membership", ["bn", "member"]),
+        ):
+            got = set(map(tuple, cap[key].select(*cols).collect()))
+            assert local[key] == got, (trial, key, sorted(local[key] ^ got)[:6])
+        assert local["schema"] == cap["schema"], trial

@@ -10,11 +10,14 @@ story is checksum skip-if-unchanged, version_tracker.py:111-138), so
 the oracle here is the engine's own full recompute, which is itself
 golden-parity-verified (scripts/reference_parity.py P/R 1.0)."""
 
+import contextlib
+import itertools
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from kbase_cdm_ontologies_spark.operators import closure
 from kbase_cdm_ontologies_spark.operators.closure import entail
 from kbase_cdm_ontologies_spark.operators.delta_entail import (
     EntailState,
@@ -23,6 +26,31 @@ from kbase_cdm_ontologies_spark.operators.delta_entail import (
 )
 
 COLS = ["subject", "predicate", "object"]
+
+
+# entail_delta's two regimes, by spark.graft.deltaEntail.driverThreshold:
+# the default (driver re-saturation at fixture size) and 0 (the
+# distributed delta path)
+DRIVER_KEY = "spark.graft.deltaEntail.driverThreshold"
+REGIMES = (None, "0")
+
+
+@contextlib.contextmanager
+def _confs(spark, settings):
+    """Set session conf keys (None unsets) and restore them on exit."""
+    def apply(kv):
+        for k, v in kv.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    old = {k: spark.conf.get(k, None) for k in settings}
+    apply(settings)
+    try:
+        yield
+    finally:
+        apply(old)
 
 
 def _df(spark, rows):
@@ -45,20 +73,24 @@ def _class_nodes(spark, stmts):
     )
 
 
-def _check_delta_matches_full(spark, base_rows, delta_rows):
-    """entail_delta(state(base), delta) == entail(base ∪ delta)."""
+def _check_delta_matches_full(spark, base_rows, delta_rows, regimes=REGIMES):
+    """entail_delta(state(base), delta) == entail(base ∪ delta), in
+    every regime of `regimes`."""
     base = _df(spark, base_rows)
     delta = _df(spark, delta_rows)
     full = _df(spark, base_rows + delta_rows)
     want = _edges(entail(full, _class_nodes(spark, full)))
 
     _, state = entail_with_state(base, _class_nodes(spark, base))
-    got_df, new_state = entail_delta(state, delta)
-    got = _edges(got_df)
-    assert got == want, (
-        f"missing={sorted(want - got)[:8]} extra={sorted(got - want)[:8]}"
-    )
-    return new_state, want
+    for regime in regimes:
+        with _confs(spark, {DRIVER_KEY: regime}):
+            got_df, _ = entail_delta(state, delta)
+            got = _edges(got_df)
+        assert got == want, (
+            f"regime={regime} missing={sorted(want - got)[:8]} "
+            f"extra={sorted(got - want)[:8]}"
+        )
+    return want
 
 
 # ------------------------------------------------------------ fixtures
@@ -164,7 +196,7 @@ def test_delta_schema_growth(spark):
         ("_:dcl2", "rdf:first", "P:q"),
         ("_:dcl2", "rdf:rest", "rdf:nil"),
     ]
-    _, want = _check_delta_matches_full(spark, base, delta)
+    want = _check_delta_matches_full(spark, base, delta)
     assert ("C:a", "P:p", "C:c") in want  # new transitivity fired
     assert ("C:a", "P:r", "C:b") in want  # new lift fired
     assert ("C:b", "P:s", "C:d") in want  # new chain fired
@@ -199,7 +231,7 @@ def test_delta_union_elimination_incremental(spark):
         ("_:nl3", "rdf:rest", "rdf:nil"),
         ("U:h2", "rdfs:subClassOf", "_:nb"),
     ]
-    _, want = _check_delta_matches_full(spark, base, delta)
+    want = _check_delta_matches_full(spark, base, delta)
     assert ("U:h", "rdfs:subClassOf", "U:top") in want
 
 
@@ -208,13 +240,18 @@ def test_delta_noop_and_duplicates(spark):
     base = _base_fixture()
     bdf = _df(spark, base)
     edges, state = entail_with_state(bdf, _class_nodes(spark, bdf))
-    got_df, _ = entail_delta(state, _df(spark, base[:10]))
-    assert _edges(got_df) == _edges(edges)
+    want = _edges(edges)
+    for regime in REGIMES:
+        with _confs(spark, {DRIVER_KEY: regime}):
+            got_df, _ = entail_delta(state, _df(spark, base[:10]))
+            assert _edges(got_df) == want, regime
 
 
 def test_delta_applied_twice(spark):
     """Two successive deltas == one full recompute of all three sets
-    (state threads through)."""
+    (state threads through), for every pair of regimes — a state the
+    driver regime rebuilt must carry a distributed delta, and the
+    reverse."""
     base = _base_fixture()
     d1 = [
         ("N:1", "rdf:type", "owl:Class"),
@@ -228,30 +265,49 @@ def test_delta_applied_twice(spark):
     full = _df(spark, base + d1 + d2)
     want = _edges(entail(full, _class_nodes(spark, full)))
     bdf = _df(spark, base)
-    _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
-    _, state = entail_delta(state, _df(spark, d1))
-    got_df, _ = entail_delta(state, _df(spark, d2))
-    assert _edges(got_df) == want
+    _, state0 = entail_with_state(bdf, _class_nodes(spark, bdf))
+    for r1, r2 in itertools.product(REGIMES, repeat=2):
+        with _confs(spark, {DRIVER_KEY: r1}):
+            _, state = entail_delta(state0, _df(spark, d1))
+        with _confs(spark, {DRIVER_KEY: r2}):
+            got_df, _ = entail_delta(state, _df(spark, d2))
+            assert _edges(got_df) == want, (r1, r2)
 
 
 def test_state_save_load_roundtrip(spark, tmp_path):
     """Cross-session resume: persist the state, reload, apply a delta —
     identical to the in-memory path (the graph-stage extension of the
-    checkpoint/resume contract)."""
+    checkpoint/resume contract). The state each regime returns is saved
+    and reloaded too, and carries a second delta in the other regime."""
     base = _base_fixture()
     delta = [
         ("N:9", "rdf:type", "owl:Class"),
         ("N:9", "rdfs:subClassOf", "A:3"),
         ("I:w", "rdf:type", "N:9"),
     ]
+    delta2 = [
+        ("N:10", "rdf:type", "owl:Class"),
+        ("N:10", "rdfs:subClassOf", "N:9"),
+    ]
     full = _df(spark, base + delta)
     want = _edges(entail(full, _class_nodes(spark, full)))
+    full2 = _df(spark, base + delta + delta2)
+    want2 = _edges(entail(full2, _class_nodes(spark, full2)))
     bdf = _df(spark, base)
     _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
     state.save(str(tmp_path / "st"))
     loaded = EntailState.load(spark, str(tmp_path / "st"))
-    got_df, _ = entail_delta(loaded, _df(spark, delta))
-    assert _edges(got_df) == want
+    for regime, other in zip(REGIMES, reversed(REGIMES)):
+        with _confs(spark, {DRIVER_KEY: regime}):
+            got_df, new_state = entail_delta(loaded, _df(spark, delta))
+            assert _edges(got_df) == want, regime
+        path = str(tmp_path / f"st_{regime}")
+        new_state.save(path)
+        with _confs(spark, {DRIVER_KEY: other}):
+            got_df, _ = entail_delta(
+                EntailState.load(spark, path), _df(spark, delta2)
+            )
+            assert _edges(got_df) == want2, (regime, other)
 
 
 def test_delta_rejects_union_membership_growth(spark):
@@ -275,8 +331,65 @@ def test_delta_rejects_union_membership_growth(spark):
         ("_:xl1", "rdf:first", "U:m2"),
         ("_:xl1", "rdf:rest", "rdf:nil"),
     ]
-    with pytest.raises(ValueError, match="union"):
-        entail_delta(state, _df(spark, bad))
+    for regime in REGIMES:
+        with _confs(spark, {DRIVER_KEY: regime}):
+            with pytest.raises(ValueError, match="union"):
+                entail_delta(state, _df(spark, bad))
+
+
+def test_delta_driver_regime_job_budget(spark):
+    """The driver regime is a handful of Spark jobs: the delta's
+    prune+intern collects, the gate probes, one collect and the
+    caller's count. A per-step job added to it later fails here."""
+    base = _base_fixture()
+    delta = [
+        ("N:1", "rdf:type", "owl:Class"),
+        ("N:1", "rdfs:subClassOf", "A:5"),
+        ("N:1", "rdfs:subClassOf", "_:nd1"),
+        ("_:nd1", "owl:onProperty", "P:part_of"),
+        ("_:nd1", "owl:someValuesFrom", "A:2"),
+        ("I:y1", "rdf:type", "N:1"),
+    ]
+    bdf = _df(spark, base)
+    _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
+    ddf = _df(spark, delta)
+    sc = spark.sparkContext
+    with _confs(spark, {DRIVER_KEY: None}):
+        sc.setJobGroup("delta_job_budget", "entail_delta driver regime")
+        try:
+            got_df, _ = entail_delta(state, ddf)
+            got_df.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("delta_job_budget")
+    assert 0 < len(jobs) <= 20, len(jobs)
+
+
+def test_delta_driver_pair_cap_falls_back(spark, monkeypatch):
+    """A closure over _local_union_elimination's pair cap makes the
+    driver regime hand over to the distributed path, which must give
+    the full answer (never a truncated one)."""
+    base = _base_fixture()
+    delta = [
+        ("N:1", "rdf:type", "owl:Class"),
+        ("N:1", "rdfs:subClassOf", "A:5"),
+        ("I:y1", "rdf:type", "N:1"),
+    ]
+    full = _df(spark, base + delta)
+    want = _edges(entail(full, _class_nodes(spark, full)))
+    bdf = _df(spark, base)
+    _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
+    calls = []
+
+    def over_cap(*args):
+        calls.append(args)
+        return None, None
+
+    monkeypatch.setattr(closure, "_local_union_elimination", over_cap)
+    with _confs(spark, {DRIVER_KEY: None}):
+        got_df, _ = entail_delta(state, _df(spark, delta))
+        assert _edges(got_df) == want
+    assert calls  # the driver regime ran and tripped the cap
 
 
 # ------------------------------------------------------- randomized
@@ -344,7 +457,11 @@ def test_delta_fuzz_vs_full(spark, seed):
     delta_units = _random_units(rng, "d", classes, props, 8)
     base_rows = decls + [r for u in base_units for r in u]
     delta_rows = [r for u in delta_units for r in u]
-    _check_delta_matches_full(spark, base_rows, delta_rows)
+    # both regimes on two seeds; the other seeds run the default only
+    _check_delta_matches_full(
+        spark, base_rows, delta_rows,
+        REGIMES if seed in (3, 17) else REGIMES[:1],
+    )
 
 
 def test_delta_distributed_regime(spark):
@@ -355,14 +472,10 @@ def test_delta_distributed_regime(spark):
         "spark.graft.unionElimination.localThreshold",
         "spark.graft.propertyClosure.localThreshold",
         "spark.graft.keyedTransitiveClosure.localThreshold",
-        # the warm-seeded distributed property fixpoint — the at-scale
-        # regime — only runs when the driver saturation is off too
-        "spark.graft.deltaEntail.driverThreshold",
+        # the distributed delta path only runs with its driver regime off
+        DRIVER_KEY,
     ]
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "0")
-    try:
+    with _confs(spark, dict.fromkeys(keys, "0")):
         rng = random.Random(99)
         classes = [f"C:{i}" for i in range(10)]
         props = [f"P:{i}" for i in range(4)]
@@ -373,13 +486,8 @@ def test_delta_distributed_regime(spark):
             spark,
             decls + [r for u in base_units for r in u],
             [r for u in delta_units for r in u],
+            regimes=("0",),
         )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_delta_distributed_rule_free_schema(spark):
@@ -393,12 +501,9 @@ def test_delta_distributed_rule_free_schema(spark):
         "spark.graft.transitiveClosure.localThreshold",
         "spark.graft.propertyClosure.localThreshold",
         "spark.graft.keyedTransitiveClosure.localThreshold",
-        "spark.graft.deltaEntail.driverThreshold",
+        DRIVER_KEY,
     ]
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "0")
-    try:
+    with _confs(spark, dict.fromkeys(keys, "0")):
         base_rows = [
             *[(f"C:{i}", "rdf:type", "owl:Class") for i in range(4)],
             ("C:1", "rdfs:subClassOf", "C:0"),
@@ -418,13 +523,7 @@ def test_delta_distributed_rule_free_schema(spark):
             ("_:r2", "owl:onProperty", "P:a"),
             ("_:r2", "owl:someValuesFrom", "C:0"),
         ]
-        _check_delta_matches_full(spark, base_rows, delta_rows)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        _check_delta_matches_full(spark, base_rows, delta_rows, ("0",))
 
 
 # ------------------------------------------------ reference corpus
