@@ -36,7 +36,11 @@ def main(argv: list[str] | None = None) -> int:
              "the synthetic ontology fixture (reference drop-in path; "
              "P/R vs the fixture oracle is skipped)",
     )
-    met = sub.add_parser("metrics", help="print per-partition lineage metrics of a run")
+    met = sub.add_parser(
+        "metrics",
+        help="print per-partition lineage metrics of a run (partition_id = "
+             "the write task that wrote the stage's part-NNNNN files)",
+    )
     met.add_argument("--out", required=True, help="checkpoint directory of a prior run")
     met.add_argument("--master", default=None)
     args = ap.parse_args(argv)

@@ -12,13 +12,26 @@ operators can retune the routing without code changes:
 
 plus the byte-level driver guard
 ``spark.graft.propertyClosure.driverMaxBytes`` (default 256 MB), and
-two keys of the delta entailment (operators/delta_entail.py):
+two keys of the entailment regimes (operators/closure.py,
+operators/delta_entail.py):
 
-    spark.graft.deltaEntail.driverThreshold   (default 100k) saved-state
-        rows (rtc, links, pruned statements, each) up to which a delta
-        re-saturates on the driver; 0 forces the distributed delta path
+    spark.graft.deltaEntail.driverThreshold   (default 100k) rows up to
+        which an entailment saturates on the driver in one collect:
+        entail()'s pruned statements and class nodes, and a delta's
+        saved rtc, links and pruned statements (each); 0 turns the
+        driver regime off (entail() runs its hybrid path, entail_delta
+        its distributed delta path)
     spark.graft.deltaEntail.coneKeyCap        (default 2M) cone keys up
         to which the distributed delta path broadcasts its cone scan
+
+A 0 in any of the transitiveClosure, keyedTransitiveClosure,
+unionElimination or propertyClosure localThreshold keys, or
+entail(property_local_threshold=0), also turns entail()'s driver
+regime off, so a caller that forces the distributed fixpoints through
+these confs alone runs them. Both driver regimes saturate property
+links only under property_closure's own guard (propertyClosure
+localThreshold rows and driverMaxBytes); a larger base runs the hybrid
+or distributed path.
 """
 
 from __future__ import annotations

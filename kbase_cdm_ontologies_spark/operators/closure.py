@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import conf_threshold as _conf_threshold
 from ..plans.loop_tuning import ShufflePartitionTuner
@@ -89,6 +90,17 @@ def _arrow_df(spark, rows, schema):
     names = [f.name for f in schema.fields]
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=names), schema=schema
+    )
+
+
+def _frame(spark, rows, names) -> DataFrame:
+    """Driver-computed rows as a frame of nullable string columns
+    `names`, sorted (nulls first) so re-runs write identical files."""
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return _arrow_df(
+        spark,
+        sorted(rows, key=lambda r: tuple((x is not None, x or "") for x in r)),
+        schema,
     )
 
 
@@ -2199,34 +2211,66 @@ def entail(
     fixpoints (pruned statements, augmented sub edges, rtc, restriction
     table, property links WITH chain-step rows, type asserts, schema) —
     the warm-start state operators/delta_entail.py resumes from when
-    new statements are added. Output is unchanged."""
+    new statements are added. Output is unchanged.
+
+    Regimes: unless the caller forced the distributed fixpoints (a 0
+    local threshold), input under spark.graft.deltaEntail.driverThreshold
+    saturates on the driver (_driver_entail). The hybrid path below runs
+    otherwise, over the driver pair cap or base guard, and for
+    state_capture."""
     import os as _os
     import time as _time
 
+    spark = statements.sparkSession
     _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     _t = _time.time()
     _PHASE_WALLS.clear()
 
-    def _phase(name: str) -> None:
+    def _phase(name: str, ns: str = "entail.") -> None:
         nonlocal _t
         now = _time.time()
-        _PHASE_WALLS["entail." + name] = round(now - _t, 3)
+        _PHASE_WALLS[ns + name] = round(now - _t, 3)
         if _dbg:
-            print(f"[entail] {name} {now - _t:.1f}s", flush=True)
+            print(f"[entail] {ns}{name} {now - _t:.1f}s", flush=True)
         _t = now
 
+    # a 0 in any local threshold forces the distributed fixpoints, so
+    # callers that force them through confs alone never run the driver
+    forced = property_local_threshold == 0 or any(
+        _conf_threshold(spark, f"spark.graft.{k}.localThreshold", 1) == 0
+        for k in ("transitiveClosure", "keyedTransitiveClosure",
+                  "unionElimination", "propertyClosure")
+    )
+    driver_max = 0 if forced or state_capture is not None else _conf_threshold(
+        spark, "spark.graft.deltaEntail.driverThreshold", 100_000
+    )
     # materialize the pruned+interned statements ONCE: property_schema,
     # expression_edges, the domain rule, restriction_nodes, and the
     # type-assert path each run several driver collects over this frame,
     # and the canonicalize rewrite (two broadcast joins over statements)
-    # would otherwise re-execute for every one of them
+    # would otherwise re-execute for every one of them. The driver
+    # regime's collect materializes a lazy cut, so an input over its
+    # threshold does not compute the frame a second time
     pruned = _statscut(
         canonicalize_expressions(
             prune_for_closure(drop_non_el_axioms(statements))
         ),
-        eager=True,
+        eager=not driver_max,
     )
-    _phase("prune+non_el+intern")
+    if driver_max:
+        out = _driver_entail(pruned, class_nodes, driver_max, phase=_phase)
+        if out is not None:
+            edges = _frame(spark, out[0]["edges"], _SPO)
+            # the hybrid path's property_closure.* keys: no collect here,
+            # and the saturation is entail.property_closure's step
+            sat_s = _PHASE_WALLS["entail.property_closure"]
+            for k in ("base_materialize", "count+bytes_guard", "collect"):
+                _PHASE_WALLS["property_closure." + k] = 0.0
+            _PHASE_WALLS["property_closure.saturate"] = sat_s
+            _phase("sort+arrow", "property_closure.")
+            return edges
+    else:
+        _phase("prune+non_el+intern")
     # property-level schema first: the domain rule below needs the
     # subPropertyOf hierarchy (dictionary-scale driver work)
     hierarchy, transitive, chains = property_schema(pruned)
@@ -2427,7 +2471,9 @@ def _local_expression_edges(rows) -> tuple[set, set]:
     return inter | {(m, bn) for bn, m in union_membership}, union_membership
 
 
-def _local_entail(rows, class_nodes) -> dict | None:
+def _local_entail(
+    rows, class_nodes, phase=lambda _name: None, max_base=(2_000_000, 256 << 20)
+) -> dict | None:
     """entail() on the driver, over collected (subject, predicate,
     object) rows that are already pruned and interned (the
     canonicalize_expressions output). The rules run through entail()'s
@@ -2439,14 +2485,17 @@ def _local_entail(rows, class_nodes) -> dict | None:
     class_nodes: the class ids. Returns the saturated state under
     entail(state_capture=...)'s keys as Python sets — sub, rtc, restr,
     links (chain-step rows kept), type_asserts, union_membership,
-    schema — plus "edges", entail()'s output. Returns None when the
-    subclass closure exceeds _local_union_elimination's pair cap; the
-    caller then runs its distributed path."""
+    schema — plus "edges", entail()'s output. Returns None, and the
+    caller runs its distributed path, when the subclass closure exceeds
+    _local_union_elimination's pair cap or the base links exceed
+    max_base (rows, bytes). phase(name) is called after each step,
+    under the name of the entail() phase that does its work."""
     by_p: dict = {}
     for s, p, o in rows:
         by_p.setdefault(p, []).append((s, o))
     hierarchy, transitive, chains = _schema_from_rows(rows)
     classes = set(class_nodes)
+    phase("property_schema")
 
     expr, union_membership = _local_expression_edges(rows)
     union_members: dict = {}
@@ -2471,13 +2520,16 @@ def _local_entail(rows, class_nodes) -> dict | None:
     sub = {(s, o) for s, o in by_p.get("rdfs:subClassOf", ()) if o is not None}
     sub |= expr
     sub |= {(a, d) for a, prop, _c in restr for d in doms.get(prop, ())}
+    phase("sub-edges+domain")
     sub, tc = _local_union_elimination(sub, union_members, 5)
     if sub is None:
         return None
+    phase("subclass_tc")
     rtc = set(tc)
     rtc.update((n, n) for n in classes)
     for a, _prop, c in restr:
         rtc.update(((a, a), (c, c)))
+    phase("rtc_materialize")
     ups: dict = {}
     downs: dict = {}
     for s, o in rtc:
@@ -2489,15 +2541,21 @@ def _local_entail(rows, class_nodes) -> dict | None:
     for a, prop, c in restr:
         if c is not None and a in downs:
             holders.setdefault((prop, c), set()).update(downs[a])
-    base = {
-        (x, prop, d)
-        for (prop, c), xs in holders.items()
-        for d in ups.get(c, ())
-        for x in xs
-    }
+    # property_closure's driver guard: a base over max_base (rows,
+    # estimated bytes) runs the caller's distributed path
+    base: set = set()
+    for (prop, c), xs in holders.items():
+        for d in ups.get(c, ()):
+            base.update((x, prop, d) for x in xs)
+        if len(base) > max_base[0]:
+            return None
+    if sum(len(v) for t in base for v in t if v) > max_base[1]:
+        return None
+    phase("pre_property")
     links = _local_property_saturation(
         base, hierarchy, transitive, chains, keep_steps=True
     )
+    phase("property_closure")
     type_asserts = {
         (s, o)
         for s, o in by_p.get("rdf:type", ())
@@ -2539,3 +2597,40 @@ def _local_entail(rows, class_nodes) -> dict | None:
         "schema": (hierarchy, transitive, chains),
         "edges": edges,
     }
+
+
+_SPO = ["subject", "predicate", "object"]
+
+
+def _driver_entail(pruned, class_nodes, max_rows, saved=None, phase=lambda _n: None):
+    """The driver regime of entail() and entail_delta: ONE tagged Arrow
+    collect of the pruned rows and class nodes (with a saved state's
+    `saved` = (pruned, class_nodes), so entail_delta re-saturates
+    old ∪ new), capped at max_rows + 1 rows per part, then _local_entail.
+    Returns (saturated state, rows, class ids, saved rows), or None, and
+    the caller runs its distributed path, when a part holds more than
+    max_rows rows or _local_entail returns None; its base guard is
+    property_closure's (spark.graft.propertyClosure.localThreshold rows,
+    spark.graft.propertyClosure.driverMaxBytes)."""
+    frames = [pruned, class_nodes] + (list(saved) if saved is not None else [])
+    tagged = None
+    for k, df in zip((1, 3, 0, 2), frames):
+        cols = _SPO if k < 2 else [F.col("id").alias("subject")]
+        df = df.select(F.lit(k).alias("k"), *cols)
+        tagged = df if tagged is None else tagged.unionByName(
+            df, allowMissingColumns=True
+        )
+    got = tagged.limit(len(frames) * (max_rows + 1)).toArrow().to_pydict()
+    parts: tuple[list, ...] = ([], [], [], [])
+    for k, s, p, o in zip(got["k"], got["subject"], got["predicate"], got["object"]):
+        parts[k].append((s, p, o))
+    phase("prune+non_el+intern")
+    if max(map(len, parts)) > max_rows:
+        return None
+    rows = set(parts[0]) | set(parts[1])
+    classes = {s for s, _p, _o in parts[2] + parts[3]}
+    sat = _local_entail(rows, classes, phase, (
+        _conf_threshold(pruned, "spark.graft.propertyClosure.localThreshold", 2_000_000),
+        _conf_threshold(pruned, "spark.graft.propertyClosure.driverMaxBytes", 256 << 20),
+    ))
+    return None if sat is None else (sat, rows, classes, parts[0])

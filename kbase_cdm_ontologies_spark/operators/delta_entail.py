@@ -41,15 +41,16 @@ one NEW fact are (re)derived. Concretely, for a statement delta Δ:
 Regimes. The steps above are the distributed path: each is a few Spark
 jobs over cone-sized frames, so a dictionary-scale update pays job
 latency, not work. When the saved state fits on the driver — rtc,
-links and pruned each at most spark.graft.deltaEntail.driverThreshold
-rows (default 100k), read by limit-capped probes — entail_delta
-instead collects the saved pruned rows with the delta in one Arrow
-collect, re-saturates old ∪ new with closure._local_entail (entail()'s
-rules through the same driver cores) and rebuilds every state frame
-from the result, with the distributed path's column names and types.
-A state over the threshold, or a closure over the driver pair cap,
-runs the distributed path; either regime's state feeds the next delta
-and save()/load().
+links, pruned and the delta each at most
+spark.graft.deltaEntail.driverThreshold rows (default 100k), read by
+limit-capped probes — entail_delta instead runs entail()'s driver
+regime, closure._driver_entail, over the saved pruned rows plus the
+delta: one Arrow collect, one re-saturation of old ∪ new with
+closure._local_entail, and every state frame rebuilt from the result
+with the distributed path's column names and types. A state over the
+threshold, or a closure over the driver pair cap or base guard, runs
+the distributed path; either regime's state feeds the next delta and
+save()/load().
 
 The contract mirrors "add an ontology source": delta statements are
 complete axioms and bnode-disjoint from the saved corpus (merge.py's
@@ -72,16 +73,16 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..plans.stats_cut import cut as _statscut
 from .closure import (
-    _arrow_df,
+    _SPO,
     _chain_compose,
     _conf_threshold,
     _domain_edges,
+    _driver_entail,
+    _frame,
     _generic_property_fixpoint,
-    _local_entail,
     _local_expression_edges,
     _seminaive_closure,
     canonicalize_expressions,
@@ -94,7 +95,6 @@ from .closure import (
     transitive_closure,
 )
 
-_SPO = ["subject", "predicate", "object"]
 _UNION_GROWTH = (
     "entail_delta: delta adds members to an existing union expression "
     "node — bnode-disjointness contract violated"
@@ -252,67 +252,32 @@ def _anti_vs_big(left: DataFrame, right: DataFrame, cols: list, key: str):
     return left.join(right.join(keys, key, "left_semi"), cols, "left_anti")
 
 
-def _frame(spark, rows, names) -> DataFrame:
-    """Driver-computed rows as a frame of nullable string columns
-    `names`, sorted (nulls first) so re-runs write identical files."""
-    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-    return _arrow_df(
-        spark,
-        sorted(rows, key=lambda r: tuple((x is not None, x or "") for x in r)),
-        schema,
-    )
-
-
 def _driver_delta(
     state: EntailState,
     pruned_delta: DataFrame,
     delta_class_nodes: DataFrame,
     max_rows: int,
 ) -> tuple[DataFrame, EntailState] | None:
-    """entail_delta's driver regime: re-saturate old ∪ new on the
-    driver with closure._local_entail — one collect and one local
-    saturation instead of a Spark job per fixpoint step — and rebuild
-    every state frame from the result. Returns None, and the caller
-    runs the distributed path, when a saved rtc/links/pruned frame
-    holds more than max_rows rows or the subclass closure trips the
-    local pair cap."""
+    """entail_delta's driver regime: closure._driver_entail over the
+    saved rows + the delta rows, and every state frame rebuilt from the
+    result. Returns None, and the caller runs the distributed path, when
+    a saved rtc/links frame holds more than max_rows rows or
+    _driver_entail returns None."""
     spark = pruned_delta.sparkSession
-    cap = max_rows + 1
     # limit-capped probes: a corpus-sized state must not pay a full
     # count just to learn that it is over the threshold
     for saved in (state.rtc, state.links):
-        if saved.select(F.lit(0)).limit(cap).toArrow().num_rows > max_rows:
+        if saved.select(F.lit(0)).limit(max_rows + 1).toArrow().num_rows > max_rows:
             return None
-    # ONE collect: saved rows (capped), delta rows and both class-node
-    # sets, told apart by the tag k
-    none = F.lit(None).cast("string")
-
-    def tagged(df, k):
-        return df.select(
-            F.lit(k).alias("k"), F.col("id").alias("subject"),
-            none.alias("predicate"), none.alias("object"),
-        )
-
-    got = (
-        state.pruned.limit(cap).select(F.lit(0).alias("k"), *_SPO)
-        .unionByName(pruned_delta.select(F.lit(1).alias("k"), *_SPO))
-        .unionByName(tagged(state.class_nodes, 2))
-        .unionByName(tagged(delta_class_nodes, 3))
-        .toArrow()
-        .to_pydict()
+    out = _driver_entail(
+        pruned_delta, delta_class_nodes, max_rows,
+        saved=(state.pruned, state.class_nodes),
     )
-    parts: tuple[list, ...] = ([], [], [], [])
-    for k, s, p, o in zip(got["k"], got["subject"], got["predicate"], got["object"]):
-        parts[k].append((s, p, o))
-    if len(parts[0]) > max_rows:
+    if out is None:
         return None
-    rows = set(parts[0]) | set(parts[1])
-    classes = {s for s, _p, _o in parts[2] + parts[3]}
-    sat = _local_entail(rows, classes)
-    if sat is None:
-        return None
+    sat, rows, classes, old_rows = out
     # the saved membership is a function of the saved rows
-    _, old_mem = _local_expression_edges(parts[0])
+    _, old_mem = _local_expression_edges(old_rows)
     old_bns = {bn for bn, _m in old_mem}
     if any(
         bn in old_bns and (bn, m) not in old_mem

@@ -5,9 +5,12 @@ Spark re-expression of the reference's checksum-based memoization
 changed; scripts/create_pseudo_base_ontology.py:92-95 — skip if output
 exists). A stage re-runs iff (code_hash, input_fingerprint) differ from
 the recorded manifest or its output table is missing; otherwise the
-committed table is read back. The manifest also records per-partition
-row counts (north rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+committed table is read back with its recorded schema (no inference
+job; an entry with none is stale). The manifest also records
+per-partition row counts (north rule: "resumable from checkpoint with
+per-partition lineage + metrics"): a partition is a write task's
+part-NNNNN files, counted from their parquet footers, so a commit
+runs no Spark job beyond its write.
 
 The manifest is plain JSON next to the output tables; on a cluster it
 would live beside the Iceberg catalog (snapshot ids instead of dir
@@ -22,8 +25,9 @@ import json
 import os
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..sources.tables import current_snapshot, read_table, write_table
 
@@ -72,29 +76,37 @@ class CheckpointManager:
             entry
             and entry["code_hash"] == stage_code_hash
             and entry["inputs_fingerprint"] == inputs_fingerprint
+            # an entry with no recorded schema is stale: re-run it
+            and "schema" in entry
             and os.path.exists(out_path)
             and self._snapshot_valid(entry, out_path)
         ):
             self.stages_skipped.append(name)
-            return read_table(self.spark, out_path)
+            return read_table(
+                self.spark, out_path, StructType.fromJson(entry["schema"])
+            )
 
         df = compute()
         snap = write_table(df, out_path, partition_by=partition_by)
-        materialized = read_table(self.spark, out_path)
-        part_counts = {
-            str(r["pid"]): r["rows"]
-            for r in materialized.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        }
+        # the schema a parquet read gives back: partition columns last
+        parts = partition_by or []
+        schema = StructType([f for f in df.schema if f.name not in parts]
+                            + [df.schema[c] for c in parts])
+        # rows per write task from its part files' footers: no read job
+        part_counts: dict[str, int] = {}
+        for d, _dirs, files in os.walk(out_path):
+            for f in files:
+                if f.startswith("part-"):
+                    task = str(int(f.split("-")[1]))
+                    rows = pq.read_metadata(os.path.join(d, f)).num_rows
+                    part_counts[task] = part_counts.get(task, 0) + rows
         self.manifest[name] = {
             "code_hash": stage_code_hash,
             "inputs_fingerprint": inputs_fingerprint,
             "output": out_path,
-            "row_count": int(sum(part_counts.values())),
+            "row_count": sum(part_counts.values()),
             "partition_rows": part_counts,
+            "schema": schema.jsonValue(),
             # snapshot-id lineage (Iceberg semantics; fallback commit
             # log when no catalog): resume re-validates the content sha
             # so an out-of-band rewrite of the table forces a re-run
@@ -111,7 +123,7 @@ class CheckpointManager:
                 self.manifest[name]["metrics"] = m
         self._save()
         self.stages_run.append(name)
-        return materialized
+        return read_table(self.spark, out_path, schema)
 
     @staticmethod
     def _snapshot_valid(entry: dict, out_path: str) -> bool:
@@ -134,7 +146,8 @@ class CheckpointManager:
 
     def metrics_df(self) -> "DataFrame":
         """Per-partition lineage metrics as a queryable DataFrame:
-        (stage, partition_id, rows, code_hash, inputs_fingerprint)."""
+        (stage, partition_id, rows, code_hash, inputs_fingerprint);
+        partition_id is the write task of the stage's part files."""
         rows = []
         for stage, e in sorted(self.manifest.items()):
             for pid, n in e.get("partition_rows", {}).items():

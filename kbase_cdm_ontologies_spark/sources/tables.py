@@ -26,6 +26,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -148,7 +149,12 @@ def write_bucketed(
     )
 
 
-def read_table(spark: SparkSession, path_or_name: str) -> DataFrame:
+def read_table(
+    spark: SparkSession, path_or_name: str, schema: StructType | None = None
+) -> DataFrame:
+    """A committed table. With `schema` (a parquet table's recorded
+    schema) the read infers nothing and so runs no Spark job."""
     if _iceberg_available(spark) and "/" not in path_or_name:
         return spark.read.table(path_or_name)
-    return spark.read.parquet(path_or_name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path_or_name)

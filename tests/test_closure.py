@@ -1,8 +1,11 @@
 """M7: transitive closure + restriction entailment micro-fixtures
 (FIXTURES.md §7; semantics of relation-graph flags, SURVEY.md §2.8)."""
 
+from conftest import DRIVER_KEY
+from conftest import entail_regimes as _entail_regimes
 from pyspark.sql import functions as F
 
+from kbase_cdm_ontologies_spark.operators import closure
 from kbase_cdm_ontologies_spark.operators.closure import (
     entail,
     restriction_axioms,
@@ -10,6 +13,17 @@ from kbase_cdm_ontologies_spark.operators.closure import (
     transitive_closure,
     union_eliminated_subclass,
 )
+
+LOCAL_KEYS = tuple(
+    f"spark.graft.{k}.localThreshold" for k in (
+        "transitiveClosure", "keyedTransitiveClosure",
+        "unionElimination", "propertyClosure",
+    )
+)
+
+
+def _edge_set(df):
+    return {(r["subject"], r["predicate"], r["object"]) for r in df.collect()}
 
 
 def _tc(spark, edges, local_threshold=20_000):
@@ -67,10 +81,7 @@ def test_restriction_entailment(spark):
     class_nodes = spark.createDataFrame(
         [("a",), ("c",), ("d",), ("x",)], ["id"]
     )
-    got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(stmts, class_nodes).collect()
-    }
+    got = _entail_regimes(stmts, class_nodes)
     want = {
         # reflexive + strict subclass
         ("a", "rdfs:subClassOf", "a"), ("c", "rdfs:subClassOf", "c"),
@@ -84,7 +95,7 @@ def test_restriction_entailment(spark):
 
 def test_corpus_closure_matches_oracle(corpus, corpus_dfs):
     """Ontology part of the edge oracle (no SVO): canonicalize then
-    entail must equal the hand-rolled BFS closure."""
+    entail must equal the hand-rolled BFS closure, in both regimes."""
     from kbase_cdm_ontologies_spark.operators.canonicalize import (
         apply_canonical,
         canonical_map,
@@ -95,10 +106,7 @@ def test_corpus_closure_matches_oracle(corpus, corpus_dfs):
     stmts = corpus_dfs["statements"]
     cmap = canonical_map(stmts)
     canon_stmts = apply_canonical(stmts, cmap, ["subject", "object"])
-    got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(canon_stmts, class_node_ids(canon_stmts)).collect()
-    }
+    got = _entail_regimes(canon_stmts, class_node_ids(canon_stmts))
     assert got == _closure_oracle(corpus)
 
 
@@ -171,10 +179,7 @@ def _restriction(owner, bn, prop, filler):
 def _entail(spark, rows, nodes):
     stmts = spark.createDataFrame(_stmt_rows(rows), STMT_SCHEMA)
     class_nodes = spark.createDataFrame([(n,) for n in nodes], ["id"])
-    return {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(stmts, class_nodes).collect()
-    }
+    return _entail_regimes(stmts, class_nodes)
 
 
 def _props(got):
@@ -642,11 +647,11 @@ def test_entail_degenerate_inputs(spark):
     # two-class ontology — the edges a user hits first when wiring up
     empty = spark.createDataFrame([], "subject string, predicate string, object string")
     no_classes = spark.createDataFrame([], "id string")
-    assert entail(empty, no_classes).count() == 0
+    assert _entail_regimes(empty, no_classes) == set()
     ann = spark.createDataFrame(
         [("A", "rdfs:label", "x")], ["subject", "predicate", "object"]
     )
-    assert entail(ann, no_classes).count() == 0
+    assert _entail_regimes(ann, no_classes) == set()
     one = spark.createDataFrame(
         [
             ("A", "rdfs:subClassOf", "B"),
@@ -656,7 +661,7 @@ def test_entail_degenerate_inputs(spark):
         ["subject", "predicate", "object"],
     )
     cls = spark.createDataFrame([("A",), ("B",)], ["id"])
-    got = sorted(map(tuple, entail(one, cls).collect()))
+    got = sorted(_entail_regimes(one, cls))
     assert got == [
         ("A", "rdfs:subClassOf", "A"),
         ("A", "rdfs:subClassOf", "B"),
@@ -742,10 +747,9 @@ def test_union_elimination_regimes_agree(spark):
         )
         classes = [f"c{i}" for i in range(n)] + [f"u{u}" for u in range(4)] + ["top"]
         cap: dict = {}
-        want = set(map(tuple, entail(
-            stmts, spark.createDataFrame([(c,) for c in classes], ["id"]),
-            state_capture=cap,
-        ).collect()))
+        cls = spark.createDataFrame([(c,) for c in classes], ["id"])
+        want = set(map(tuple, entail(stmts, cls, state_capture=cap).collect()))
+        assert _entail_regimes(stmts, cls) == want
         pruned = canonicalize_expressions(
             prune_for_closure(drop_non_el_axioms(stmts))
         ).select("subject", "predicate", "object")
@@ -761,3 +765,136 @@ def test_union_elimination_regimes_agree(spark):
             got = set(map(tuple, cap[key].select(*cols).collect()))
             assert local[key] == got, (trial, key, sorted(local[key] ^ got)[:6])
         assert local["schema"] == cap["schema"], trial
+
+
+def _regime_fixture(spark):
+    """Restrictions, a transitive property, a chain, a domain and an
+    individual; no union, so only entail()'s driver regime calls
+    _local_union_elimination."""
+    rows = (
+        [("w", "rdfs:subClassOf", "x"), ("i", "rdf:type", "w")]
+        + _restriction("x", "_:b1", "p", "y")
+        + _restriction("y", "_:b2", "p", "z")
+        + [
+            ("p", "rdf:type", "owl:TransitiveProperty"),
+            ("p", "rdfs:domain", "D"),
+            ("r", "owl:propertyChainAxiom", "_:l1"),
+            ("_:l1", "rdf:first", "p"),
+            ("_:l1", "rdf:rest", "_:l2"),
+            ("_:l2", "rdf:first", "p"),
+            ("_:l2", "rdf:rest", "rdf:nil"),
+        ]
+    )
+    stmts = spark.createDataFrame(_stmt_rows(rows), STMT_SCHEMA)
+    cls = spark.createDataFrame([(n,) for n in "wxyzD"], ["id"])
+    return stmts, cls, _entail_regimes(stmts, cls)
+
+
+def _no_driver_saturation(*_args, **_kwargs):
+    raise AssertionError("entail() ran its driver regime")
+
+
+def test_entail_driver_regime_falls_back(spark, monkeypatch):
+    """Pruned rows over driverThreshold, or a subclass closure over the
+    driver pair cap, run the hybrid path, which gives the full answer."""
+    stmts, cls, hybrid = _regime_fixture(spark)
+    assert ("x", "p", "z") in hybrid and ("i", "rdf:type", "x") in hybrid
+    # 3 is below the fixture's 15 pruned rows: nothing saturates on
+    # the driver
+    monkeypatch.setattr(closure, "_local_entail", _no_driver_saturation)
+    spark.conf.set(DRIVER_KEY, "3")
+    try:
+        assert _edge_set(entail(stmts, cls)) == hybrid
+    finally:
+        spark.conf.unset(DRIVER_KEY)
+    monkeypatch.undo()
+    calls = []
+
+    def over_cap(*args):
+        calls.append(args)
+        return None, None
+
+    monkeypatch.setattr(closure, "_local_union_elimination", over_cap)
+    assert _edge_set(entail(stmts, cls)) == hybrid
+    assert calls  # the driver regime ran and tripped the cap
+
+
+def test_entail_large_base_falls_back(spark, monkeypatch):
+    """A small input whose base links exceed property_closure's driver
+    guard (rows, then estimated bytes) runs the hybrid path: 42
+    statements build a 1,681-link base (C0..C39 and the restriction
+    node each hold ∃p.C0, linked to those same 41 ancestors of C0)."""
+    n = 40
+    rows = [(f"C{i}", "rdfs:subClassOf", f"C{i + 1}") for i in range(n - 1)]
+    rows += _restriction(f"C{n - 1}", "_:r", "p", "C0")
+    stmts = spark.createDataFrame(_stmt_rows(rows), STMT_SCHEMA)
+    cls = spark.createDataFrame([(f"C{i}",) for i in range(n)], ["id"])
+    hybrid = _entail_regimes(stmts, cls)
+    assert sum(p == "p" for _s, p, _o in hybrid) == n * n
+    saturated, property_closures = [], []
+    real_local, real_pc = closure._local_entail, closure.property_closure
+
+    def local_entail(*args):
+        saturated.append(real_local(*args))
+        return saturated[-1]
+
+    def property_closure(*args, **kwargs):
+        property_closures.append(args)
+        return real_pc(*args, **kwargs)
+
+    monkeypatch.setattr(closure, "_local_entail", local_entail)
+    monkeypatch.setattr(closure, "property_closure", property_closure)
+    for key, value in (
+        ("spark.graft.propertyClosure.localThreshold", "1000"),
+        ("spark.graft.propertyClosure.driverMaxBytes", "4096"),
+        (None, None),
+    ):
+        if key:
+            spark.conf.set(key, value)
+        try:
+            assert _edge_set(entail(stmts, cls)) == hybrid, key
+        finally:
+            if key:
+                spark.conf.unset(key)
+        # under the guard (no key set) the driver regime saturates
+        assert (saturated.pop() is None) == bool(property_closures) == bool(key)
+        property_closures.clear()
+
+
+def test_entail_forced_distributed_never_runs_driver(spark, monkeypatch):
+    """property_local_threshold=0, or any localThreshold key at 0,
+    forces the distributed fixpoints: the driver regime never runs."""
+    stmts, cls, hybrid = _regime_fixture(spark)
+    monkeypatch.setattr(closure, "_local_entail", _no_driver_saturation)
+    got = entail(stmts, cls, property_local_threshold=0)
+    assert _edge_set(got) == hybrid
+    for key in LOCAL_KEYS:
+        spark.conf.set(key, "0")
+        try:
+            assert _edge_set(entail(stmts, cls)) == hybrid, key
+        finally:
+            spark.conf.unset(key)
+
+
+def test_entail_driver_regime_job_budget(spark, corpus_dfs):
+    """entail() on the e2e fixture in the driver regime is a handful of
+    Spark jobs: the prune and intern collects and one collect, plus
+    the caller's count. A per-step job added to it later fails here."""
+    from kbase_cdm_ontologies_spark.operators.canonicalize import (
+        apply_canonical,
+        canonical_map,
+    )
+    from kbase_cdm_ontologies_spark.plans.pipeline import class_node_ids
+
+    stmts = corpus_dfs["statements"]
+    canon = apply_canonical(stmts, canonical_map(stmts), ["subject", "object"])
+    canon = canon.localCheckpoint()
+    sc = spark.sparkContext
+    sc.setJobGroup("entail_job_budget", "entail() driver regime")
+    try:
+        n = entail(canon, class_node_ids(canon)).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusTracker().getJobIdsForGroup("entail_job_budget")
+    assert n > 0 and 0 < len(jobs) <= 8, len(jobs)

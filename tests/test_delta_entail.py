@@ -73,13 +73,20 @@ def _class_nodes(spark, stmts):
     )
 
 
+def _full_edges(spark, full):
+    """The oracle: entail() on its hybrid path. driverThreshold gates
+    entail()'s driver regime too, so at 0 a driver-regime delta is
+    checked against independent code, not against _local_entail."""
+    with _confs(spark, {DRIVER_KEY: "0"}):
+        return _edges(entail(full, _class_nodes(spark, full)))
+
+
 def _check_delta_matches_full(spark, base_rows, delta_rows, regimes=REGIMES):
     """entail_delta(state(base), delta) == entail(base ∪ delta), in
     every regime of `regimes`."""
     base = _df(spark, base_rows)
     delta = _df(spark, delta_rows)
-    full = _df(spark, base_rows + delta_rows)
-    want = _edges(entail(full, _class_nodes(spark, full)))
+    want = _full_edges(spark, _df(spark, base_rows + delta_rows))
 
     _, state = entail_with_state(base, _class_nodes(spark, base))
     for regime in regimes:
@@ -262,8 +269,7 @@ def test_delta_applied_twice(spark):
         ("N:2", "rdfs:subClassOf", "N:1"),
         ("I:z", "rdf:type", "N:2"),
     ]
-    full = _df(spark, base + d1 + d2)
-    want = _edges(entail(full, _class_nodes(spark, full)))
+    want = _full_edges(spark, _df(spark, base + d1 + d2))
     bdf = _df(spark, base)
     _, state0 = entail_with_state(bdf, _class_nodes(spark, bdf))
     for r1, r2 in itertools.product(REGIMES, repeat=2):
@@ -289,10 +295,8 @@ def test_state_save_load_roundtrip(spark, tmp_path):
         ("N:10", "rdf:type", "owl:Class"),
         ("N:10", "rdfs:subClassOf", "N:9"),
     ]
-    full = _df(spark, base + delta)
-    want = _edges(entail(full, _class_nodes(spark, full)))
-    full2 = _df(spark, base + delta + delta2)
-    want2 = _edges(entail(full2, _class_nodes(spark, full2)))
+    want = _full_edges(spark, _df(spark, base + delta))
+    want2 = _full_edges(spark, _df(spark, base + delta + delta2))
     bdf = _df(spark, base)
     _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
     state.save(str(tmp_path / "st"))
@@ -375,8 +379,7 @@ def test_delta_driver_pair_cap_falls_back(spark, monkeypatch):
         ("N:1", "rdfs:subClassOf", "A:5"),
         ("I:y1", "rdf:type", "N:1"),
     ]
-    full = _df(spark, base + delta)
-    want = _edges(entail(full, _class_nodes(spark, full)))
+    want = _full_edges(spark, _df(spark, base + delta))
     bdf = _df(spark, base)
     _, state = entail_with_state(bdf, _class_nodes(spark, bdf))
     calls = []
@@ -550,8 +553,7 @@ def test_delta_reference_add_bfo_slice(spark):
     pick = st.where(keep & (F.col("predicate") != "owl:equivalentClass"))
     base = pick.where(F.col("stanza").startswith("RO:")).select(*COLS)
     delta = pick.where(F.col("stanza").startswith("BFO:")).select(*COLS)
-    full = base.unionByName(delta)
-    want = _edges(entail(full, _class_nodes(spark, full)))
+    want = _full_edges(spark, base.unionByName(delta))
     _, state = entail_with_state(base, _class_nodes(spark, base))
     got_df, _ = entail_delta(state, delta)
     got = _edges(got_df)

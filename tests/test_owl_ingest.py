@@ -3,6 +3,7 @@ semantics, and the full OWL -> KG path against the closure oracle."""
 
 import gzip
 
+from conftest import entail_regimes
 from pyspark.sql import functions as F
 
 from kbase_cdm_ontologies_spark.operators.merge import (
@@ -118,16 +119,12 @@ def test_owl_path_reaches_oracle_closure(spark, corpus):
         apply_canonical,
         canonical_map,
     )
-    from kbase_cdm_ontologies_spark.operators.closure import entail
     from kbase_cdm_ontologies_spark.plans.pipeline import class_node_ids
     from kbase_cdm_ontologies_spark.sources.corpus import _closure_oracle
 
     cmap = canonical_map(stmts)
     canon = apply_canonical(stmts, cmap, ["subject", "object"])
-    got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(canon, class_node_ids(canon)).collect()
-    }
+    got = entail_regimes(canon, class_node_ids(canon))
     assert got == _closure_oracle(corpus)
 
 
@@ -211,7 +208,6 @@ def test_object_property_roundtrip_and_entailment(spark):
         bn = rests[bn]
     assert members == ["RO:0002131", "BFO:0000050"]
 
-    from kbase_cdm_ontologies_spark.operators.closure import entail
     from kbase_cdm_ontologies_spark.plans.pipeline import class_node_ids
 
     stmts = spark.createDataFrame(
@@ -220,9 +216,8 @@ def test_object_property_roundtrip_and_entailment(spark):
         "value string, datatype string, language string, graph string",
     )
     got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(stmts, class_node_ids(stmts)).collect()
-        if r["predicate"] != "rdfs:subClassOf"
+        t for t in entail_regimes(stmts, class_node_ids(stmts))
+        if t[1] != "rdfs:subClassOf"
     }
     P, O = "BFO:0000050", "RO:0002131"
     x, y, z = "PPP:0000001", "PPP:0000002", "PPP:0000003"
@@ -313,13 +308,9 @@ relationship: part_of DDD:0000002
         [("/onto/ddd.obo", obo2.encode())], "path string, content binary"
     )
     stmts = owl_documents_to_statements(df)
-    from kbase_cdm_ontologies_spark.operators.closure import entail
     from kbase_cdm_ontologies_spark.plans.pipeline import class_node_ids
 
-    got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(stmts, class_node_ids(stmts)).collect()
-    }
+    got = entail_regimes(stmts, class_node_ids(stmts))
     # part_of is transitive: grandchild part_of root via child, lifted
     # to overlaps through the subproperty
     assert ("DDD:0000004", "part_of", "DDD:0000002") in got

@@ -18,9 +18,8 @@ Reference golden: outputs_test/parquet_files/entailed_edge.parquet.
 import os
 
 import pytest
+from conftest import entail_regimes
 from pyspark.sql import functions as F
-
-from kbase_cdm_ontologies_spark.operators.closure import entail
 
 ST = "/root/reference/outputs_test/parquet_files/statements.parquet"
 EE = "/root/reference/outputs_test/parquet_files/entailed_edge.parquet"
@@ -42,10 +41,7 @@ def test_entail_matches_reference_golden_on_bfo_ro(spark):
         .select(F.col("subject").alias("id"))
         .distinct()
     )
-    got = {
-        (r["subject"], r["predicate"], r["object"])
-        for r in entail(stmts, class_nodes).collect()
-    }
+    got = entail_regimes(stmts, class_nodes)
     gold = {
         (r["subject"], r["predicate"], r["object"])
         for r in spark.read.parquet(EE).collect()
