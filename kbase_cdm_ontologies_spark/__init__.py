@@ -11,7 +11,7 @@ merges OWL ontologies via ROBOT / relation-graph / semsql subprocesses
       -> M2 alias dictionary     (from ontology statements; broadcast)
       -> M3 mention detection    (Aho-Corasick in mapInPandas)
       -> M4 triple extraction    (SVO patterns, vectorized)
-      -> M5 entity linking       (MinHash-LSH blocking + TF-IDF cosine)
+      -> M5 entity linking       (broadcast alias join + page-context window)
       -> M6 canonicalization     (large-star/small-star connected comp.)
       -> M7 closure + materialize (edges/nodes tables, prefix CURIEs)
       -> M8 checkpoint manifest  (per-partition lineage + row counts)

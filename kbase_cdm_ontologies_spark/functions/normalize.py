@@ -15,7 +15,7 @@ the reference's string semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 OBO_PREFIX_RE = r"http://purl\.obolibrary\.org/obo/([A-Za-z]+)(_|#|\.)"
@@ -47,10 +47,11 @@ def compact_curies_expr(
     prefixes: list[tuple[str, str]],
     out_col: str = "curie",
 ) -> DataFrame:
-    """Driver-known (prefix, base) pairs compiled into a
-    longest-base-first CASE projection — the zero-shuffle form of
-    compact_curies for dimension-sized registries (ties: prefix ASC,
-    matching the join+window plan's ordering)."""
+    """IRI -> CURIE via the longest matching base; non-matching IRIs pass
+    through unchanged. The driver-known (prefix, base) pairs of a
+    dimension-sized registry compile into a longest-base-first CASE
+    projection (ties: prefix ASC): no join, no shuffle, the query
+    pipelines with the scan."""
     keep = list(df.columns)
     rows = sorted(set(prefixes), key=lambda r: (-len(r[1]), r[0]))
     iri = F.col(iri_col)
@@ -65,53 +66,6 @@ def compact_curies_expr(
             ),
         ).otherwise(expr)
     return df.select(*keep, expr.alias(out_col))
-
-
-def compact_curies(
-    df: DataFrame, iri_col: str, prefix_table: DataFrame, out_col: str = "curie"
-) -> DataFrame:
-    """IRI -> CURIE via the longest matching base. Non-matching IRIs
-    pass through unchanged.
-
-    The prefix table is dimension-sized by contract (~1.2k rows in the
-    reference's semsql prefix csv), so the default plan is a pure
-    PROJECTION: the table is collected once and compiled into a
-    longest-base-first CASE chain — no join, no all-columns window
-    shuffle, the query pipelines with the scan. The longest-match /
-    prefix-asc tie order of the CASE is exactly the former window's
-    (length(base) DESC, prefix ASC) ordering. A prefix table larger
-    than spark.graft.curie.exprMaxPrefixes (default 512 — far past any
-    real registry) falls back to the broadcast-join + window plan."""
-    from ..config import conf_threshold as _ct
-
-    keep = list(df.columns)
-    cap = _ct(df.sparkSession, "spark.graft.curie.exprMaxPrefixes", 512)
-    probe = prefix_table.select("prefix", "base").limit(cap + 1).collect()
-    if len(probe) <= cap:
-        return compact_curies_expr(
-            df, iri_col, [(r["prefix"], r["base"]) for r in probe], out_col
-        )
-    p = prefix_table.select("prefix", "base")
-    joined = df.join(
-        F.broadcast(p), F.col(iri_col).startswith(F.col("base")), "left"
-    )
-    w = Window.partitionBy(*keep).orderBy(F.desc(F.length("base")), F.asc("prefix"))
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("prefix").isNotNull(),
-                F.concat(
-                    F.col("prefix"),
-                    F.lit(":"),
-                    F.expr(f"substring({iri_col}, length(base) + 1)"),
-                ),
-            ).otherwise(F.col(iri_col)),
-        )
-        .select(*keep, out_col)
-    )
 
 
 def classify_ontology_expr(

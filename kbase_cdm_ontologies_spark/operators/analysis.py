@@ -1,8 +1,8 @@
 """Ontology-analysis stage — DataFrame re-expression of the reference's
 stages 1-2 (analyze_core_ontologies.py / analyze_non_core_ontologies.py):
 per-ontology term censuses, own/external classification, external
-subjects (semi-join), dependency resolution (anti-join), top-5 samples,
-per-predicate statistics, and the Base/Non-Base classification rule.
+subjects (semi-join), top-5 samples, and the Base/Non-Base
+classification rule.
 
 The reference walks XML DOMs per file; here every input is rows of the
 statements table, so the whole stage is joins/aggregations.
@@ -97,24 +97,3 @@ def analyze_ontologies(statements: DataFrame) -> DataFrame:
         )
     )
 
-
-def dependency_download_list(statements: DataFrame, core_ontos: DataFrame) -> DataFrame:
-    """External ontologies referenced but not in the core set — the
-    anti-join driving the reference's download loop
-    (analyze_non_core_ontologies.py:411-418)."""
-    t = term_table(statements)
-    referenced = (
-        t.where(~F.col("is_own"))
-        .select(F.split(F.col("term"), ":").getItem(0).alias("onto"))
-        .distinct()
-    )
-    return referenced.join(core_ontos, "onto", "left_anti")
-
-
-def predicate_stats(statements: DataFrame) -> DataFrame:
-    """rdf_level_summary_statistic analog: per-predicate row counts
-    (reference outputs_test/tsv_tables/rdf_level_summary_statistic.tsv)."""
-    return (
-        statements.groupBy(F.col("predicate").alias("element"))
-        .agg(F.count(F.lit(1)).alias("count_value"))
-    )

@@ -4,10 +4,8 @@ composition: equi-join on the key, filter to right.ts <= left.ts,
 keep the latest right row per left row via one window.
 
 Works at scale when the per-key right-side history is bounded (orders
-per customer, quotes per symbol); for unbounded histories bucket the
-time axis first (join on (key, time_bucket) for the current and
-previous bucket) so the pre-window fan-out stays bounded — that
-variant is `asof_join_bucketed`.
+per customer, quotes per symbol): the pre-window fan-out is every
+right row of the key on the matching side of left_ts.
 """
 
 from __future__ import annotations
@@ -35,7 +33,7 @@ def asof_join(
     lcols = list(left.columns)
     # pin the non-deterministic ids: a stage retry / speculative re-run
     # after the join shuffle would otherwise regenerate different ids
-    # and duplicate or drop left rows (same pin as the bucketed variant)
+    # and duplicate or drop left rows
     l = left.withColumn("_lrow", F.monotonically_increasing_id()).localCheckpoint(
         eager=False
     )
@@ -56,47 +54,3 @@ def asof_join(
         .drop("_rn", "_lrow")
     )
 
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    bucket_seconds: int = 86400,
-) -> DataFrame:
-    """Backward as-of with bounded fan-out: candidates come only from
-    the left row's time bucket and the immediately preceding one, plus
-    a per-key 'latest before bucket' row carried forward. Exact when
-    right-side gaps never exceed one bucket; the general exact form
-    unions the per-key running latest (one extra window over right)."""
-    lb = F.floor(F.col(left_ts).cast("long") / bucket_seconds)
-    rb = F.floor(F.col(right_ts).cast("long") / bucket_seconds)
-    # per-row id (not the left columns) keys the dedup window and the
-    # unmatched anti-join, so identical left rows keep their cardinality
-    l2 = left.withColumn("_lrow", F.monotonically_increasing_id()).withColumn("_lb", lb)
-    l2 = l2.localCheckpoint(eager=False)  # pin the non-deterministic ids
-    r2 = right.withColumnRenamed(key, "_k").withColumn("_rb", rb)
-    cands = None
-    for shift in (0, 1):
-        c = l2.join(
-            r2,
-            (l2[key] == r2["_k"])
-            & (r2["_rb"] == l2["_lb"] - shift)
-            & (F.col(right_ts) <= F.col(left_ts)),
-            "inner",
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    w = Window.partitionBy("_lrow").orderBy(F.desc(right_ts))
-    best = (
-        cands.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_lb", "_rb", "_k")
-    )
-    # left rows with no candidate in the two buckets -> null-extend
-    matched = best.select("_lrow")
-    unmatched = l2.drop("_lb").join(matched, "_lrow", "left_anti")
-    for c in best.columns:
-        if c not in unmatched.columns:
-            unmatched = unmatched.withColumn(c, F.lit(None))
-    return best.unionByName(unmatched.select(*best.columns)).drop("_lrow")

@@ -1,23 +1,20 @@
 """M5 — entity linking: surface -> ontology term.
 
-Two candidate-generation paths (north star: "TF-IDF cosine +
-MinHash-LSH blocking"):
+1. **Exact path** (`link_triples`, the one the pipeline runs):
+   surfaces that are dictionary aliases join the broadcast alias table
+   directly; an ambiguous alias (n_candidates > 1) is resolved by page
+   context — candidate score = number of distinct unambiguous aliases
+   on the same page from the candidate's source ontology, ties broken
+   by min term_id. All built-in ops: broadcast joins + one window; the
+   big (triples) side is never shuffled by alias key.
 
-1. **Exact path** (`link_triples`): surfaces that are dictionary
-   aliases join the broadcast alias table directly; an ambiguous alias
-   (n_candidates > 1) is resolved by page context — candidate score =
-   number of distinct unambiguous aliases on the same page from the
-   candidate's source ontology, ties broken by min term_id. All
-   built-in ops: broadcast joins + one window; the big (triples) side
-   is never shuffled by alias key.
-
-2. **Fuzzy path** (`fuzzy_candidates` / `fuzzy_link_best`): surfaces
+2. **Fuzzy path** (`fuzzy_candidates` / `fuzzy_link_best`, the north
+   star's "MinHash-LSH blocking"; no run path calls it yet): surfaces
    that are NOT dictionary aliases (typos, variants) are blocked
    against the alias table with MinHash-LSH over char-3gram shingles
-   and re-ranked by exact n-gram Jaccard (TF-IDF cosine over terms is
-   available via operators/similarity.tfidf_vectors + cosine_join for
-   context-level re-ranking). Only same-signature pairs are scored —
-   never a cross-join of corpus surfaces against the dictionary.
+   and re-ranked by exact n-gram Jaccard. Only same-signature pairs are
+   scored — never a cross-join of corpus surfaces against the
+   dictionary.
 
 Skew note: hub aliases (fixture hot alias; production analog =
 NCBITaxon-scale hub terms, reference README.md:104) concentrate join
@@ -151,97 +148,6 @@ def fuzzy_link_best(
         .where(F.col("_rn") == 1)
         .select("surface_norm", "term_id", F.round("sim", 4).alias("sim"))
     )
-
-
-def tfidf_context_scores(
-    extracted: DataFrame,
-    alias: DataFrame,
-    candidates: DataFrame,
-) -> DataFrame:
-    """(url, term_id, tfidf_cosine) for candidate disambiguation pairs —
-    the north star's "TF-IDF cosine" scoring: each candidate term's
-    pseudo-document is the bag of its aliases, each page's document is
-    its extracted text, both vectorized over ONE shared corpus (so IDF
-    weights are comparable), scored with the sparse inverted-index
-    cosine join restricted to the candidate pairs.
-
-    candidates(url, term_id): the ambiguous pairs to score — both
-    corpus sides are semi-joined down to them before vectorization, so
-    the expensive explode/join work is proportional to the ambiguity
-    set, not the corpus."""
-    from .similarity import cosine_join, tfidf_vectors
-
-    urls = candidates.select("url").distinct()
-    terms = candidates.select("term_id").distinct()
-    page_docs = (
-        extracted.join(urls, "url", "left_semi")
-        .select(F.concat(F.lit("u:"), F.col("url")).alias("id"),
-                F.col("extracted_text").alias("text"))
-    )
-    term_docs = (
-        alias.join(terms, "term_id", "left_semi")
-        .groupBy("term_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_set("alias_norm"))).alias("text"))
-        .select(F.concat(F.lit("t:"), F.col("term_id")).alias("id"), "text")
-    )
-    v = tfidf_vectors(page_docs.unionByName(term_docs), "id", "text")
-    va = v.where(F.col("id").startswith("u:"))
-    vb = v.where(F.col("id").startswith("t:"))
-    scores = cosine_join(va, vb).select(
-        F.expr("substring(id_a, 3)").alias("url"),
-        F.expr("substring(id_b, 3)").alias("term_id"),
-        F.col("cosine").alias("tfidf_cosine"),
-    )
-    return candidates.join(scores, ["url", "term_id"], "left").select(
-        "url", "term_id", F.coalesce("tfidf_cosine", F.lit(0.0)).alias("tfidf_cosine")
-    )
-
-
-def link_triples_tfidf(
-    raw_triples: DataFrame,
-    alias_with_counts: DataFrame,
-    extracted: DataFrame,
-) -> DataFrame:
-    """link_triples variant that disambiguates by TF-IDF cosine between
-    the page text and each candidate term's alias bag (ties: min
-    term_id). Same output shape as link_triples; the scoring join runs
-    only over surfaces with >1 dictionary candidate."""
-    triples = raw_triples.dropDuplicates(
-        ["url", "subj_surface", "pred", "obj_surface"]
-    )
-    amb = alias_with_counts.where(F.col("n_candidates") > 1)
-    cand_pairs = (
-        triples.select("url", F.col("subj_surface").alias("alias_norm"))
-        .unionByName(triples.select("url", F.col("obj_surface").alias("alias_norm")))
-        .distinct()
-        .join(F.broadcast(amb.select("alias_norm", "term_id").distinct()), "alias_norm")
-        .select("url", "term_id")
-        .distinct()
-    )
-    scores = tfidf_context_scores(
-        extracted, alias_with_counts.select("term_id", "alias_norm"), cand_pairs
-    )
-
-    def resolve(df: DataFrame, surface_col: str, out_col: str) -> DataFrame:
-        keep = list(df.columns)
-        cand = alias_with_counts.select(
-            F.col("alias_norm").alias(surface_col), "term_id"
-        ).distinct()
-        joined = (
-            df.join(F.broadcast(cand), surface_col)
-            .join(scores, ["url", "term_id"], "left")
-            .withColumn("_score", F.coalesce(F.col("tfidf_cosine"), F.lit(0.0)))
-        )
-        w = Window.partitionBy(*keep).orderBy(F.desc("_score"), F.asc("term_id"))
-        return (
-            joined.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(*keep, F.col("term_id").alias(out_col))
-        )
-
-    s = resolve(triples, "subj_surface", "subj_id")
-    out = resolve(s, "obj_surface", "obj_id")
-    return out.select("url", "subj_id", "pred", "obj_id")
 
 
 def link_triples(

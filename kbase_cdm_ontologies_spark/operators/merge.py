@@ -68,13 +68,3 @@ def merge_ontologies(per_source: dict[str, DataFrame]) -> DataFrame:
     )
     return deduped.unionByName(new_defined)
 
-
-def pseudo_base(statements: DataFrame, base_prefix: str) -> DataFrame:
-    """`robot remove --base-iri {PREFIX} --axioms external` semantics
-    (create_pseudo_base_ontology.py:104-114): keep only axioms whose
-    subject is in the ontology's own namespace (plus the blank-node
-    reifications those subjects own via their stanza)."""
-    return statements.where(
-        F.col("subject").startswith(base_prefix + ":")
-        | (F.col("stanza").startswith(base_prefix + ":") & F.col("subject").startswith("_:"))
-    )

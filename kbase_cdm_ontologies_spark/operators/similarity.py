@@ -6,15 +6,11 @@
   bucket vectors; only same-bucket (± multi-probe) candidates are
   scored. Hyperplanes are derived deterministically from a seed via
   md5, so results are reproducible run-to-run.
-- ivf_topk: IVF-style coarse quantization — k-means-lite centroids
-  chosen deterministically (first n_centroids vectors by id), vectors
-  assigned to nearest centroid at build; queries probe the nearest
-  n_probe centroids. Demonstrates the partition-pruning pattern that
-  matters at 10^9+ vectors: the scan reads only probed partitions.
 
-TF-IDF cosine (the entity-linking re-ranker from the north star) is
+TF-IDF cosine (the north star's entity-linking scorer) is
 `tfidf_vectors` + `cosine_join` below, over sparse (id, term, weight)
-rows — pure joins/aggs, no UDF.
+rows — pure joins/aggs, no UDF. No query or pipeline stage calls them
+yet: M5 links by exact alias plus page context (operators/linking.py).
 """
 
 from __future__ import annotations
@@ -158,97 +154,7 @@ def lsh_topk(
     )
 
 
-def _assign(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, v, centroid_id): nearest centroid by cosine — the
-    centroid vectors are plan literals, so assignment is one scan
-    inside whole-stage codegen (no join, no shuffle)."""
-    sims = [
-        cosine_expr(F.col("v"), F.array(*[F.lit(x) for x in cv])).alias(f"c{cid}")
-        for cid, cv in cents
-    ]
-    withsims = emb.select("vec_id", "v", *sims)
-    best = F.greatest(*[F.col(f"c{cid}") for cid, _ in cents])
-    pick = F.lit(None).cast("int")
-    for cid, _ in cents:
-        pick = F.when(F.col(f"c{cid}") == F.col("_best"), F.lit(cid)).otherwise(pick)
-    return withsims.withColumn("_best", best).select(
-        "vec_id", "v", pick.alias("centroid_id")
-    )
-
-
-def ivf_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iters: int = 3,
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Assign each vector to its nearest centroid after n_iters rounds
-    of Lloyd's k-means (deterministic init: first n_centroids vectors
-    by id — no RNG, reruns identical). Each round is one assignment
-    scan + one mean-per-(centroid, dim) aggregation (posexplode ->
-    partial-aggregating avg -> centroids collected to the driver;
-    centroid tables are tiny by construction). Returns (assigned_df,
-    centroids). At scale the assigned table is written partitioned by
-    centroid_id — probing then prunes partitions at scan time."""
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in emb.orderBy("vec_id").limit(n_centroids).collect()
-    ]
-    for _ in range(max(0, n_iters)):
-        assigned = _assign(emb, cents)
-        means = (
-            assigned.select("centroid_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(r["centroid_id"], {})[r["pos"]] = r["m"]
-        # empty centroids keep their previous position (standard Lloyd)
-        cents = [
-            (
-                cid,
-                [by_cid[cid][p] for p in range(len(cv))] if cid in by_cid else cv,
-            )
-            for cid, cv in cents
-        ]
-    return _assign(emb, cents), cents
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe the n_probe centroids nearest to the query, brute-force
-    within them."""
-
-    def cos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return num / (na * nb) if na and nb else 0.0
-
-    probes = sorted(centroids, key=lambda c: -cos(c[1], query_vec))[:n_probe]
-    probe_ids = [cid for cid, _ in probes]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        assigned.where(F.col("centroid_id").isin(probe_ids))
-        .select("vec_id", cosine_expr(F.col("v"), q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-# --- TF-IDF (sparse, join-based — the linking re-ranker) -------------------
+# --- TF-IDF (sparse, join-based) ---------------------------------------------
 
 def tfidf_vectors(
     df: DataFrame,

@@ -1,24 +1,18 @@
-"""Explicit skew handling: salted joins and salted heavy-hitter aggs.
+"""Explicit skew handling: a salted join for hub-dominated keys.
 
 AQE's skew-join splitting (on in session.py) handles sort-merge skew at
-runtime, but two engine paths need explicit salting (north rule:
-"salted, skew-aware joins"):
-
-1. joining a fact table against a key whose distribution is dominated
-   by hub entities (NCBITaxon-style terms — reference README.md:104 —
-   or a viral boilerplate alias): `salted_join` replicates the small
-   side R ways and scatters the big side's hot keys across R shuffle
-   partitions.
-2. per-key aggregations where one key holds a large fraction of all
-   rows: `two_phase_agg` pre-aggregates on (key, salt) then merges —
-   Spark's hash aggregate already does map-side partial aggregation,
-   so this is only for algebraic aggs composed in ways that defeat
-   partial aggregation (e.g. collect_list).
+runtime; `salted_join` is the explicit form (north rule: "salted,
+skew-aware joins") for joining a fact table against a key whose
+distribution is dominated by hub entities (NCBITaxon-style terms —
+reference README.md:104 — or a viral boilerplate alias): it replicates
+the small side R ways and scatters the big side's hot keys across R
+shuffle partitions. No query or pipeline stage calls it yet; the
+broadcast threshold below is what the run paths use.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -27,21 +21,6 @@ from pyspark.sql import functions as F
 # driver/executor at typical cluster memory, and far below the sizes an
 # entity-linking canonical map or web-corpus vocabulary reaches (1e8+).
 BROADCAST_MAX_ROWS = 5_000_000
-
-
-def size_aware_broadcast(df: DataFrame, max_rows: int | None = BROADCAST_MAX_ROWS) -> DataFrame:
-    """Broadcast-hint `df` only when it is provably dimension-sized.
-
-    Counts the frame (one job — callers pass frames that are already
-    materialized/checkpointed or cheap aggregates) and attaches the
-    broadcast hint only under `max_rows`; above it the frame joins via
-    shuffle and AQE picks the physical strategy from runtime stats.
-    `max_rows=None` skips the count and never hints (pure AQE).
-    At the 100 TB design point this is the guard that keeps an unbounded
-    canonical map / vocabulary from OOMing the driver."""
-    if max_rows is not None and df.count() <= max_rows:
-        return F.broadcast(df)
-    return df
 
 
 def salted_join(
@@ -75,51 +54,3 @@ def salted_join(
     out = b.join(s, [key, "_salt"], how)
     return out.drop("_salt")
 
-
-def salted_min_by_key(
-    df: DataFrame, key: str, value: str, salt_buckets: int = 16
-) -> DataFrame:
-    """min(value) per key via two-phase (key, salt) -> key aggregation.
-    Spark's hash-agg already map-side combines plain min(); this
-    explicit form documents/exercises the pattern for aggregations
-    that can't partially aggregate."""
-    salt = F.abs(F.hash(F.col(value)) % salt_buckets).cast("int")
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(F.min(value).alias("_pmin"))
-    )
-    return partial.groupBy(key).agg(F.min("_pmin").alias(f"min_{value}"))
-
-
-def top_keys(df: DataFrame, key: str, threshold_rows: int) -> DataFrame:
-    """Heavy-hitter detection: keys whose row count exceeds the
-    threshold — drives hybrid plans (broadcast-join the hot keys,
-    shuffle-join the long tail)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > threshold_rows)
-        .select(key, "n")
-    )
-
-
-def hybrid_skew_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot_threshold: int = 100_000,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Split-plan join: hot keys (detected at runtime) go through the
-    salted path, the long tail through a plain shuffle join, results
-    unioned. This is the explicit version of what AQE's skew-join does
-    for sort-merge joins, usable where AQE can't help (e.g. when the
-    join feeds an iterative loop that has to keep partitioning stable)."""
-    hot = top_keys(big, key, hot_threshold).select(key)
-    big_hot = big.join(F.broadcast(hot), key, "left_semi")
-    big_cold = big.join(F.broadcast(hot), key, "left_anti")
-    small_hot = small.join(F.broadcast(hot), key, "left_semi")
-    out_hot = salted_join(big_hot, small_hot, key, salt_buckets)
-    out_cold = big_cold.join(small, key)
-    return out_hot.unionByName(out_cold)

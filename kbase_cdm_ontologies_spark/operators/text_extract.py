@@ -19,7 +19,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.text_rules import extract_text
 
@@ -44,19 +43,3 @@ def extract_text_stage(pages: DataFrame) -> DataFrame:
 
     return pages.select("url", "warc_ts", "html", "lang").mapInPandas(_run, _OUT_SCHEMA)
 
-
-def verify_byte_identical(pages: DataFrame, extracted: DataFrame) -> int:
-    """Count urls whose extracted text is NOT byte-identical to the
-    reference text column (must be 0). Uses sha2 on the JVM side —
-    the Spark analog of scripts/version_tracker.py:14-20 checksums."""
-    ref = pages.select("url", F.sha2("text", 256).alias("ref_sha"))
-    got = extracted.select("url", F.sha2("extracted_text", 256).alias("got_sha"))
-    return (
-        ref.join(got, "url", "full")
-        .where(
-            F.col("ref_sha").isNull()
-            | F.col("got_sha").isNull()
-            | (F.col("ref_sha") != F.col("got_sha"))
-        )
-        .count()
-    )

@@ -23,8 +23,8 @@ def get_spark(
 
     - AQE on (runtime coalesce + skew-join splitting) — the skew story
       for hub entities (reference analog: NCBITaxon >2M terms,
-      reference README.md:104) is AQE + explicit salting in the CC /
-      linking joins.
+      reference README.md:104) is AQE plus map-side combining in the CC
+      rounds and broadcast dimension sides in the linking joins.
     - Arrow on — every pandas UDF crosses the JVM/Python boundary in
       columnar batches (input_hint: "no per-row Python").
     - UTC session timezone so DuckDB-oracle comparisons are stable.

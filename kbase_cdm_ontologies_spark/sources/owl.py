@@ -187,137 +187,6 @@ def parse_owl_xml(content: str, source_name: str) -> list[dict]:
     return rows
 
 
-# --- RDF/XML renderer (fixture round-trip: render -> parse == id) ----------
-
-_NS_DECL = (
-    'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
-    'xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#" '
-    'xmlns:owl="http://www.w3.org/2002/07/owl#" '
-    'xmlns:oboInOwl="http://www.geneontology.org/formats/oboInOwl#" '
-    'xmlns:xml="http://www.w3.org/XML/1998/namespace"'
-)
-
-_SYN_TAG = {
-    "oio:hasExactSynonym": "oboInOwl:hasExactSynonym",
-    "oio:hasRelatedSynonym": "oboInOwl:hasRelatedSynonym",
-    "oio:hasBroadSynonym": "oboInOwl:hasBroadSynonym",
-}
-
-
-def uncurie(c: str) -> str:
-    if c.startswith("obo:"):
-        return OBO_BASE + c[4:]
-    if c.startswith("owl:"):
-        return "http://www.w3.org/2002/07/owl#" + c[4:]
-    if re.match(r"^[A-Za-z]+:[A-Za-z0-9]+$", c):
-        return OBO_BASE + c.replace(":", "_", 1)
-    return c
-
-
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace('"', "&quot;")
-    )
-
-
-def render_owl_xml(rows: list[dict], onto_name: str) -> str:
-    """Statements rows (one ontology) -> RDF/XML. Inverse of
-    parse_owl_xml for the statement subset the fixture uses."""
-    by_subject: dict[str, list[dict]] = {}
-    bn_rows: dict[str, list[dict]] = {}
-    for r in rows:
-        if r["subject"].startswith("_:"):
-            bn_rows.setdefault(r["subject"], []).append(r)
-        else:
-            by_subject.setdefault(r["subject"], []).append(r)
-
-    out = [f'<?xml version="1.0"?>\n<rdf:RDF {_NS_DECL}>']
-    out.append(
-        f'  <owl:Ontology rdf:about="{OBO_BASE}{onto_name.lower()}.owl"/>'
-    )
-    for subject in sorted(by_subject):
-        srows = by_subject[subject]
-        if not any(r["predicate"] == "rdf:type" and r["object"] == "owl:Class" for r in srows):
-            continue
-        out.append(f'  <owl:Class rdf:about="{uncurie(subject)}">')
-        for r in srows:
-            p, o, v, lang = r["predicate"], r["object"], r["value"], r["language"]
-            if p == "rdfs:label":
-                la = f' xml:lang="{lang}"' if lang else ""
-                out.append(f"    <rdfs:label{la}>{_esc(v)}</rdfs:label>")
-            elif p in _SYN_TAG:
-                la = f' xml:lang="{lang}"' if lang else ""
-                t = _SYN_TAG[p]
-                out.append(f"    <{t}{la}>{_esc(v)}</{t}>")
-            elif p == "rdfs:isDefinedBy":
-                out.append(f'    <rdfs:isDefinedBy rdf:resource="{uncurie(o)}"/>')
-            elif p == "owl:equivalentClass":
-                out.append(f'    <owl:equivalentClass rdf:resource="{uncurie(o)}"/>')
-            elif p == "rdfs:subClassOf" and o and not o.startswith("_:"):
-                out.append(f'    <rdfs:subClassOf rdf:resource="{uncurie(o)}"/>')
-            elif p == "rdfs:subClassOf" and o and o.startswith("_:"):
-                parts = {rr["predicate"]: rr["object"] for rr in bn_rows.get(o, [])}
-                out.append("    <rdfs:subClassOf>")
-                out.append("      <owl:Restriction>")
-                if "owl:onProperty" in parts:
-                    out.append(
-                        f'        <owl:onProperty rdf:resource="{uncurie(parts["owl:onProperty"])}"/>'
-                    )
-                if "owl:someValuesFrom" in parts:
-                    out.append(
-                        f'        <owl:someValuesFrom rdf:resource="{uncurie(parts["owl:someValuesFrom"])}"/>'
-                    )
-                out.append("      </owl:Restriction>")
-                out.append("    </rdfs:subClassOf>")
-        out.append("  </owl:Class>")
-    for subject in sorted(by_subject):
-        srows = by_subject[subject]
-        if not any(
-            r["predicate"] == "rdf:type" and r["object"] == "owl:ObjectProperty"
-            for r in srows
-        ):
-            continue
-        out.append(f'  <owl:ObjectProperty rdf:about="{uncurie(subject)}">')
-        for r in srows:
-            p, o, v, lang = r["predicate"], r["object"], r["value"], r["language"]
-            if p == "rdf:type" and o not in ("owl:ObjectProperty",):
-                out.append(f'    <rdf:type rdf:resource="{uncurie(o)}"/>')
-            elif p == "rdfs:label":
-                la = f' xml:lang="{lang}"' if lang else ""
-                out.append(f"    <rdfs:label{la}>{_esc(v)}</rdfs:label>")
-            elif p == "rdfs:subPropertyOf":
-                out.append(f'    <rdfs:subPropertyOf rdf:resource="{uncurie(o)}"/>')
-            elif p == "owl:propertyChainAxiom":
-                # walk the rdf:first/rdf:rest list back into Collection form
-                members, bn = [], o
-                while bn and bn != "rdf:nil":
-                    parts = {rr["predicate"]: rr["object"] for rr in bn_rows.get(bn, [])}
-                    if "rdf:first" in parts:
-                        members.append(parts["rdf:first"])
-                    bn = parts.get("rdf:rest")
-                out.append('    <owl:propertyChainAxiom rdf:parseType="Collection">')
-                for m in members:
-                    out.append(f'      <rdf:Description rdf:about="{uncurie(m)}"/>')
-                out.append("    </owl:propertyChainAxiom>")
-        out.append("  </owl:ObjectProperty>")
-    for subject in sorted(by_subject):
-        srows = by_subject[subject]
-        if not any(
-            r["predicate"] == "rdf:type" and r["object"] == "owl:NamedIndividual"
-            for r in srows
-        ):
-            continue
-        out.append(f'  <owl:NamedIndividual rdf:about="{uncurie(subject)}">')
-        for r in srows:
-            if r["predicate"] == "rdf:type" and r["object"] not in (
-                "owl:NamedIndividual",
-            ):
-                out.append(f'    <rdf:type rdf:resource="{uncurie(r["object"])}"/>')
-        out.append("  </owl:NamedIndividual>")
-    out.append("</rdf:RDF>")
-    return "\n".join(out)
-
-
 # --- functional syntax (reference analyze_non_core_ontologies.py:59-82) ----
 
 _FN_ONTOLOGY = re.compile(r"Ontology\(<([^>]+)>")

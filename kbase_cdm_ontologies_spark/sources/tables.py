@@ -133,22 +133,6 @@ def write_table(
     return _commit_snapshot(path_or_name, mode)
 
 
-def write_bucketed(
-    df: DataFrame, table_name: str, key: str, n_buckets: int = 32
-) -> None:
-    """Bucketed managed table: later equi-joins/aggregations on `key`
-    between tables bucketed the same way run WITHOUT a shuffle — the
-    co-location strategy for the pages/findings tables at 100 TB
-    (Iceberg: bucket(N, key) partition transform; Hive layout here)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def read_table(
     spark: SparkSession, path_or_name: str, schema: StructType | None = None
 ) -> DataFrame:

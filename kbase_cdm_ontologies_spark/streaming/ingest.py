@@ -74,8 +74,8 @@ def streaming_dedup(
     State stays bounded by the watermark horizon (Spark evicts dedup
     state older than the watermark), which is what makes exact dedup
     viable on an unbounded 10^12-doc feed: re-crawls inside the horizon
-    dedup exactly; older re-crawls are handled by the batch
-    incremental anti-join (plans/incremental.py). Returns the drained
+    dedup exactly; older re-crawls need a batch pass (exact_duplicates
+    over the landed table). Returns the drained
     deduplicated batch: (event_id, ts string, content_key) plus the
     key's own inputs (user_id, event_type, value_cents). WHICH
     duplicate survives is arrival-order dependent, so event_id/ts are

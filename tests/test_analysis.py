@@ -7,11 +7,7 @@ from kbase_cdm_ontologies_spark.functions.normalize import (
     classify_ontology_expr,
     normalize_iri_expr,
 )
-from kbase_cdm_ontologies_spark.operators.analysis import (
-    analyze_ontologies,
-    dependency_download_list,
-    predicate_stats,
-)
+from kbase_cdm_ontologies_spark.operators.analysis import analyze_ontologies
 
 
 def test_normalize_iri_reference_cases(spark):
@@ -68,17 +64,3 @@ def test_analyze_ontologies_fixture(corpus_dfs, corpus):
     # the referenced external terms are subjects of their own statements
     assert res["BBB"]["external_subjects_count"] >= 1
 
-
-def test_dependency_download_list(spark, corpus_dfs):
-    core = spark.createDataFrame([("AAA",)], ["onto"])
-    got = {r["onto"] for r in dependency_download_list(corpus_dfs["statements"], core).collect()}
-    # BBB references AAA (core -> excluded); CCC references BBB (not core)
-    assert "AAA" not in got
-
-
-def test_predicate_stats(corpus_dfs, corpus):
-    stats = {r["element"]: r["count_value"] for r in predicate_stats(corpus_dfs["statements"]).collect()}
-    from collections import Counter
-
-    want = Counter(s["predicate"] for s in corpus.statements)
-    assert stats == dict(want)

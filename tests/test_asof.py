@@ -1,9 +1,8 @@
-"""As-of join operator vs a plain-Python oracle (backward/forward,
-bucketed variant)."""
+"""As-of join operator vs a plain-Python oracle (backward/forward)."""
 
 from datetime import datetime
 
-from kbase_cdm_ontologies_spark.operators.asof import asof_join, asof_join_bucketed
+from kbase_cdm_ontologies_spark.operators.asof import asof_join
 
 
 def _ts(h, m=0):
@@ -47,23 +46,9 @@ def test_asof_forward(spark):
     assert got == {1: 2.0, 2: 3.0, 3: 4.0, 4: None, 5: None}
 
 
-def test_asof_bucketed_matches_plain_within_gap(spark):
-    """Bucketed variant equals the exact join when right-side gaps stay
-    within one bucket (1-day buckets here)."""
-    l, r = _dfs(spark)
-    want = {
-        (row["id"], row["px"]) for row in asof_join(l, r, "key", "ts", "rts").collect()
-    }
-    got = {
-        (row["id"], row["px"])
-        for row in asof_join_bucketed(l, r, "key", "ts", "rts", 86400).collect()
-    }
-    assert got == want
-
-
 def test_asof_preserves_duplicate_left_rows(spark):
     """pandas merge_asof / DuckDB ASOF preserve left cardinality even
-    for fully identical left rows — so must both variants."""
+    for fully identical left rows — so must asof_join."""
     l = spark.createDataFrame(
         [("a", datetime(2024, 1, 1, 12)), ("a", datetime(2024, 1, 1, 12))],
         ["key", "ts"],
@@ -72,4 +57,3 @@ def test_asof_preserves_duplicate_left_rows(spark):
         [("a", datetime(2024, 1, 1, 10), 1.0)], ["key", "rts", "px"]
     )
     assert asof_join(l, r, "key", "ts", "rts").count() == 2
-    assert asof_join_bucketed(l, r, "key", "ts", "rts", 86400 * 2).count() == 2

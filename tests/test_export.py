@@ -44,3 +44,13 @@ def test_export_array_columns_flattened(spark, tmp_path):
         .collect()
     }
     assert got["a"] == "x|y"
+
+
+def test_sorted_text_sink(spark, tmp_path):
+    from kbase_cdm_ontologies_spark.operators.export import sorted_text_sink
+
+    df = spark.createDataFrame([("b",), ("a",), ("c",), ("a",)], ["term"])
+    out = str(tmp_path / "terms")
+    sorted_text_sink(df, "term", out)
+    lines = [r["value"] for r in spark.read.text(out).collect()]
+    assert lines == ["a", "b", "c"]

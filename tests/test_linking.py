@@ -57,55 +57,6 @@ def test_fuzzy_exact_surface_scores_one(spark, corpus_dfs):
     assert exact and abs(exact[0]["sim"] - 1.0) < 1e-9
 
 
-def test_tfidf_context_rerank_disambiguates(spark):
-    """TF-IDF strategy: the shared alias 'omega factor' must resolve to
-    the term whose OTHER aliases overlap the page text."""
-    from kbase_cdm_ontologies_spark.operators.linking import (
-        link_triples_tfidf,
-        tfidf_context_scores,
-    )
-
-    alias = spark.createDataFrame(
-        [
-            ("AAA:1", "omega factor", 2, "AAA"),
-            ("BBB:1", "omega factor", 2, "BBB"),
-            ("AAA:1", "alpha kinase", 1, "AAA"),
-            ("BBB:1", "beta channel", 1, "BBB"),
-        ],
-        ["term_id", "alias_norm", "n_candidates", "source_onto"],
-    )
-    extracted = spark.createDataFrame(
-        [
-            ("u1", "the omega factor binds the alpha kinase pathway"),
-            ("u2", "omega factor opens the beta channel gate"),
-        ],
-        ["url", "extracted_text"],
-    )
-    triples = spark.createDataFrame(
-        [
-            ("u1", "omega factor", "kg:activates", "alpha kinase"),
-            ("u2", "omega factor", "kg:activates", "beta channel"),
-        ],
-        ["url", "subj_surface", "pred", "obj_surface"],
-    )
-    got = {
-        (r["url"], r["subj_id"], r["obj_id"])
-        for r in link_triples_tfidf(triples, alias, extracted).collect()
-    }
-    assert got == {("u1", "AAA:1", "AAA:1"), ("u2", "BBB:1", "BBB:1")}
-    # score surface: candidate pairs get comparable scores, right one wins
-    cand = spark.createDataFrame(
-        [("u1", "AAA:1"), ("u1", "BBB:1")], ["url", "term_id"]
-    )
-    s = {
-        r["term_id"]: r["tfidf_cosine"]
-        for r in tfidf_context_scores(
-            extracted, alias.select("term_id", "alias_norm"), cand
-        ).collect()
-    }
-    assert s["AAA:1"] > s["BBB:1"]
-
-
 # ----------------------------------------------- adversarial fixture
 
 def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
@@ -128,8 +79,8 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
     nouns = ["factor", "channel", "kinase", "receptor", "domain", "complex"]
     alias_rows = []  # (term_id, alias_norm, source_onto)
     unique_aliases = {o: [] for o in ontos}  # onto -> [(alias, term)]
-    # unique aliases: one per term, flavored by ontology so TF-IDF has
-    # signal; plus 12 ambiguous aliases shared by one term per ontology
+    # unique aliases: one per term, flavored by ontology so page context
+    # has signal; plus 12 ambiguous aliases shared by one term per ontology
     for oi, o in enumerate(ontos):
         for t in range(24):
             tid = f"{o}:{t:07d}"
@@ -152,7 +103,7 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
         alias_rows.append((tid, hub_alias, o))
         hub_owners[o] = tid
 
-    pages, mentions, triples, gold, typo_gold = [], [], [], [], []
+    mentions, triples, gold, typo_gold = [], [], [], []
     for p in range(n_pages):
         url = f"https://example.org/adv{p:04d}"
         dom = ontos[p % 3]
@@ -172,7 +123,6 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
         surfaces.append(hub_alias)
         for s in surfaces:
             mentions.append((url, s))
-        pages.append((url, " and ".join(surfaces) + "."))
         # triples: ambiguous subj × unique obj, hub subj × unique obj
         obj_a, obj_t = ctx[0]
         triples.append((url, amb_a, "kg:related_to", obj_a))
@@ -191,7 +141,6 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
     return dict(
         alias=alias,
         mentions=spark.createDataFrame(mentions, ["url", "alias_norm"]),
-        pages=spark.createDataFrame(pages, ["url", "extracted_text"]),
         triples=spark.createDataFrame(
             triples, ["url", "subj_surface", "pred", "obj_surface"]
         ),
@@ -216,20 +165,6 @@ def test_adversarial_context_linking_pr(spark):
     got = {
         (r["url"], r["subj_id"], r["pred"], r["obj_id"])
         for r in link_triples(fx["triples"], fx["alias"], fx["mentions"]).collect()
-    }
-    p, r = _link_pr(got, fx["gold"])
-    assert p >= 0.9 and r >= 0.9, (p, r)
-
-
-def test_adversarial_tfidf_linking_pr(spark):
-    """Same fixture through the TF-IDF cosine re-ranker (no mention
-    context, only page text vs candidate alias bags)."""
-    from kbase_cdm_ontologies_spark.operators.linking import link_triples_tfidf
-
-    fx = _adversarial_linking_fixture(spark)
-    got = {
-        (r["url"], r["subj_id"], r["pred"], r["obj_id"])
-        for r in link_triples_tfidf(fx["triples"], fx["alias"], fx["pages"]).collect()
     }
     p, r = _link_pr(got, fx["gold"])
     assert p >= 0.9 and r >= 0.9, (p, r)

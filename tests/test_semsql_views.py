@@ -1,5 +1,7 @@
 """semsql 18-table layout parity (reference outputs_test/tsv_tables)."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from kbase_cdm_ontologies_spark.operators.alias_dict import (
@@ -62,3 +64,9 @@ def test_populated_views(spark, corpus, corpus_dfs):
     # anonymous class expressions
     assert t["rdf_list_statement"].count() == 4
     assert t["term_association"].count() == 0  # empty-by-tier, schema kept
+    # per-predicate row counts of the statements table
+    stats = {
+        r["element"]: r["count_value"]
+        for r in t["rdf_level_summary_statistic"].collect()
+    }
+    assert stats == dict(Counter(s["predicate"] for s in corpus.statements))

@@ -1,4 +1,4 @@
-"""Similarity-search operators: brute-force exactness, LSH/IVF recall,
+"""Similarity-search operators: brute-force exactness, LSH recall,
 TF-IDF cosine sanity."""
 
 import math
@@ -53,15 +53,6 @@ def test_lsh_recall(spark, emb_df):
     assert len(got & true10) >= 2  # recall floor for 3 planes on random data
 
 
-def test_ivf_probes(spark, emb_df):
-    df, rows = emb_df
-    q = rows[5][1]
-    assigned, cents = similarity.ivf_index(df, n_centroids=8)
-    got = [r["vec_id"] for r in similarity.ivf_topk(assigned, cents, q, k=10, n_probe=8).collect()]
-    # probing ALL centroids == brute force
-    assert got == _py_topk(rows, q, 10)
-
-
 def test_tfidf_cosine(spark):
     docs = spark.createDataFrame(
         [
@@ -84,7 +75,7 @@ def test_tfidf_cosine(spark):
 @pytest.fixture(scope="module")
 def clustered_df(spark):
     """10 well-separated clusters — the realistic embedding geometry
-    where LSH/IVF earn their keep (uniform-random vectors have no
+    where LSH earns its keep (uniform-random vectors have no
     neighborhood structure to exploit)."""
     rng = random.Random(23)
     centers = [[rng.uniform(-1, 1) for _ in range(DIM)] for _ in range(10)]
@@ -130,34 +121,3 @@ def test_probe_sequence_properties():
     # probe 1 flips exactly one bit: the plane nearest the boundary
     assert sum(a != b for a, b in zip(qbits, probes[1])) == 1
 
-
-def test_ivf_kmeans_recall_at_10(spark, clustered_df):
-    """k-means-refined IVF with 4/10 probes reaches recall@10 >= 0.9 on
-    clustered data; refined centroids must not do worse than the raw
-    first-n seeding."""
-    df, rows = clustered_df
-    assigned_km, cents_km = similarity.ivf_index(df, n_centroids=10, n_iters=4)
-    assigned_raw, cents_raw = similarity.ivf_index(df, n_centroids=10, n_iters=0)
-    r_km, r_raw = [], []
-    for qi in (3, 11, 26):
-        q = rows[qi][1]
-        true10 = set(_py_topk(rows, q, 10))
-        got_km = {
-            r["vec_id"]
-            for r in similarity.ivf_topk(assigned_km, cents_km, q, k=10, n_probe=4).collect()
-        }
-        got_raw = {
-            r["vec_id"]
-            for r in similarity.ivf_topk(assigned_raw, cents_raw, q, k=10, n_probe=4).collect()
-        }
-        r_km.append(len(got_km & true10) / 10)
-        r_raw.append(len(got_raw & true10) / 10)
-    assert sum(r_km) / len(r_km) >= 0.9, (r_km, r_raw)
-    assert sum(r_km) >= sum(r_raw)
-
-
-def test_ivf_kmeans_deterministic(spark, clustered_df):
-    df, _ = clustered_df
-    _, c1 = similarity.ivf_index(df, n_centroids=6, n_iters=2)
-    _, c2 = similarity.ivf_index(df, n_centroids=6, n_iters=2)
-    assert c1 == c2

@@ -2,12 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from kbase_cdm_ontologies_spark.operators.skew import (
-    hybrid_skew_join,
-    salted_join,
-    salted_min_by_key,
-    top_keys,
-)
+from kbase_cdm_ontologies_spark.operators.skew import salted_join
 
 
 def _skewed(spark, n_hot=2000, n_cold=200):
@@ -44,28 +39,3 @@ def test_salted_join_equals_plain_join(spark):
     )
     assert salts == 8
 
-
-def test_top_keys_detects_hub(spark):
-    hot = {r["k"] for r in top_keys(_skewed(spark), "k", 100).collect()}
-    assert hot == {"HUB"}
-
-
-def test_hybrid_skew_join_equals_plain(spark):
-    big, small = _skewed(spark), _dim(spark)
-    want = {(r["k"], r["payload"], r["v"]) for r in big.join(small, "k").collect()}
-    got = {
-        (r["k"], r["payload"], r["v"])
-        for r in hybrid_skew_join(big, small, "k", hot_threshold=100, salt_buckets=4).collect()
-    }
-    assert got == want
-
-
-def test_salted_min(spark):
-    df = _skewed(spark)
-    want = {
-        (r["k"], r["m"]) for r in df.groupBy("k").agg(F.min("payload").alias("m")).collect()
-    }
-    got = {
-        (r["k"], r["min_payload"]) for r in salted_min_by_key(df, "k", "payload").collect()
-    }
-    assert got == want

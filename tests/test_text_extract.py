@@ -2,10 +2,27 @@
 (input_hint per-row invariant, checked via sha2 like
 reference scripts/version_tracker.py:14-20)."""
 
-from kbase_cdm_ontologies_spark.operators.text_extract import (
-    extract_text_stage,
-    verify_byte_identical,
-)
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from kbase_cdm_ontologies_spark.operators.text_extract import extract_text_stage
+
+
+def verify_byte_identical(pages: DataFrame, extracted: DataFrame) -> int:
+    """Count urls whose extracted text is NOT byte-identical to the
+    reference text column (must be 0). Uses sha2 on the JVM side —
+    the Spark analog of scripts/version_tracker.py:14-20 checksums."""
+    ref = pages.select("url", F.sha2("text", 256).alias("ref_sha"))
+    got = extracted.select("url", F.sha2("extracted_text", 256).alias("got_sha"))
+    return (
+        ref.join(got, "url", "full")
+        .where(
+            F.col("ref_sha").isNull()
+            | F.col("got_sha").isNull()
+            | (F.col("ref_sha") != F.col("got_sha"))
+        )
+        .count()
+    )
 
 
 def test_byte_identical(corpus_dfs):
@@ -34,9 +51,4 @@ def test_gzip_payload(spark, corpus):
         [(p["url"], p["warc_ts"], gzip.compress(p["html"]), p["text"], p["lang"])],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    from kbase_cdm_ontologies_spark.operators.text_extract import (
-        extract_text_stage,
-        verify_byte_identical,
-    )
-
     assert verify_byte_identical(gz, extract_text_stage(gz)) == 0
