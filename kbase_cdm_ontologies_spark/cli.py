@@ -250,7 +250,6 @@ def _final_report(args, corpus, out, ck, n_edges, n_nodes, export_report, wall) 
         "stages_run": ck.stages_run,
         "stages_skipped": ck.stages_skipped,
         "exported_tables": {r["table"]: r["rows"] for r in export_report},
-        "docs_per_sec": round(args.pages / wall, 2),
         "wall_sec": round(wall, 2),
     }
 

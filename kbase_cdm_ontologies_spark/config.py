@@ -1,8 +1,9 @@
 """Engine-level runtime configuration helpers.
 
-Every hybrid-regime operator (driver fast path vs distributed loop)
-reads its row-count cutoff from one Spark-conf namespace so cluster
-operators can retune the routing without code changes:
+The package reads exactly these seven Spark-conf keys; every other
+cut-off is a module constant next to its reader. The five hybrid-regime
+operators (driver fast path vs distributed loop) read their row-count
+cutoffs:
 
     spark.graft.transitiveClosure.localThreshold        (default 100k)
     spark.graft.keyedTransitiveClosure.localThreshold   (default 20k)
@@ -10,10 +11,12 @@ operators can retune the routing without code changes:
     spark.graft.connectedComponents.localThreshold      (default 500k)
     spark.graft.unionElimination.localThreshold         (default 200k)
 
-plus the byte-level driver guard
-``spark.graft.propertyClosure.driverMaxBytes`` (default 256 MB), and
-two keys of the entailment regimes (operators/closure.py,
-operators/delta_entail.py):
+plus the byte-level driver guard of property_closure
+
+    spark.graft.propertyClosure.driverMaxBytes          (default 256 MB)
+
+and the driver regime of both entailments (operators/closure.py,
+operators/delta_entail.py)
 
     spark.graft.deltaEntail.driverThreshold   (default 100k) rows up to
         which an entailment saturates on the driver in one collect:
@@ -21,8 +24,6 @@ operators/delta_entail.py):
         saved rtc, links and pruned statements (each); 0 turns the
         driver regime off (entail() runs its hybrid path, entail_delta
         its distributed delta path)
-    spark.graft.deltaEntail.coneKeyCap        (default 2M) cone keys up
-        to which the distributed delta path broadcasts its cone scan
 
 A 0 in any of the transitiveClosure, keyedTransitiveClosure,
 unionElimination or propertyClosure localThreshold keys, or
@@ -35,8 +36,6 @@ or distributed path.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
 
 
 def conf_threshold(df, key: str, default: int) -> int:

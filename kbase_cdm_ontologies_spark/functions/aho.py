@@ -1,13 +1,14 @@
 """Pure-Python Aho-Corasick automaton for batched dictionary matching.
 
-Built once per executor from the broadcast alias dictionary (the Spark
-analog of the reference's label/synonym statements — rdfs:label 10,576 +
+Matches the broadcast alias dictionary (the Spark analog of the
+reference's label/synonym statements — rdfs:label 10,576 +
 oio:*Synonym ~6,900 rows in outputs_test statements.parquet; SURVEY.md
-§2.3 "alias-dictionary match"). pyahocorasick isn't in the image, so
-this is a dict-of-dicts trie with BFS failure links; matching is
-O(len(text) + matches), independent of dictionary size — the property
-that makes mention detection scale to millions of aliases where a
-regex-alternation would not.
+§2.3 "alias-dictionary match"): `broadcast_alias_dictionary` ships the
+dictionary once per job, and `worker_dictionary` builds its automaton
+once per Python worker. The trie is a dict-of-dicts with BFS failure links;
+matching is O(len(text) + matches), independent of dictionary size —
+the property that makes mention detection scale to millions of aliases
+where a regex-alternation would not.
 
 Word-boundary semantics: a hit counts only if not flanked by [a-z0-9]
 (applied on the casefolded haystack), mirroring whole-word term mentions.
@@ -15,11 +16,14 @@ Word-boundary semantics: a hit counts only if not flanked by [a-z0-9]
 
 from __future__ import annotations
 
+import hashlib
+
 
 class AhoCorasick:
-    __slots__ = ("goto", "fail", "out")
+    __slots__ = ("goto", "fail", "out", "lens")
 
     def __init__(self, patterns: list[str]):
+        self.lens = [len(p) for p in patterns]
         # goto: list of dict char->state; out: list of list of pattern idx
         self.goto: list[dict[str, int]] = [{}]
         self.out: list[list[int]] = [[]]
@@ -53,43 +57,19 @@ class AhoCorasick:
                     self.fail[s] = 0
                 self.out[s] = self.out[s] + self.out[self.fail[s]]
 
-    def find(self, text: str, pattern_lens: list[int]) -> list[tuple[int, int]]:
-        """Yield (pattern_idx, start_offset) for every occurrence."""
+    def find(self, text: str) -> list[tuple[int, int]]:
+        """(pattern_idx, start_offset) of every occurrence."""
         res = []
         state = 0
-        goto, fail, out = self.goto, self.fail, self.out
+        goto, fail, out, lens = self.goto, self.fail, self.out, self.lens
         for i, ch in enumerate(text):
             while state and ch not in goto[state]:
                 state = fail[state]
             state = goto[state].get(ch, 0)
             if out[state]:
                 for pidx in out[state]:
-                    res.append((pidx, i - pattern_lens[pidx] + 1))
+                    res.append((pidx, i - lens[pidx] + 1))
         return res
-
-
-_WORDCH = set("abcdefghijklmnopqrstuvwxyz0123456789")
-
-try:  # optional C implementation (same automaton semantics) — not in
-    # this container's image; exercised wherever the wheel is present
-    import ahocorasick as _c_aho  # type: ignore
-except ImportError:
-    _c_aho = None
-
-
-class CAhoCorasick:
-    """pyahocorasick-backed drop-in (find() contract identical)."""
-
-    def __init__(self, patterns: list[str]):
-        self._a = _c_aho.Automaton()
-        for idx, pat in enumerate(patterns):
-            self._a.add_word(pat, (idx, len(pat)))
-        self._a.make_automaton()
-
-    def find(self, text: str, pattern_lens: list[int]) -> list[tuple[int, int]]:
-        return [
-            (idx, end - plen + 1) for end, (idx, plen) in self._a.iter(text)
-        ]
 
 
 class ScanFind:
@@ -105,12 +85,13 @@ class ScanFind:
     crossover favours AC only for large dictionaries, hence the
     build-site guard."""
 
-    __slots__ = ("patterns",)
+    __slots__ = ("patterns", "lens")
 
     def __init__(self, patterns: list[str]):
         self.patterns = patterns
+        self.lens = [len(p) for p in patterns]
 
-    def find(self, text: str, pattern_lens: list[int]) -> list[tuple[int, int]]:
+    def find(self, text: str) -> list[tuple[int, int]]:
         res = []
         for pidx, pat in enumerate(self.patterns):
             start = text.find(pat)
@@ -127,27 +108,59 @@ SCAN_FIND_MAX_PATTERNS = 128
 
 
 def build_automaton(patterns: list[str]):
-    """Fastest available automaton: C extension when installed; else
-    per-pattern C find-scans for small dictionaries; else the
+    """Per-pattern C find-scans for small dictionaries; else the
     pure-Python trie."""
-    if _c_aho is not None:
-        return CAhoCorasick(patterns)
     if len(patterns) <= SCAN_FIND_MAX_PATTERNS:
         return ScanFind(patterns)
     return AhoCorasick(patterns)
 
 
-def find_word_bounded(
-    ac, text_norm: str, patterns: list[str], pattern_lens: list[int]
-) -> list[tuple[int, int]]:
-    """Occurrences of patterns in casefolded text, whole-word only."""
+_WORDCH = set("abcdefghijklmnopqrstuvwxyz0123456789")
+
+
+def find_word_bounded(ac, text_norm: str) -> list[tuple[int, int]]:
+    """Occurrences of ac's patterns in casefolded text, whole-word
+    only."""
     hits = []
     n = len(text_norm)
-    for pidx, start in ac.find(text_norm, pattern_lens):
-        end = start + pattern_lens[pidx]
+    lens = ac.lens
+    for pidx, start in ac.find(text_norm):
+        end = start + lens[pidx]
         if start > 0 and text_norm[start - 1] in _WORDCH:
             continue
         if end < n and text_norm[end] in _WORDCH:
             continue
         hits.append((pidx, start))
     return hits
+
+
+def broadcast_alias_dictionary(alias) -> tuple:
+    """Collect alias(alias_norm, term_id) and broadcast it as sorted
+    patterns plus each pattern's sorted candidate terms. Returns the
+    (broadcast, key) handle `worker_dictionary` takes; the key is the
+    dictionary version (a Broadcast has no worker-side id in PySpark
+    4)."""
+    rows = alias.select("alias_norm", "term_id").distinct().collect()
+    by_pattern: dict[str, list[str]] = {}
+    for r in rows:
+        by_pattern.setdefault(r["alias_norm"], []).append(r["term_id"])
+    patterns = sorted(by_pattern)
+    pattern_terms = [sorted(by_pattern[p]) for p in patterns]
+    bcast = alias.sparkSession.sparkContext.broadcast((patterns, pattern_terms))
+    key = hashlib.sha256("\x00".join(patterns).encode()).hexdigest()
+    return bcast, key
+
+
+_CACHE: dict[str, tuple] = {}
+
+
+def worker_dictionary(bcast, key: str) -> tuple:
+    """(automaton, patterns, pattern_terms) of a broadcast dictionary,
+    built once per worker process and reused by every task it runs."""
+    cached = _CACHE.get(key)
+    if cached is None:
+        patterns, pattern_terms = bcast.value
+        cached = (build_automaton(patterns), patterns, pattern_terms)
+        _CACHE.clear()  # one dictionary version live per worker
+        _CACHE[key] = cached
+    return cached

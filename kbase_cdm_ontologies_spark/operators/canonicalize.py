@@ -211,11 +211,18 @@ def canonical_map(statements: DataFrame) -> DataFrame:
     return connected_components(eq)
 
 
+# Upper bound for apply_canonical's broadcast: ~5M short-string rows is
+# on the order of a few hundred MB serialized — comfortably inside a
+# driver/executor at typical cluster memory, and far below the sizes an
+# entity-linking canonical map reaches (1e8+).
+BROADCAST_MAX_ROWS = 5_000_000
+
+
 def apply_canonical(
     df: DataFrame,
     cmap: DataFrame,
     cols: list[str],
-    broadcast_max_rows: int | None = None,
+    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Rewrite id columns through the canonical map (identity when a
     node never merged).
@@ -225,11 +232,7 @@ def apply_canonical(
     rows). A canonical map produced by web-entity linking can reach
     billions of rows, where an unconditional broadcast OOMs the driver;
     that case takes a plain shuffled left join and AQE picks the
-    physical strategy. Default threshold: skew.BROADCAST_MAX_ROWS."""
-    from .skew import BROADCAST_MAX_ROWS
-
-    if broadcast_max_rows is None:
-        broadcast_max_rows = BROADCAST_MAX_ROWS
+    physical strategy."""
     # one count() decides the strategy for every column rewrite below
     small = cmap.count() <= broadcast_max_rows
     out = df

@@ -27,6 +27,8 @@ closure table is repartitioned by the join key each round.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,9 +41,15 @@ from ..plans.stratify import build_schedule, may_fire, merge_strata
 # per-phase wall clocks of the LAST entail()/property_closure() run —
 # cleared at entail() entry, attached to the pipeline's checkpoint
 # manifest (plans/pipeline.py m7_edges metrics) so a cluster operator
-# gets the phase breakdown without any env flag. The
-# SPARK_GRAFT_DEBUG_CLOSURE env only controls PRINTING.
+# gets the phase breakdown without any env flag.
 _PHASE_WALLS: dict[str, float] = {}
+
+# frontier rows up to which a flat property-closure round broadcasts
+# its key slices (2M short keys stay inside the broadcast budget)
+_BROADCAST_KEY_CAP = 2_000_000
+# premise-feed rows above which a property stratum runs alone through
+# its specialized evaluator instead of joining a fused batch
+_BATCH_THRESHOLD = 1_000_000
 
 
 def phase_walls() -> dict[str, float]:
@@ -204,10 +212,6 @@ def _seminaive_closure(
             F.col("b.o").alias("o"),
         )
 
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     news: list[DataFrame] = []
     owned: list[DataFrame] = []  # checkpoints created here — bounded cache
     # prior round's frontier count; callers that already counted their
@@ -220,7 +224,7 @@ def _seminaive_closure(
     try:
         return _seminaive_rounds(
             c, delta, keyed, keep_self, max_rounds, both_sides, op,
-            return_new, consolidate, cols, hop_join, debug, _time,
+            return_new, consolidate, cols, hop_join,
             news, owned, n_delta, n_c, tuner, anti_prefilter,
             broadcast_rows,
         )
@@ -230,12 +234,11 @@ def _seminaive_closure(
 
 def _seminaive_rounds(
     c, delta, keyed, keep_self, max_rounds, both_sides, op,
-    return_new, consolidate, cols, hop_join, debug, _time,
+    return_new, consolidate, cols, hop_join,
     news, owned, n_delta, n_c, tuner, anti_prefilter=False,
     broadcast_rows=200_000,
 ):
-    for rnd_i in range(max_rounds):
-        t0 = _time.time()
+    for _ in range(max_rounds):
         tuner.tune(n_c)
         # the stats-reset cuts (see plans/stats_cut.py) leave every loop
         # frame at defaultSizeInBytes, so Catalyst never auto-broadcasts
@@ -276,9 +279,6 @@ def _seminaive_rounds(
         n_delta = delta.count()
         if n_c is not None:
             n_c += n_delta
-        if debug:
-            print(f"[sn] {op} inner {rnd_i} delta={n_delta} "
-                  f"{_time.time() - t0:.1f}s", flush=True)
         if n_delta == 0:
             out_new = None
             if return_new:
@@ -1085,10 +1085,6 @@ def _linear_fixpoint(
     `_seminaive_closure` and applying it in one join.
 
     Returns (consolidated eager frame, row count)."""
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     spark = seed.sparkSession
 
     def _hop(d: DataFrame, d_small: bool) -> DataFrame:
@@ -1124,14 +1120,12 @@ def _linear_fixpoint(
     acc_upto = 1  # frames[:acc_upto] are folded into acc
     tuner = ShufflePartitionTuner(spark)
     try:
-        for rnd in range(cap):
-            t0 = _time.time()
+        for _ in range(cap):
             tuner.tune(n_static + n_delta)
             delta = _statscut(
                 _hop(delta, n_delta <= 200_000).dropDuplicates()
             )
             n_delta = delta.count()
-            cleansed = False
             if n_delta and (
                 static_closed
                 or (prev_n is not None and n_delta >= prev_n)
@@ -1142,15 +1136,7 @@ def _linear_fixpoint(
                     acc_upto = len(frames)
                 delta = _statscut(delta.join(acc, ["s", "o"], "left_anti"))
                 n_delta = delta.count()
-                cleansed = True
             prev_n = n_delta
-            if debug:
-                print(
-                    f"[lin] {op} {side} round {rnd} delta={n_delta}"
-                    f"{' (cleansed)' if cleansed else ''} "
-                    f"{_time.time() - t0:.1f}s",
-                    flush=True,
-                )
             if n_delta == 0:
                 out, n_out = _consolidate(frames)
                 for f in owned + frames[1:]:
@@ -1166,8 +1152,6 @@ def _linear_fixpoint(
     # cap hit (diameter > cap): doubling fallback — close the STATIC
     # side once (O(log diameter) rounds) and apply it in one join:
     # static* ∘ seed == seed ∪ static⁺ ∘ seed (and symmetrically).
-    if debug:
-        print(f"[lin] {op} cap {cap} hit — doubling fallback", flush=True)
     st_closed = _seminaive_closure(
         static_df, static_df, keyed=False, keep_self=True,
         max_rounds=40, op=f"{op}.fallback", n_input=n_static,
@@ -1228,10 +1212,6 @@ def _generic_property_fixpoint(
 
     Returns the closed frame (synthetic ``_:step_*`` chain-step rows
     RETAINED — the caller filters them with its final projection))."""
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     trans_list = sorted(transitive)
     chain_df = (
         F.broadcast(spark.createDataFrame(chains, ["p1", "p2", "r"]))
@@ -1293,7 +1273,6 @@ def _generic_property_fixpoint(
     tuner = ShufflePartitionTuner(spark)
     try:
         for rnd in range(flat_rounds):
-            t0 = _time.time()
             tuner.tune(n_delta if warm else n_r)
             d_small = n_delta is not None and n_delta <= 200_000
             # warm + no union rule: every rule premise that reads the
@@ -1309,12 +1288,9 @@ def _generic_property_fixpoint(
             # would blow the session's broadcast budget — fall back to
             # plain joins and let AQE pick the strategy from runtime
             # sizes.
-            bkey_cap = _conf_threshold(
-                r, "spark.graft.closure.broadcastKeyCap", 2_000_000
-            )
             _bc = (
                 F.broadcast
-                if (n_delta is not None and n_delta <= bkey_cap)
+                if (n_delta is not None and n_delta <= _BROADCAST_KEY_CAP)
                 else (lambda d: d)
             )
             if warm_slice:
@@ -1394,7 +1370,7 @@ def _generic_property_fixpoint(
                 # broadcast gets its own count (cheap: materialized)
                 _bc_new = (
                     F.broadcast
-                    if new_m.count() <= bkey_cap
+                    if new_m.count() <= _BROADCAST_KEY_CAP
                     else (lambda d: d)
                 )
                 r_slice = r.join(
@@ -1415,9 +1391,6 @@ def _generic_property_fixpoint(
                     prev_delta.unpersist()
                 except Exception:
                     pass
-            if debug:
-                print(f"[pc] flat round {rnd} delta={n_delta} "
-                      f"{_time.time() - t0:.1f}s", flush=True)
             if n_delta == 0:
                 # a COUNT, not seconds: keep it out of the per-phase
                 # wall-seconds namespace consumed by the manifest
@@ -1463,7 +1436,6 @@ def property_closure(
     union_members: dict[str, list[str]] | None = None,
     max_rounds: int = 10,
     local_threshold: int | None = None,
-    driver_max_bytes: int = 256 << 20,
     keep_steps: bool = False,
 ) -> DataFrame:
     """Saturate (s, p, o) existential edges under the EL property rules:
@@ -1487,10 +1459,10 @@ def property_closure(
     Hybrid execution like the other closure operators: an ontology's
     property-edge graph is dictionary-scale relative to the corpus
     (the reference's full test tier is ~1M base links), so below
-    local_threshold rows AND driver_max_bytes estimated payload
-    (config: spark.graft.propertyClosure.driverMaxBytes) the saturation
-    runs driver-side with the identical rule set. local_threshold=0
-    forces the distributed loop."""
+    local_threshold rows AND spark.graft.propertyClosure.driverMaxBytes
+    (default 256 MB) estimated payload the saturation runs driver-side
+    with the identical rule set. local_threshold=0 forces the
+    distributed loop."""
     spark = base_edges.sparkSession
     if local_threshold is None:
         local_threshold = _conf_threshold(
@@ -1513,18 +1485,12 @@ def property_closure(
     r = _statscut(
         base_edges.select("s", "p", "o").dropDuplicates(), eager=True
     )
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _tp = _time.time()
+    _tp = time.time()
 
     def _pphase(name: str) -> None:
         nonlocal _tp
-        now = _time.time()
+        now = time.time()
         _PHASE_WALLS["property_closure." + name] = round(now - _tp, 3)
-        if _dbg:
-            print(f"[pc-driver] {name} {now - _tp:.1f}s", flush=True)
         _tp = now
 
     _pphase("base_materialize")
@@ -1533,8 +1499,9 @@ def property_closure(
         if r.count() <= local_threshold:
             # bytes-aware driver guard: the row threshold alone could
             # admit multi-GB string payloads on a small-driver cluster
-            conf = spark.conf.get("spark.graft.propertyClosure.driverMaxBytes", None)
-            max_bytes = int(conf) if conf else driver_max_bytes
+            max_bytes = _conf_threshold(
+                spark, "spark.graft.propertyClosure.driverMaxBytes", 256 << 20
+            )
             est = r.select(
                 F.sum(F.length("s") + F.length("p") + F.length("o")).alias("b")
             ).collect()[0]["b"]
@@ -1685,9 +1652,6 @@ def property_closure(
             out = out.where(F.col("p").isin(*sorted(props)))
         return out
 
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    import time as _time
-
     # Driver-side per-property link counts (ONE action, schema-scale
     # result), maintained incrementally as strata derive. They buy two
     # things the plain stratum-per-component walk cannot afford (181
@@ -1698,7 +1662,7 @@ def property_closure(
     #   2. BATCH — contiguous runs of small fireable strata are fused
     #      into ONE generic semi-naive fixpoint (merge_strata): the
     #      batch pays a handful of actions total instead of ~4 each.
-    #      Only strata whose premise feed exceeds batchThreshold run
+    #      Only strata whose premise feed exceeds _BATCH_THRESHOLD run
     #      alone through their specialized (linear) evaluator — that
     #      is exactly the regime where O(frontier)-per-round shuffles
     #      beat the fused loop's O(accumulated) reshuffle.
@@ -1706,9 +1670,6 @@ def property_closure(
         row["p"]: row["cnt"]
         for row in r.groupBy("p").agg(F.count("*").alias("cnt")).collect()
     }
-    batch_threshold = _conf_threshold(
-        spark, "spark.graft.propertyClosure.batchThreshold", 1_000_000
-    )
 
     def _premises(st) -> set:
         prem = set(st.trans) | set(st.props)
@@ -1722,8 +1683,7 @@ def property_closure(
     pending: list = []
     pending_concl: set = set()
 
-    def run_unit(st, label: str) -> None:
-        t_st = _time.time()
+    def run_unit(st) -> None:
         comp = sorted(st.props)
         lift_sources = {p for p, _q in st.lifts}
         if st.kind == "generic":
@@ -1846,12 +1806,6 @@ def property_closure(
         for row in rows:
             prop_counts[row["p"]] = prop_counts.get(row["p"], 0) + row["cnt"]
             n_new += row["cnt"]
-        if debug:
-            print(
-                f"[pc] {label} {comp if len(comp) <= 6 else len(comp)} "
-                f"({st.kind}) new={n_new} {_time.time() - t_st:.1f}s",
-                flush=True,
-            )
         if n_new:
             link_frames.append(new)
 
@@ -1860,9 +1814,9 @@ def property_closure(
         if not pending:
             return
         if len(pending) == 1:
-            run_unit(pending[0], "stratum")
+            run_unit(pending[0])
         else:
-            run_unit(merge_strata(pending), f"batch[{len(pending)}]")
+            run_unit(merge_strata(pending))
         pending = []
         pending_concl = set()
 
@@ -1872,12 +1826,12 @@ def property_closure(
         has_links = {p for p, n in prop_counts.items() if n > 0} | pending_concl
         if not may_fire(st, has_links):
             continue
-        if sum(prop_counts.get(p, 0) for p in _premises(st)) > batch_threshold:
+        if sum(prop_counts.get(p, 0) for p in _premises(st)) > _BATCH_THRESHOLD:
             # big feed: flush the small batch first (it may feed this
             # stratum — dependency order), then run alone through the
             # specialized evaluator
             flush_pending()
-            run_unit(st, "stratum")
+            run_unit(st)
         else:
             pending.append(st)
             pending_concl |= set(st.props)
@@ -2218,28 +2172,26 @@ def entail(
     saturates on the driver (_driver_entail). The hybrid path below runs
     otherwise, over the driver pair cap or base guard, and for
     state_capture."""
-    import os as _os
-    import time as _time
-
     spark = statements.sparkSession
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _t = _time.time()
+    _t = time.time()
     _PHASE_WALLS.clear()
 
     def _phase(name: str, ns: str = "entail.") -> None:
         nonlocal _t
-        now = _time.time()
+        now = time.time()
         _PHASE_WALLS[ns + name] = round(now - _t, 3)
-        if _dbg:
-            print(f"[entail] {ns}{name} {now - _t:.1f}s", flush=True)
         _t = now
 
     # a 0 in any local threshold forces the distributed fixpoints, so
     # callers that force them through confs alone never run the driver
     forced = property_local_threshold == 0 or any(
-        _conf_threshold(spark, f"spark.graft.{k}.localThreshold", 1) == 0
-        for k in ("transitiveClosure", "keyedTransitiveClosure",
-                  "unionElimination", "propertyClosure")
+        _conf_threshold(spark, k, 1) == 0
+        for k in (
+            "spark.graft.transitiveClosure.localThreshold",
+            "spark.graft.keyedTransitiveClosure.localThreshold",
+            "spark.graft.unionElimination.localThreshold",
+            "spark.graft.propertyClosure.localThreshold",
+        )
     )
     driver_max = 0 if forced or state_capture is not None else _conf_threshold(
         spark, "spark.graft.deltaEntail.driverThreshold", 100_000

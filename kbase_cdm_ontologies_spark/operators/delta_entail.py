@@ -95,6 +95,11 @@ from .closure import (
     transitive_closure,
 )
 
+# cone keys up to which the distributed path broadcasts its cone scan:
+# ~2M interned keys is tens of MB framed, inside the session's
+# broadcast budget; 8M risked hundreds of MB per broadcast
+_CONE_KEY_CAP = 2_000_000
+
 _UNION_GROWTH = (
     "entail_delta: delta adds members to an existing union expression "
     "node — bnode-disjointness contract violated"
@@ -320,20 +325,8 @@ def entail_delta(
     saved corpus (the add-a-source contract; see module docstring).
     delta_class_nodes defaults to the delta's own `rdf:type owl:Class`
     declarations."""
-    import os as _os
-    import time as _time
-
     spark = delta_statements.sparkSession
     hierarchy_old, transitive_old, chains_old = state.schema
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _t = _time.time()
-
-    def _phase(name: str) -> None:
-        nonlocal _t
-        if _dbg:
-            now = _time.time()
-            print(f"[delta] {name} {now - _t:.1f}s", flush=True)
-            _t = now
 
     if delta_class_nodes is None:
         delta_class_nodes = (
@@ -365,7 +358,6 @@ def entail_delta(
         _anti_vs_big(pruned_delta, state.pruned, _SPO, "subject"),
         eager=True,
     )
-    _phase("prune+intern_delta")
     pruned_union = state.pruned.unionByName(pruned_delta)
     schema_rows = _statscut(
         state.schema_rows.unionByName(_schema_slice(pruned_delta))
@@ -374,7 +366,6 @@ def entail_delta(
     )
     hierarchy, transitive, chains = property_schema(schema_rows)
 
-    _phase("schema")
     # ---- static subclass edge delta ----------------------------------
     sub_all_d = pruned_delta.where(
         (F.col("predicate") == "rdfs:subClassOf") & F.col("object").isNotNull()
@@ -415,7 +406,6 @@ def entail_delta(
         _anti_vs_big(static_raw, state.sub, ["s", "o"], "s"), eager=True
     )
 
-    _phase("static_edges")
     # ---- new reflexive rows / class growth ---------------------------
     new_cls_only = _statscut(
         delta_class_nodes.join(state.class_nodes, "id", "left_anti"),
@@ -431,7 +421,6 @@ def entail_delta(
         .distinct()
         .select(F.col("n").alias("s"), F.col("n").alias("o"))
     )
-    _phase("reflexive")
 
     # ---- ONE cone scan of the saved closure --------------------------
     # The saved rtc is transitively closed, so every old segment of a
@@ -482,13 +471,10 @@ def entail_delta(
         .distinct()
     )
     k_o = suffix_keys.unionByName(restr_ids).distinct()
-    # default sized to the session's broadcast budget: ~2M interned
-    # keys is tens of MB framed; 8M risked hundreds of MB per broadcast
-    cone_cap = _conf_threshold(
-        state.rtc, "spark.graft.deltaEntail.coneKeyCap", 2_000_000
-    )
     n_keys = k_s.count() + k_o.count()
-    bc = (lambda d: F.broadcast(d)) if n_keys <= cone_cap else (lambda d: d)
+    bc = (
+        (lambda d: F.broadcast(d)) if n_keys <= _CONE_KEY_CAP else (lambda d: d)
+    )
     r_cone = _statscut(
         state.rtc
         .join(bc(k_s.withColumn("_fs", F.lit(True))), "s", "left")
@@ -520,14 +506,13 @@ def entail_delta(
     if n_wsubs:
         bc2 = (
             (lambda d: F.broadcast(d))
-            if n_wsubs <= cone_cap
+            if n_wsubs <= _CONE_KEY_CAP
             else (lambda d: d)
         )
         scan2 = state.rtc.join(bc2(r_suf_subjects), "s", "left_semi")
         base_known = _statscut(
             r_cone.unionByName(scan2).dropDuplicates(), eager=True
         )
-    _phase("cone_scan")
 
     # ---- incremental subclass closure ⊕ union elimination ------------
     f0 = _statscut(f0_raw.join(base_known, ["s", "o"], "left_anti"), eager=True)
@@ -592,7 +577,6 @@ def entail_delta(
     n_dr = delta_r.count()
     rtc_new = state.rtc.unionByName(delta_r)
 
-    _phase("subclass_extend")
     # ---- base existential link delta ---------------------------------
     # semi-naive over the three-premise compose rtc ∘ restr ∘ rtc
     # (rectangle decomposition: the delta takes each premise slot once,
@@ -658,7 +642,6 @@ def entail_delta(
             )
         )
 
-    _phase("base_links")
     # ---- schema-delta seeds: old links under NEW rules ---------------
     pairs_old = {(p, q) for p, qs in hierarchy_old.items() for q in qs if q != p}
     pairs_new = {(p, q) for p, qs in hierarchy.items() for q in qs if q != p}
@@ -689,7 +672,6 @@ def entail_delta(
             )
         )
 
-    _phase("schema_seeds")
     # ---- property fixpoint warm start --------------------------------
     if seed_parts:
         seed = seed_parts[0]
@@ -718,7 +700,6 @@ def entail_delta(
         )
         links_d = _statscut(links_d, eager=True)
 
-    _phase("property_warm")
     # ---- individual typing delta -------------------------------------
     ta_delta_raw = (
         pruned_delta.where(
@@ -766,7 +747,6 @@ def entail_delta(
         )
     )
 
-    _phase("individuals")
     # ---- output delta ------------------------------------------------
     named = ~F.col("s").startswith("_:") & ~F.col("o").startswith("_:")
     cls_flag = class_nodes_new.select(

@@ -23,30 +23,20 @@ pipeline uses the fused pass when no per-stage checkpoint is requested.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.aho import build_automaton, find_word_bounded
+from ..functions.aho import (
+    broadcast_alias_dictionary,
+    find_word_bounded,
+    worker_dictionary,
+)
 from ..functions.text_rules import extract_svo, extract_text, normalize_surface
 
-_CACHE: dict[str, tuple] = {}
-
 FUSED_SCHEMA = "url string, kind string, a string, b string, c string, n int"
-
-
-def _automaton(bcast, key):
-    cached = _CACHE.get(key)
-    if cached is None:
-        patterns, pattern_terms = bcast.value
-        ac = build_automaton(patterns)
-        cached = (ac, patterns, [len(p) for p in patterns], pattern_terms)
-        _CACHE.clear()
-        _CACHE[key] = cached
-    return cached
 
 
 def fused_doc_pass(
@@ -59,16 +49,7 @@ def fused_doc_pass(
     findings. When text_col is None the frozen HTML->text rule runs on
     the html column; pass text_col to skip extraction (pre-extracted
     corpora)."""
-    spark = pages.sparkSession
-    rows = alias.select("alias_norm", "term_id").distinct().collect()
-    by_pattern: dict[str, list[str]] = {}
-    for r in rows:
-        by_pattern.setdefault(r["alias_norm"], []).append(r["term_id"])
-    patterns = sorted(by_pattern)
-    pattern_terms = [sorted(by_pattern[p]) for p in patterns]
-    bcast = spark.sparkContext.broadcast((patterns, pattern_terms))
-    dict_key = hashlib.sha256("\x00".join(patterns).encode()).hexdigest()
-
+    bcast, dict_key = broadcast_alias_dictionary(alias)
     src = pages
     if lang_filter is not None:
         src = src.where(F.col("lang") == lang_filter)
@@ -76,14 +57,14 @@ def fused_doc_pass(
     src = src.select("url", payload)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac, pats, lens, terms = _automaton(bcast, dict_key)
+        ac, pats, terms = worker_dictionary(bcast, dict_key)
         for pdf in batches:
             urls, kinds, a_, b_, c_, n_ = [], [], [], [], [], []
             for url, raw in zip(pdf["url"], pdf[payload]):
                 text = raw if text_col else extract_text(bytes(raw))
                 tnorm = normalize_surface(text)
                 counts: dict[int, int] = {}
-                for pidx, _s in find_word_bounded(ac, tnorm, pats, lens):
+                for pidx, _s in find_word_bounded(ac, tnorm):
                     counts[pidx] = counts.get(pidx, 0) + 1
                 for pidx, n in counts.items():
                     for t in terms[pidx]:

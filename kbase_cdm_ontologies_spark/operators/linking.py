@@ -1,20 +1,13 @@
 """M5 — entity linking: surface -> ontology term.
 
-1. **Exact path** (`link_triples`, the one the pipeline runs):
-   surfaces that are dictionary aliases join the broadcast alias table
-   directly; an ambiguous alias (n_candidates > 1) is resolved by page
-   context — candidate score = number of distinct unambiguous aliases
-   on the same page from the candidate's source ontology, ties broken
-   by min term_id. All built-in ops: broadcast joins + one window; the
-   big (triples) side is never shuffled by alias key.
-
-2. **Fuzzy path** (`fuzzy_candidates` / `fuzzy_link_best`, the north
-   star's "MinHash-LSH blocking"; no run path calls it yet): surfaces
-   that are NOT dictionary aliases (typos, variants) are blocked
-   against the alias table with MinHash-LSH over char-3gram shingles
-   and re-ranked by exact n-gram Jaccard. Only same-signature pairs are
-   scored — never a cross-join of corpus surfaces against the
-   dictionary.
+`link_triples`: surfaces that are dictionary aliases join the
+broadcast alias table directly; an ambiguous alias (n_candidates > 1)
+is resolved by page context — candidate score = number of distinct
+unambiguous aliases on the same page from the candidate's source
+ontology, ties broken by min term_id. All built-in ops: broadcast
+joins + one window; the big (triples) side is never shuffled by alias
+key. A surface that is not a dictionary alias drops out, as in the
+corpus oracle (sources/corpus.py).
 
 Skew note: hub aliases (fixture hot alias; production analog =
 NCBITaxon-scale hub terms, reference README.md:104) concentrate join
@@ -68,85 +61,6 @@ def _resolve_side(
         joined.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(*keep, F.col("term_id").alias(out_col))
-    )
-
-
-def _char_ngrams(colname: str, n: int = 3):
-    """Character n-gram shingles of a (already normalized) surface
-    column, as an array — JVM-side sequence+transform (SQL expr: the
-    python substring() builder rejects column-valued positions)."""
-    return F.expr(
-        f"array_distinct(transform(sequence(0, greatest(length({colname}) - {n}, 0)), "
-        f"i -> substring({colname}, i + 1, {n})))"
-    )
-
-
-def fuzzy_candidates(
-    surfaces: DataFrame,
-    alias: DataFrame,
-    k_hashes: int = 12,
-    min_jaccard: float = 0.4,
-) -> DataFrame:
-    """MinHash-LSH blocking + n-gram-Jaccard scoring for surfaces that
-    are NOT exact dictionary aliases (typos, variant spellings) — the
-    north-star's "TF-IDF cosine + MinHash-LSH blocking" candidate path.
-
-    surfaces(surface_norm) x alias(term_id, alias_norm) ->
-    (surface_norm, term_id, alias_norm, sim) ranked by char-3gram
-    overlap. Blocking: md5-minhash over char-3gram shingles, one band
-    per hash; only same-signature pairs are scored, so the alias table
-    is never cross-joined against the corpus surfaces.
-    """
-
-    def sigs(df, col, out):
-        grams = df.select(F.col(col).alias(out), F.explode(_char_ngrams(col)).alias("g"))
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("g")))).alias(f"_s{s}")
-            for s in range(k_hashes)
-        ]
-        wide = grams.groupBy(out).agg(*aggs)
-        stack = ", ".join(f"{s}, _s{s}" for s in range(k_hashes))
-        return wide.select(out, F.expr(f"stack({k_hashes}, {stack}) AS (seed, sig)"))
-
-    s_sig = sigs(surfaces.select("surface_norm").distinct(), "surface_norm", "surface_norm")
-    a_sig = sigs(alias.select("alias_norm").distinct(), "alias_norm", "alias_norm")
-    blocked = (
-        s_sig.join(a_sig, ["seed", "sig"])
-        .select("surface_norm", "alias_norm")
-        .distinct()
-    )
-    # exact n-gram Jaccard re-rank on the blocked pairs only
-    pair = blocked.select(
-        "surface_norm",
-        "alias_norm",
-        _char_ngrams("surface_norm").alias("ga"),
-        _char_ngrams("alias_norm").alias("gb"),
-    )
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_union("ga", "gb"))
-    scored = pair.select(
-        "surface_norm",
-        "alias_norm",
-        (inter / union).alias("sim"),
-    ).where(F.col("sim") >= min_jaccard)
-    return scored.join(
-        F.broadcast(alias.select("alias_norm", "term_id").distinct()), "alias_norm"
-    ).select("surface_norm", "term_id", "alias_norm", "sim")
-
-
-def fuzzy_link_best(
-    surfaces: DataFrame,
-    alias: DataFrame,
-    **kwargs,
-) -> DataFrame:
-    """Best term per surface: candidates from fuzzy_candidates, ranked
-    by similarity then min term_id (deterministic)."""
-    cand = fuzzy_candidates(surfaces, alias, **kwargs)
-    w = Window.partitionBy("surface_norm").orderBy(F.desc("sim"), F.asc("term_id"))
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("surface_norm", "term_id", F.round("sim", 4).alias("sim"))
     )
 
 

@@ -3,9 +3,10 @@ inside ``mapInPandas``).
 
 North-star requirement: "batched trie/Aho-Corasick dictionary matching
 against a broadcast alias table". The automaton is built ONCE PER
-EXECUTOR from the broadcast (module-level cache keyed by broadcast id),
-then streamed over Arrow batches — O(text_len) per document regardless
-of dictionary size. No shuffle: a pure map over the pages table.
+WORKER from the broadcast (functions/aho.py's worker_dictionary cache,
+keyed by dictionary version), then streamed over Arrow batches —
+O(text_len) per document regardless of dictionary size. No shuffle: a
+pure map over the pages table.
 
 Output: mentions(url, term_id, alias_norm, n_hits) — one row per
 (document, matched alias, candidate term); ambiguous aliases emit one
@@ -19,24 +20,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.aho import build_automaton, find_word_bounded
+from ..functions.aho import (
+    broadcast_alias_dictionary,
+    find_word_bounded,
+    worker_dictionary,
+)
 from ..functions.text_rules import normalize_surface
 
-_AUTOMATON_CACHE: dict[str, tuple] = {}
-
 _OUT_SCHEMA = "url string, term_id string, alias_norm string, n_hits int"
-
-
-def _get_automaton(bcast, key: str):
-    cached = _AUTOMATON_CACHE.get(key)
-    if cached is None:
-        patterns, pattern_terms = bcast.value
-        ac = build_automaton(patterns)
-        lens = [len(p) for p in patterns]
-        cached = (ac, patterns, lens, pattern_terms)
-        _AUTOMATON_CACHE.clear()  # one dictionary version live per worker
-        _AUTOMATON_CACHE[key] = cached
-    return cached
 
 
 def detect_mentions(
@@ -46,33 +37,20 @@ def detect_mentions(
     lang_filter: str | None = "en",
 ) -> DataFrame:
     """extracted(url, <text_col>, lang) x broadcast alias -> mentions."""
-    spark = extracted.sparkSession
-    rows = alias.select("alias_norm", "term_id").distinct().collect()
-    by_pattern: dict[str, list[str]] = {}
-    for r in rows:
-        by_pattern.setdefault(r["alias_norm"], []).append(r["term_id"])
-    patterns = sorted(by_pattern)
-    pattern_terms = [sorted(by_pattern[p]) for p in patterns]
-    bcast = spark.sparkContext.broadcast((patterns, pattern_terms))
-    # dictionary-version key for the per-executor automaton cache
-    # (Broadcast has no worker-side id in PySpark 4)
-    import hashlib
-
-    dict_key = hashlib.sha256("\x00".join(patterns).encode()).hexdigest()
-
+    bcast, dict_key = broadcast_alias_dictionary(alias)
     src = extracted
     if lang_filter is not None:
         src = src.where(src["lang"] == lang_filter)
     src = src.select("url", text_col)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac, pats, lens, terms = _get_automaton(bcast, dict_key)
+        ac, pats, terms = worker_dictionary(bcast, dict_key)
         for pdf in batches:
             urls, tids, anorms, nhits = [], [], [], []
             for url, text in zip(pdf["url"], pdf[text_col]):
                 tnorm = normalize_surface(text)
                 counts: dict[int, int] = {}
-                for pidx, _start in find_word_bounded(ac, tnorm, pats, lens):
+                for pidx, _start in find_word_bounded(ac, tnorm):
                     counts[pidx] = counts.get(pidx, 0) + 1
                 for pidx, n in counts.items():
                     for t in terms[pidx]:

@@ -6,11 +6,6 @@
   bucket vectors; only same-bucket (± multi-probe) candidates are
   scored. Hyperplanes are derived deterministically from a seed via
   md5, so results are reproducible run-to-run.
-
-TF-IDF cosine (the north star's entity-linking scorer) is
-`tfidf_vectors` + `cosine_join` below, over sparse (id, term, weight)
-rows — pure joins/aggs, no UDF. No query or pipeline stage calls them
-yet: M5 links by exact alias plus page context (operators/linking.py).
 """
 
 from __future__ import annotations
@@ -153,58 +148,3 @@ def lsh_topk(
         .limit(k)
     )
 
-
-# --- TF-IDF (sparse, join-based) ---------------------------------------------
-
-def tfidf_vectors(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    broadcast_max_terms: int | None = None,
-) -> DataFrame:
-    """(id, term, w): tf * log((N+1)/(df+1)), L2-normalized per doc.
-
-    Size-aware df-join: the per-term document-frequency table is
-    vocabulary-sized — dictionary-scale for an ontology corpus but
-    unbounded for web text — so it is broadcast only when one counting
-    aggregate proves it small; otherwise it joins via shuffle on `term`
-    with AQE choosing the physical strategy."""
-    from .skew import BROADCAST_MAX_ROWS
-
-    if broadcast_max_terms is None:
-        broadcast_max_terms = BROADCAST_MAX_ROWS
-    toks = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), r"\s+")).alias("term"),
-        )
-        .where(F.col("term") != "")
-    )
-    tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = df.select(F.countDistinct(F.col(id_col)).alias("n")).collect()[0]["n"]
-    dfreq = tf.groupBy("term").agg(F.countDistinct("id").alias("df"))
-    vocab_n = dfreq.count()
-    dfj = F.broadcast(dfreq) if vocab_n <= broadcast_max_terms else dfreq
-    w = tf.join(dfj, "term").select(
-        "id",
-        "term",
-        (F.col("tf") * F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0))).alias("w"),
-    )
-    norms = w.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    return w.join(norms, "id").select(
-        "id", "term", (F.col("w") / F.col("nrm")).alias("w")
-    )
-
-
-def cosine_join(va: DataFrame, vb: DataFrame, min_cosine: float = 0.0) -> DataFrame:
-    """Sparse cosine between all pairs sharing at least one term:
-    (id_a, id_b, cosine). Inverted-index join — the sparse-vector
-    analog of a similarity self-join; term skew handled by AQE."""
-    a = va.select(F.col("id").alias("id_a"), "term", F.col("w").alias("wa"))
-    b = vb.select(F.col("id").alias("id_b"), "term", F.col("w").alias("wb"))
-    return (
-        a.join(b, "term")
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("cosine"))
-        .where(F.col("cosine") >= min_cosine)
-    )

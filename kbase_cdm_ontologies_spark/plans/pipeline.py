@@ -159,7 +159,7 @@ def run_pipeline(
         [closure, canonicalize, class_node_ids],
         compute_edges,
         # entailment phase walls land in the manifest: per-phase
-        # timings for the operator without SPARK_GRAFT_DEBUG_CLOSURE
+        # timings for the operator without a rerun
         metrics_fn=closure.phase_walls,
     )
     nodes = stage(

@@ -63,6 +63,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# _ts spreads files of this size range. Below the minimum the serial
+# scan is already sub-100ms and the exchange is pure overhead (measured:
+# kg_mention_counts 0.42->0.79 s at sf0.1 with an unconditional
+# spread); the maximum caps the exchange the spread buys parallelism
+# with.
+_SPREAD_MIN_BYTES = 4 * 1024 * 1024
+_SPREAD_MAX_BYTES = 512 * 1024 * 1024
+
+
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table scan with input-skew remedy (guide §2.5) for queries whose
     PER-ROW work dominates (regex/JSON parsing, token explode, Python
@@ -75,22 +84,15 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     so this is a no-op at cluster scale. Cheap-per-row scan+aggregate
     queries keep the plain `_t` scan: for them the round-robin exchange
     costs more than the parallelism it buys (measured: events_daily
-    0.87→1.91 s, q1 0.84→1.32 s at sf1.0). Bounds are conf-tunable
-    (spark.graft.scanSpread.{maxRowGroups,maxBytes}); maxBytes caps the
-    exchange this buys parallelism with."""
+    0.87→1.91 s, q1 0.84→1.32 s at sf1.0). The spread applies to files
+    of at most a quarter as many row groups as cores, between
+    _SPREAD_MIN_BYTES and _SPREAD_MAX_BYTES."""
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     par = spark.sparkContext.defaultParallelism
-    from .config import conf_threshold as _ct
-
-    max_rgs = _ct(spark, "spark.graft.scanSpread.maxRowGroups", max(par // 4, 1))
-    max_bytes = _ct(spark, "spark.graft.scanSpread.maxBytes", 512 * 1024 * 1024)
-    # below this, the serial scan is already sub-100ms and the exchange
-    # is pure overhead (measured: kg_mention_counts 0.42->0.79 s at
-    # sf0.1 with an unconditional spread)
-    min_bytes = _ct(spark, "spark.graft.scanSpread.minBytes", 4 * 1024 * 1024)
+    max_rgs = max(par // 4, 1)
     rgs, size = _row_groups(path)
-    if 0 < rgs <= max_rgs and min_bytes <= size <= max_bytes:
+    if 0 < rgs <= max_rgs and _SPREAD_MIN_BYTES <= size <= _SPREAD_MAX_BYTES:
         return df.repartition(par)
     return df
 

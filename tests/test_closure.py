@@ -293,8 +293,10 @@ def test_property_edges_propagate_through_subclass(spark):
 
 def test_property_closure_bytes_guard_falls_back_to_distributed(spark):
     """The driver fast path is guarded by estimated payload bytes as
-    well as rows: with driver_max_bytes=1 the saturation must run the
-    distributed fixpoint and still produce the identical result."""
+    well as rows: with spark.graft.propertyClosure.driverMaxBytes=1 the
+    saturation must run the distributed fixpoint and still produce the
+    identical result."""
+    from kbase_cdm_ontologies_spark.operators import closure
     from kbase_cdm_ontologies_spark.operators.closure import property_closure
 
     edges = [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "d")]
@@ -305,10 +307,18 @@ def test_property_closure_bytes_guard_falls_back_to_distributed(spark):
         (r["s"], r["p"], r["o"])
         for r in property_closure(df, **kwargs).collect()
     }
-    via_guard = {
-        (r["s"], r["p"], r["o"])
-        for r in property_closure(df, **kwargs, driver_max_bytes=1).collect()
-    }
+    assert "property_closure.collect" in closure.phase_walls()
+    key = "spark.graft.propertyClosure.driverMaxBytes"
+    closure._PHASE_WALLS.clear()
+    spark.conf.set(key, "1")
+    try:
+        via_guard = {
+            (r["s"], r["p"], r["o"])
+            for r in property_closure(df, **kwargs).collect()
+        }
+    finally:
+        spark.conf.unset(key)
+    assert "property_closure.collect" not in closure.phase_walls()
     assert via_guard == via_driver
     assert ("a", "p", "d") in via_guard  # transitivity actually closed
 

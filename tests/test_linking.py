@@ -1,16 +1,6 @@
-"""Entity linking: exact path (ambiguity resolution) + fuzzy path
-(MinHash-LSH blocked, n-gram re-ranked)."""
+"""Entity linking: ambiguity resolution by page context."""
 
-from pyspark.sql import functions as F
-
-from kbase_cdm_ontologies_spark.operators.alias_dict import (
-    build_alias_dict,
-    with_candidate_counts,
-)
-from kbase_cdm_ontologies_spark.operators.linking import (
-    fuzzy_candidates,
-    fuzzy_link_best,
-)
+from kbase_cdm_ontologies_spark.operators.alias_dict import with_candidate_counts
 
 
 def test_ambiguous_alias_resolved_by_context(spark, corpus, corpus_dfs):
@@ -27,44 +17,14 @@ def test_ambiguous_alias_resolved_by_context(spark, corpus, corpus_dfs):
     _ = amb
 
 
-def test_fuzzy_candidates_find_typos(spark, corpus_dfs):
-    alias = with_candidate_counts(build_alias_dict(corpus_dfs["statements"]))
-    real = [r["alias_norm"] for r in alias.limit(5).collect()]
-    # introduce character-level typos: swap two middle characters
-    def typo(s):
-        mid = len(s) // 2
-        return s[: mid - 1] + s[mid] + s[mid - 1] + s[mid + 1 :]
-
-    surfaces = spark.createDataFrame(
-        [(typo(a),) for a in real] + [("zzzz qqqq",)], ["surface_norm"]
-    )
-    best = {
-        r["surface_norm"]: r["term_id"]
-        for r in fuzzy_link_best(surfaces, alias, min_jaccard=0.3).collect()
-    }
-    amap = {r["alias_norm"]: r["term_id"] for r in alias.collect()}
-    hits = sum(1 for a in real if best.get(typo(a)) == amap[a])
-    assert hits >= 4  # typo'd surfaces link back to their true term
-    assert "zzzz qqqq" not in best  # garbage stays unlinked
-
-
-def test_fuzzy_exact_surface_scores_one(spark, corpus_dfs):
-    alias = with_candidate_counts(build_alias_dict(corpus_dfs["statements"]))
-    a0 = alias.first()["alias_norm"]
-    surfaces = spark.createDataFrame([(a0,)], ["surface_norm"])
-    cand = fuzzy_candidates(surfaces, alias).collect()
-    exact = [r for r in cand if r["alias_norm"] == a0]
-    assert exact and abs(exact[0]["sim"] - 1.0) < 1e-9
-
-
 # ----------------------------------------------- adversarial fixture
 
 def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
     """Controlled-ambiguity linking corpus (FIXTURES.md §'adversarial
     linking'): 3 ontologies × 24 terms; 12 aliases shared across
     ontologies (2-3 candidates each), ONE hub alias shared by all
-    three ontologies and mentioned on most pages (skew), per-page
-    typo'd surfaces, and pages with a contaminated context (an alias
+    three ontologies and mentioned on most pages (skew), and pages
+    with a contaminated context (an alias
     from a non-dominant ontology). Gold links are known by
     construction: an ambiguous surface's true term is the candidate
     from the page's dominant ontology."""
@@ -103,7 +63,7 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
         alias_rows.append((tid, hub_alias, o))
         hub_owners[o] = tid
 
-    mentions, triples, gold, typo_gold = [], [], [], []
+    mentions, triples, gold = [], [], []
     for p in range(n_pages):
         url = f"https://example.org/adv{p:04d}"
         dom = ontos[p % 3]
@@ -129,11 +89,6 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
         gold.append((url, amb_owners[dom], "kg:related_to", obj_t))
         triples.append((url, hub_alias, "kg:part_of", obj_a))
         gold.append((url, hub_owners[dom], "kg:part_of", obj_t))
-        # a typo'd surface of a dominant unique alias (middle-char swap)
-        ta, tt = ctx[1]
-        mid = len(ta) // 2
-        typo = ta[: mid - 1] + ta[mid] + ta[mid - 1] + ta[mid + 1:]
-        typo_gold.append((typo, tt))
 
     alias = with_candidate_counts(
         spark.createDataFrame(alias_rows, ["term_id", "alias_norm", "source_onto"])
@@ -145,7 +100,6 @@ def _adversarial_linking_fixture(spark, seed=1234, n_pages=120):
             triples, ["url", "subj_surface", "pred", "obj_surface"]
         ),
         gold=set(gold),
-        typo_gold=typo_gold,
     )
 
 
@@ -168,21 +122,3 @@ def test_adversarial_context_linking_pr(spark):
     }
     p, r = _link_pr(got, fx["gold"])
     assert p >= 0.9 and r >= 0.9, (p, r)
-
-
-def test_adversarial_fuzzy_typos_pr(spark):
-    """Typo'd surfaces (middle-char swap of real aliases) through the
-    MinHash-LSH + Jaccard re-rank path: >= 0.9 of them must link back
-    to their true term, and garbage surfaces must stay unlinked."""
-    fx = _adversarial_linking_fixture(spark)
-    garbage = [("qqq www zzz",), ("xxxyyy zzz",)]
-    surfaces = spark.createDataFrame(
-        [(s,) for s, _t in fx["typo_gold"]] + garbage, ["surface_norm"]
-    )
-    best = {
-        r["surface_norm"]: r["term_id"]
-        for r in fuzzy_link_best(surfaces, fx["alias"], min_jaccard=0.3).collect()
-    }
-    hits = sum(1 for s, t in fx["typo_gold"] if best.get(s) == t)
-    assert hits / len(fx["typo_gold"]) >= 0.9, hits
-    assert all(g[0] not in best for g in garbage)

@@ -82,21 +82,6 @@ def test_apply_canonical_size_aware_broadcast(spark):
     )
 
 
-def test_tfidf_size_aware_dfreq_join(spark):
-    """Wide-vocabulary corpora must take the shuffle path for the
-    document-frequency join (no unconditional vocabulary broadcast)."""
-    from kbase_cdm_ontologies_spark.operators.similarity import tfidf_vectors
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i} tok{i+1} shared") for i in range(30)], ["doc_id", "text"]
-    )
-    vecs_shuffle = tfidf_vectors(docs, "doc_id", "text", broadcast_max_terms=3)
-    vecs_bcast = tfidf_vectors(docs, "doc_id", "text", broadcast_max_terms=10_000)
-    a = {(r["id"], r["term"]): round(r["w"], 9) for r in vecs_shuffle.collect()}
-    b = {(r["id"], r["term"]): round(r["w"], 9) for r in vecs_bcast.collect()}
-    assert a == b and len(a) > 0
-
-
 @pytest.mark.parametrize(
     "name", ["kg_mentions_operator"]
 )

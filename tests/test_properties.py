@@ -55,10 +55,8 @@ def test_aho_equals_regex(patterns, text_words):
     haystack (the property the mention oracle relies on)."""
     text = " ".join(text_words)
     ac = AhoCorasick(patterns)
-    lens = [len(p) for p in patterns]
     got = sorted(
-        (patterns[pidx], start)
-        for pidx, start in find_word_bounded(ac, text, patterns, lens)
+        (patterns[pidx], start) for pidx, start in find_word_bounded(ac, text)
     )
     want = []
     for p in patterns:
@@ -80,20 +78,18 @@ def test_scanfind_equals_aho(patterns, text_words):
     from kbase_cdm_ontologies_spark.functions.aho import ScanFind
 
     text = " ".join(text_words)
-    lens = [len(p) for p in patterns]
     ac = AhoCorasick(patterns)
     sf = ScanFind(patterns)
-    assert sorted(ac.find(text, lens)) == sorted(sf.find(text, lens))
+    assert sorted(ac.find(text)) == sorted(sf.find(text))
 
 
 def test_scanfind_overlapping_nested():
     from kbase_cdm_ontologies_spark.functions.aho import ScanFind
 
     patterns = ["aa", "aaa", "machine", "machine learning", "learning"]
-    lens = [len(p) for p in patterns]
     text = "aaaa machine learning"
     ac, sf = AhoCorasick(patterns), ScanFind(patterns)
-    got_ac, got_sf = sorted(ac.find(text, lens)), sorted(sf.find(text, lens))
+    got_ac, got_sf = sorted(ac.find(text)), sorted(sf.find(text))
     assert got_ac == got_sf
     assert (0, 0) in got_sf and (0, 1) in got_sf and (0, 2) in got_sf  # "aa" x3
     assert (1, 0) in got_sf and (1, 1) in got_sf                      # "aaa" x2

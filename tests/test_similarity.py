@@ -1,5 +1,4 @@
-"""Similarity-search operators: brute-force exactness, LSH recall,
-TF-IDF cosine sanity."""
+"""Similarity-search operators: brute-force exactness, LSH recall."""
 
 import math
 import random
@@ -51,25 +50,6 @@ def test_lsh_recall(spark, emb_df):
     got = {r["vec_id"] for r in similarity.lsh_topk(df, q, k=10, n_planes=3).collect()}
     assert 0 in got  # the query vector itself shares its own bucket
     assert len(got & true10) >= 2  # recall floor for 3 planes on random data
-
-
-def test_tfidf_cosine(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "apple banana apple"),
-            (2, "apple banana apple"),
-            (3, "cherry durian elderberry"),
-        ],
-        ["id", "text"],
-    )
-    v = similarity.tfidf_vectors(docs, "id", "text")
-    sims = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.cosine_join(v, v).collect()
-    }
-    assert abs(sims[(1, 2)] - 1.0) < 1e-9
-    assert abs(sims[(1, 1)] - 1.0) < 1e-9
-    assert (1, 3) not in sims  # no shared terms
 
 
 @pytest.fixture(scope="module")
