@@ -1,12 +1,11 @@
 """Engine-level runtime configuration helpers.
 
-The package reads exactly these seven Spark-conf keys; every other
-cut-off is a module constant next to its reader. The five hybrid-regime
+The package reads exactly these six Spark-conf keys; every other
+cut-off is a module constant next to its reader. Four hybrid-regime
 operators (driver fast path vs distributed loop) read their row-count
 cutoffs:
 
     spark.graft.transitiveClosure.localThreshold        (default 100k)
-    spark.graft.keyedTransitiveClosure.localThreshold   (default 20k)
     spark.graft.propertyClosure.localThreshold          (default 2M)
     spark.graft.connectedComponents.localThreshold      (default 500k)
     spark.graft.unionElimination.localThreshold         (default 200k)
@@ -25,8 +24,8 @@ operators/delta_entail.py)
         driver regime off (entail() runs its hybrid path, entail_delta
         its distributed delta path)
 
-A 0 in any of the transitiveClosure, keyedTransitiveClosure,
-unionElimination or propertyClosure localThreshold keys, or
+A 0 in any of the transitiveClosure, unionElimination or
+propertyClosure localThreshold keys, or
 entail(property_local_threshold=0), also turns entail()'s driver
 regime off, so a caller that forces the distributed fixpoints through
 these confs alone runs them. Both driver regimes saturate property

@@ -88,12 +88,12 @@ def _local_union_find(rows) -> list[tuple]:
     return [(x, find(x)) for x in parent]
 
 
+# large/small-star rounds before connected_components declares divergence
+_CC_ROUNDS = 30
+
+
 def connected_components(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-    local_threshold: int | None = None,
+    pairs: DataFrame, local_threshold: int | None = None
 ) -> DataFrame:
     """pairs(src, dst) undirected -> (id, canonical) for every node
     appearing in pairs; canonical = min id of the component.
@@ -108,8 +108,8 @@ def connected_components(
     pairs at the default threshold) finishes in milliseconds locally.
     Set local_threshold=0 to force the fully distributed loop.
 
-    max_rounds=30 bounds the loop (log2 of any practical component
-    count); a non-converged exit raises — the divergence alarm the
+    30 rounds bound the loop (log2 of any practical component count);
+    a non-converged exit raises — the divergence alarm the
     build plan calls for (SURVEY.md §7.4).
 
     local_threshold=None reads
@@ -123,12 +123,12 @@ def connected_components(
     # BigInteger stats blow-up the cut guards against cannot occur, and
     # dropping it saves one checkpoint job per call
     nodes = (
-        pairs.select(F.col(src).alias("u"))
-        .unionByName(pairs.select(F.col(dst).alias("u")))
+        pairs.select(F.col("src").alias("u"))
+        .unionByName(pairs.select(F.col("dst").alias("u")))
         .distinct()
     )
     e = _statscut(
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
         .dropDuplicates()
     )
@@ -164,7 +164,7 @@ def connected_components(
             local_rows = probe
     if not local:
         sig_prev = _sig(e)
-        for _ in range(max_rounds):
+        for _ in range(_CC_ROUNDS):
             if sig_prev[0] <= local_threshold:
                 local = True
                 break
@@ -194,7 +194,7 @@ def connected_components(
             schema=e.select("u", F.col("v").alias("canonical")).schema,
         )
     elif not converged:
-        raise RuntimeError(f"connected_components: no convergence in {max_rounds} rounds")
+        raise RuntimeError(f"connected_components: no convergence in {_CC_ROUNDS} rounds")
     else:
         stars = e.groupBy("u").agg(F.min("v").alias("canonical"))
     roots = nodes.join(stars, "u", "left_anti").select(

@@ -50,6 +50,9 @@ _BROADCAST_KEY_CAP = 2_000_000
 # premise-feed rows above which a property stratum runs alone through
 # its specialized evaluator instead of joining a fused batch
 _BATCH_THRESHOLD = 1_000_000
+# subclass-closure / union-elimination alternations before a union
+# fixpoint is declared divergent (both regimes)
+_UNION_ROUNDS = 5
 
 
 def phase_walls() -> dict[str, float]:
@@ -112,15 +115,12 @@ def _frame(spark, rows, names) -> DataFrame:
     )
 
 
-def _local_closure(
-    rows: list[tuple], pair_cap: int, keep_self: bool = False
-) -> list[tuple] | None:
+def _local_closure(rows: list[tuple], pair_cap: int) -> list[tuple] | None:
     """Driver-side BFS closure over collected (key, s, o) edges; returns
     None when the closure exceeds pair_cap (dense graph -> the caller
     falls back to the distributed loop). Used for contracted/tail
     inputs where iterative Spark rounds are pure scheduler latency.
-    keep_self=True keeps (s, s) pairs reachable via cycles/self-edges
-    (property-edge semantics: x ⊑ ∃p.x is a real entailment)."""
+    Strict: (s, s) pairs reachable through cycles are dropped."""
     adj: dict = {}
     for k, s, o in rows:
         adj.setdefault(k, {}).setdefault(s, set()).add(o)
@@ -135,8 +135,7 @@ def _local_closure(
                     continue
                 seen.add(x)
                 stack.extend(g.get(x, ()))
-            if not keep_self:
-                seen.discard(s)
+            seen.discard(s)
             out.extend((k, s, o) for o in seen)
             if len(out) > pair_cap:
                 return None
@@ -323,14 +322,11 @@ def _seminaive_rounds(
 
 
 def transitive_closure(
-    edges: DataFrame,
-    src: str = "s",
-    dst: str = "o",
-    max_rounds: int = 20,
-    local_threshold: int | None = None,
+    edges: DataFrame, local_threshold: int | None = None
 ) -> DataFrame:
-    """All (s, o) pairs with a directed path s ->+ o (non-reflexive).
-    Semi-naive frontier doubling: max_rounds=20 covers diameter 2^20.
+    """All (s, o) pairs of edges(s, o) with a directed path s ->+ o
+    (non-reflexive). Semi-naive frontier doubling: 20 rounds cover
+    diameter 2^20.
 
     Hybrid execution like connected_components: edge sets under
     local_threshold are closed with one driver-side BFS (guarded by a
@@ -343,7 +339,7 @@ def transitive_closure(
             edges, "spark.graft.transitiveClosure.localThreshold", 100_000
         )
     c = _statscut(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("o"))
+        edges.select("s", "o")
         .where(F.col("s") != F.col("o"))
         .dropDuplicates()
     )
@@ -355,22 +351,7 @@ def transitive_closure(
                 c.sparkSession, [(s, o) for _k, s, o in closed], c.schema
             )
     return _seminaive_closure(
-        c, c, keyed=False, keep_self=False, max_rounds=max_rounds,
-        n_input=n_c,
-    )
-
-
-def subclass_edges(pruned: DataFrame) -> DataFrame:
-    """Asserted subclass edges between named classes (blank-node
-    restriction subjects/objects excluded — those feed restrictions())."""
-    return (
-        pruned.where(
-            (F.col("predicate") == "rdfs:subClassOf")
-            & F.col("object").isNotNull()
-            & ~F.col("subject").startswith("_:")
-            & ~F.col("object").startswith("_:")
-        )
-        .select(F.col("subject").alias("s"), F.col("object").alias("o"))
+        c, c, keyed=False, keep_self=False, max_rounds=20, n_input=n_c,
     )
 
 
@@ -420,14 +401,12 @@ def expression_edges(pruned: DataFrame) -> tuple[DataFrame, DataFrame]:
     return inter_edges.unionByName(union_edges).dropDuplicates(), union_membership
 
 
-def _local_union_elimination(
-    edges: set, members: dict, max_rounds: int
-) -> tuple[set, set]:
+def _local_union_elimination(edges: set, members: dict) -> tuple[set, set]:
     """Driver-side union-right elimination fixpoint: same semantics as
     the distributed loop below (a union node gains the COMMON
     reflexive-transitive supers of its members), over Python sets.
     Returns (augmented edge set, its strict transitive closure)."""
-    for _ in range(max_rounds):
+    for _ in range(_UNION_ROUNDS):
         # cap sized like transitive_closure's (5M at a 100k threshold):
         # 10M pairs at the 200k-edge routing threshold keeps the driver
         # reach index under ~1 GB before falling back to distributed
@@ -452,12 +431,12 @@ def _local_union_elimination(
             return edges, {(s, o) for _k, s, o in closed}
         edges = edges | derived
     raise RuntimeError(
-        f"union_eliminated_subclass: no fixpoint in {max_rounds} rounds"
+        f"union_eliminated_subclass: no fixpoint in {_UNION_ROUNDS} rounds"
     )
 
 
 def union_eliminated_subclass(
-    sub: DataFrame, union_membership: DataFrame, max_rounds: int = 5,
+    sub: DataFrame, union_membership: DataFrame,
     local_threshold: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Interleave subclass closure with union-right elimination:
@@ -487,7 +466,7 @@ def union_eliminated_subclass(
         mem: dict = {}
         for r in union_membership.collect():
             mem.setdefault(r["bn"], set()).add(r["member"])
-        out_edges, out_tc = _local_union_elimination(edges, mem, max_rounds)
+        out_edges, out_tc = _local_union_elimination(edges, mem)
         if out_edges is not None:
             spark = sub.sparkSession
             return (
@@ -509,7 +488,7 @@ def union_eliminated_subclass(
     # broadcast hint keeps the join from shuffling the closure side
     # (the cut frames' reset size estimates would otherwise force SMJ)
     member_b = F.broadcast(union_membership)
-    for _ in range(max_rounds):
+    for _ in range(_UNION_ROUNDS):
         rtc = tc.unionByName(member_refl)
         common = (
             member_b.join(rtc, F.col("member") == F.col("s"))
@@ -550,7 +529,7 @@ def union_eliminated_subclass(
     # _seminaive_closure: a non-fixpoint must fail loudly in BOTH
     # regimes, never silently return an under-derived edge set
     raise RuntimeError(
-        f"union_eliminated_subclass: no fixpoint in {max_rounds} rounds"
+        f"union_eliminated_subclass: no fixpoint in {_UNION_ROUNDS} rounds"
     )
 
 
@@ -571,40 +550,26 @@ def restriction_axioms(pruned: DataFrame) -> DataFrame:
 
 
 def keyed_transitive_closure(
-    edges: DataFrame,
-    key: str = "p",
-    src: str = "s",
-    dst: str = "o",
-    max_rounds: int = 20,
-    local_threshold: int | None = None,
-    keep_self: bool = False,
+    edges: DataFrame, local_threshold: int = 20_000
 ) -> DataFrame:
-    """Per-key path-doubling transitive closure: within every key group
-    (one group per transitive property), all (s, o) with a path s ->+ o.
-    One DataFrame loop closes EVERY transitive property simultaneously —
-    the join key is (key, mid node), so hub middle nodes of one property
-    don't serialize the others, and AQE's skew-join splits hot (p, mid)
-    keys at scale. Small inputs take the driver-BFS fast path (same
-    hybrid pattern as transitive_closure).
-
-    keep_self=True keeps (s, s) paths (cycles / asserted self-edges) —
-    required for property-edge semantics where x ⊑ ∃p.x is a real
-    entailment; False gives the strict closure used for subclass."""
-    if local_threshold is None:
-        local_threshold = _conf_threshold(
-            edges, "spark.graft.keyedTransitiveClosure.localThreshold", 20_000
-        )
-    strip = (lambda df: df) if keep_self else (
-        lambda df: df.where(F.col("s") != F.col("o"))
-    )
+    """Per-key path-doubling transitive closure of edges(p, s, o):
+    within every key group (one group per transitive property), all
+    strict (s, o) with a path s ->+ o. One DataFrame loop closes EVERY
+    transitive property simultaneously — the join key is (key, mid
+    node), so hub middle nodes of one property don't serialize the
+    others, and AQE's skew-join splits hot (p, mid) keys at scale.
+    Inputs of at most local_threshold edges take the driver-BFS fast
+    path (same hybrid pattern as transitive_closure); 0 forces the
+    distributed loop."""
     c = _statscut(
-        strip(edges.select(F.col(key).alias("p"), F.col(src).alias("s"), F.col(dst).alias("o")))
+        edges.select("p", "s", "o")
+        .where(F.col("s") != F.col("o"))
         .dropDuplicates()
     )
     n_c = c.count() if local_threshold else None
     if local_threshold and n_c <= local_threshold:
         closed = _local_closure(
-            [(r["p"], r["s"], r["o"]) for r in c.collect()], 5_000_000, keep_self
+            [(r["p"], r["s"], r["o"]) for r in c.collect()], 5_000_000
         )
         if closed is not None:
             return _arrow_df(c.sparkSession, closed, c.schema)
@@ -613,7 +578,7 @@ def keyed_transitive_closure(
     # applies to sort-merge joins — the hint produced a measured
     # one-task straggler (>10 min) on the reference corpus
     return _seminaive_closure(
-        c, c, keyed=True, keep_self=keep_self, max_rounds=max_rounds,
+        c, c, keyed=True, keep_self=False, max_rounds=20,
         op="keyed_transitive_closure", n_input=n_c,
     )
 
@@ -759,7 +724,6 @@ def _local_property_saturation(
     hierarchy: dict[str, set[str]],
     transitive: set[str],
     chains: list[tuple[str, str, str]],
-    union_members: dict[str, list[str]] | None = None,
     keep_steps: bool = False,
 ) -> set[tuple]:
     """Interning wrapper around the saturation core: every node and
@@ -786,11 +750,6 @@ def _local_property_saturation(
     }
     trans_i = {iid(t) for t in transitive}
     chains_i = [(iid(a), iid(b), iid(c)) for a, b, c in chains]
-    um_i = (
-        {iid(bn): [iid(m) for m in ms] for bn, ms in union_members.items()}
-        if union_members
-        else union_members
-    )
     # node ids may be non-strings (int keys in generic graph tables);
     # synthetic step props are always strings
     step_i = {
@@ -799,7 +758,7 @@ def _local_property_saturation(
         if isinstance(k, str) and k.startswith("_:step_")
     }
     out_i = _local_property_saturation_core(
-        links_i, hier_i, trans_i, chains_i, um_i,
+        links_i, hier_i, trans_i, chains_i,
         set() if keep_steps else step_i,
     )
     rev = {v: k for k, v in interned.items()}
@@ -811,26 +770,13 @@ def _local_property_saturation_core(
     hierarchy: dict,
     transitive: set,
     chains: list[tuple],
-    union_members: dict | None,
     step_props: set,
 ) -> set[tuple]:
     """Driver-side saturation of the property rules (SubRole lift,
-    per-property BFS transitivity, subrole-expanded chains, and the
-    union link rule: a union expression node inherits the COMMON
-    property links of its members — Whelk derives these, and they are
-    the last ~120 recall edges of the reference's golden output) — the
-    same rule set as the distributed loop, validated against it by the
-    fuzz tests and against the reference's golden output by
-    scripts/reference_parity_oracle.py.
-
-    NOTE on union semantics: this permissive common-link rule is a
-    sound OWL-EL entailment set but BROADER than Whelk's disjunction
-    elimination, which only sees subsumption into structurally
-    interned concepts. entail() therefore does NOT use it — it gets
-    Whelk-exact behavior from canonicalize_expressions +
-    union_eliminated_subclass instead. The rule remains for the
-    standalone property-closure operator, where completeness beats
-    reference mimicry."""
+    per-property BFS transitivity, subrole-expanded chains) — the same
+    rule set as the distributed loop, validated against it by the fuzz
+    tests and against the reference's golden output by
+    scripts/reference_parity_oracle.py."""
     import collections
     import itertools
 
@@ -885,38 +831,12 @@ def _local_property_saturation_core(
             rules_by_p1[p].append((ps1, ps2, r))
         for p in ps2:
             rules_by_p2[p].append((ps1, ps2, r))
-    unions_by_member: dict[str, list] = collections.defaultdict(list)
-    for bn, ms in (union_members or {}).items():
-        for m in set(ms):
-            unions_by_member[m].append(bn)
-
-    def union_common(bn) -> set:
-        ms = union_members[bn]
-        common: set | None = None
-        for m in ms:
-            lm = {
-                (p, o) for p, os in by_src_pred.get(m, {}).items() for o in os
-            }
-            common = lm if common is None else (common & lm)
-            if not common:
-                return set()
-        return common or set()
 
     dirty = dict.fromkeys(transitive, True)
     emitted: dict[str, set] = {t: set() for t in transitive}
     delta: set | None = None  # None = first round (everything is new)
     while True:
         new = set()
-        if union_members:
-            touched = (
-                set(union_members)
-                if delta is None
-                else {bn for s, _p, _o in delta for bn in unions_by_member.get(s, ())}
-            )
-            for bn in touched:
-                for p, o in union_common(bn):
-                    if (bn, p, o) not in links:
-                        new.add((bn, p, o))
         for t in transitive:
             # reachability over every sub-property edge of t (premise
             # subrole expansion), emitted at t — full-depth in one BFS.
@@ -1021,20 +941,6 @@ def _chain_compose(
         .select(F.col("a.s").alias("s"), F.col("r").alias("p"), F.col("b.o").alias("o"))
     )
     return left.unionByName(right)
-
-
-def _union_links(union_df, card, full: DataFrame) -> DataFrame:
-    """(bn, p, o) where EVERY member of union bn carries (member, p, o);
-    union_df is schema-scale (broadcast), the join output is only the
-    members' links, the count-distinct is map-side combinable."""
-    return (
-        union_df.join(full, F.col("member") == F.col("s"))
-        .groupBy("bn", "p", "o")
-        .agg(F.countDistinct("member").alias("n"))
-        .join(card, "bn")
-        .where(F.col("n") == F.col("k"))
-        .select(F.col("bn").alias("s"), "p", "o")
-    )
 
 
 def _linear_fixpoint(
@@ -1182,19 +1088,16 @@ def _generic_property_fixpoint(
     transitive: set,
     chains: list,
     lift_rows: list,
-    union_df,
-    card,
-    max_rounds: int,
     seed_delta: DataFrame | None = None,
     return_new: bool = False,
 ):
     """Global semi-naive fixpoint over ALL property rules at once —
-    the evaluator for mutually-recursive strata and for union-rule
-    schemas (which defeat stratification; see plans/stratify.py). One
-    plan and ONE action per round: Trans (frontier ⋈ closure, both
-    sides, doubling preserved), Chain, Union and the SubRole lift all
-    derive from the same frontier, the raw derivations are lifted,
-    deduped once, and anti-joined against the accumulated set.
+    the evaluator for mutually-recursive strata and fused batches of
+    small strata (see plans/stratify.py), and the warm start of
+    entail_delta. One plan and ONE action per round: Trans (frontier ⋈
+    closure, both sides, doubling preserved), Chain and the SubRole
+    lift all derive from the same frontier, the raw derivations are
+    lifted, deduped once, and anti-joined against the accumulated set.
 
     seed_delta: warm-start frontier for INCREMENTAL maintenance — `r`
     is then an already-saturated link set (closed under every rule,
@@ -1267,22 +1170,14 @@ def _generic_property_fixpoint(
         news.append(delta)
     # flat rounds interleave chain depth WITH log2(transitive diameter)
     # instead of multiplying them; 64 covers diameter 2^64 of pure
-    # transitivity or 64 chain/union alternations — far past any real
+    # transitivity or 64 chain alternations — far past any real
     # ontology, and each round is one cheap action
-    flat_rounds = max(max_rounds, 64)
+    flat_rounds = 64
     tuner = ShufflePartitionTuner(spark)
     try:
         for rnd in range(flat_rounds):
             tuner.tune(n_delta if warm else n_r)
             d_small = n_delta is not None and n_delta <= 200_000
-            # warm + no union rule: every rule premise that reads the
-            # accumulated relation joins on s == delta.o or o == delta.s,
-            # so ONE flag-scan keyed on the (materialized) frontier's
-            # endpoints extracts every row this round can touch — the
-            # trans/chain composes then read the cone slice instead of
-            # scanning r once per rule branch (the union rule reads all
-            # of r by definition, so it keeps the full frame)
-            warm_slice = warm and union_df is None
             # byte-aware broadcast guard (keys are frontier endpoints,
             # so n_delta bounds their count): a frontier past the cap
             # would blow the session's broadcast budget — fall back to
@@ -1293,7 +1188,13 @@ def _generic_property_fixpoint(
                 if (n_delta is not None and n_delta <= _BROADCAST_KEY_CAP)
                 else (lambda d: d)
             )
-            if warm_slice:
+            # warm: every rule premise that reads the accumulated
+            # relation joins on s == delta.o or o == delta.s, so ONE
+            # flag-scan keyed on the (materialized) frontier's endpoints
+            # extracts every row this round can touch — the trans/chain
+            # composes then read the cone slice instead of scanning r
+            # once per rule branch
+            if warm:
                 kd_o = _bc(delta.select(F.col("o").alias("s")).distinct())
                 kd_s = _bc(
                     delta.select("s").distinct().select(F.col("s").alias("o"))
@@ -1341,8 +1242,6 @@ def _generic_property_fixpoint(
                 parts.append(
                     _chain_compose(chain_df, p1s, p2s, delta, r_cmp, scratch, d_small)
                 )
-            if union_df is not None:
-                parts.append(_union_links(union_df, card, r))
             if parts:
                 new = parts[0]
                 for extra in parts[1:]:
@@ -1433,19 +1332,17 @@ def property_closure(
     hierarchy: dict[str, set[str]],
     transitive: set[str],
     chains: list[tuple[str, str, str]],
-    union_members: dict[str, list[str]] | None = None,
-    max_rounds: int = 10,
-    local_threshold: int | None = None,
+    # keep_steps is fifth because bench.py (frozen) calls
+    # property_closure(base, hierarchy, transitive, chains, None,
+    # local_threshold=0): its positional None is a falsy keep_steps
     keep_steps: bool = False,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Saturate (s, p, o) existential edges under the EL property rules:
 
       SubRole:   (x, p, y), p ⊑* q               ⟹ (x, q, y)
       Trans:     q transitive: (x,q,y), (y,q,z)  ⟹ (x, q, z)
       Chain:     p1 o p2 ⊑ r: (x,p1,y), (y,p2,z) ⟹ (x, r, z)
-      Union:     u = (m1 ∪ .. ∪ mk): every mi has (mi,p,o) ⟹ (u,p,o)
-                 (union_members; Whelk derives these common links and
-                 chains compose through the union node)
 
     Transitivity is closed by per-property semi-naive frontier doubling
     (O(log diam) rounds, all transitive properties in one keyed loop);
@@ -1462,8 +1359,12 @@ def property_closure(
     local_threshold rows AND spark.graft.propertyClosure.driverMaxBytes
     (default 256 MB) estimated payload the saturation runs driver-side
     with the identical rule set. local_threshold=0 forces the
-    distributed loop."""
+    distributed loop. keep_steps keeps the synthetic ``_:step_*``
+    chain-step rows (entail_delta's warm start needs them)."""
     spark = base_edges.sparkSession
+    # this call's phases only: drop what an earlier call left behind
+    for k in [k for k in _PHASE_WALLS if k.startswith("property_closure.")]:
+        del _PHASE_WALLS[k]
     if local_threshold is None:
         local_threshold = _conf_threshold(
             base_edges, "spark.graft.propertyClosure.localThreshold", 2_000_000
@@ -1494,7 +1395,7 @@ def property_closure(
         _tp = now
 
     _pphase("base_materialize")
-    needs_fixpoint = bool(transitive or chains or union_members)
+    needs_fixpoint = bool(transitive or chains)
     if local_threshold and needs_fixpoint:
         if r.count() <= local_threshold:
             # bytes-aware driver guard: the row threshold alone could
@@ -1516,8 +1417,7 @@ def property_closure(
                 )
                 _pphase("collect")
                 closed = _local_property_saturation(
-                    rows_in, hierarchy, transitive, chains, union_members,
-                    keep_steps=keep_steps,
+                    rows_in, hierarchy, transitive, chains, keep_steps=keep_steps
                 )
                 _pphase("saturate")
                 # sorted: set-iteration order varies with string
@@ -1544,46 +1444,16 @@ def property_closure(
     p1s = {c[0] for c in chains}
     p2s = {c[1] for c in chains}
 
-    def compose_chains_delta(
-        d: DataFrame, full: DataFrame, scratch: bool, d_small: bool = False
-    ) -> DataFrame:
-        return _chain_compose(chain_df, p1s, p2s, d, full, scratch, d_small)
-
-    union_df = card = None
-    if union_members:
-        u_rows = [(bn, m) for bn, ms in union_members.items() for m in set(ms)]
-        if u_rows:
-            union_df = F.broadcast(spark.createDataFrame(u_rows, ["bn", "member"]))
-            card = F.broadcast(
-                spark.createDataFrame(
-                    [(bn, len(set(ms))) for bn, ms in union_members.items() if ms],
-                    ["bn", "k"],
-                )
-            )
-
-    def derive_union_links(full: DataFrame) -> DataFrame:
-        return _union_links(union_df, card, full)
-
     def close_transitive_delta(
-        full: DataFrame, d: DataFrame, scratch: bool,
-        exclude: DataFrame | None = None,
+        full: DataFrame, d: DataFrame, scratch: bool
     ) -> DataFrame:
         # incremental keyed TC: full's transitive subset is closed from
         # prior rounds except for derivations involving d's edges.
         # Returns ONLY the newly-derived pairs — the closure itself
         # lives in `r`; hauling it back through the outer loop's
         # dedup/expand/anti would shuffle closure-sized frames per round.
-        # `exclude`: pairs this closure ITSELF emitted last round — the
-        # relation is already closed w.r.t. them, so feeding them back
-        # as frontier only re-derives known ancestors (measured on the
-        # reference corpus: 553 s composing a 179k-row delta against
-        # the closed relation to discover 1,792 genuinely-new pairs,
-        # all of which come from the NON-closure rows of the delta).
         c_t = _statscut(full.where(F.col("p").isin(*transitive)))
-        d_t = d.where(F.col("p").isin(*transitive))
-        if exclude is not None:
-            d_t = d_t.join(exclude, ["s", "p", "o"], "left_anti")
-        d_t = _statscut(d_t)
+        d_t = _statscut(d.where(F.col("p").isin(*transitive)))
         _c, new = _seminaive_closure(
             c_t, d_t, keyed=True, keep_self=True, max_rounds=20,
             both_sides=not scratch, op="property_closure.trans",
@@ -1596,13 +1466,11 @@ def property_closure(
     # into its transitive supers, so one expand -> TC -> expand closes
     # all of T in one shot. A single chain pass then suffices unless a
     # chain target (or one of its supers) is transitive or re-enters a
-    # chain slot — only then does the outer fixpoint loop run. Union
-    # links can feed chains and other unions, so their presence forces
-    # the fixpoint too.
+    # chain slot — only then does the outer fixpoint loop run.
     def up(p: str) -> set[str]:
         return hierarchy.get(p, {p}) | {p}
 
-    one_pass = union_df is None and all(
+    one_pass = all(
         not (up(c[2]) & transitive) and not (up(c[2]) & (p1s | p2s))
         for c in chains
     )
@@ -1618,7 +1486,9 @@ def property_closure(
             # frame on BOTH sides — without it the whole upstream plan
             # (scan + expands + TC) executes twice in one job
             new = _statscut(expand_hierarchy(new.dropDuplicates()))
-            new = new.unionByName(compose_chains_delta(new, new, scratch=True))
+            new = new.unionByName(
+                _chain_compose(chain_df, p1s, p2s, new, new, scratch=True)
+            )
         out = expand_hierarchy(new.dropDuplicates())
         return out if keep_steps else out.where(~F.col("p").startswith("_:step_"))
 
@@ -1626,22 +1496,11 @@ def property_closure(
     # Compile the rule set into an SCC-condensed schedule and evaluate
     # strata in dependency order (see plans/stratify.py). Single-
     # property recursion runs through the O(frontier + static-edges)
-    # linear fixpoint; mutually-recursive components and union-rule
-    # schemas run the global fused semi-naive loop. Regime-equality is
-    # enforced by the fuzz suites (random schemas vs a pure-Python
-    # saturation in BOTH regimes) and by reference parity.
-    sched = build_schedule(hierarchy, transitive, chains, union_members)
-    if sched is None:
-        # union rules defeat stratification: every lift is active and
-        # links can first meet at any lifted property
-        closed = _generic_property_fixpoint(
-            spark, r, transitive, chains, hier_rows, union_df, card,
-            max_rounds,
-        )
-        return closed if keep_steps else closed.where(
-            ~F.col("p").startswith("_:step_")
-        )
-
+    # linear fixpoint; mutually-recursive components run the global
+    # fused semi-naive loop. Regime-equality is enforced by the fuzz
+    # suites (random schemas vs a pure-Python saturation in BOTH
+    # regimes) and by reference parity.
+    sched = build_schedule(hierarchy, transitive, chains)
     link_frames: list[DataFrame] = [r]
 
     def links_slice(props: set) -> DataFrame:
@@ -1695,8 +1554,7 @@ def property_closure(
             )
             sub = _statscut(links_slice(needed), eager=True)
             closed = _generic_property_fixpoint(
-                spark, sub, st.trans, st.chains, st.lifts, None, None,
-                max_rounds,
+                spark, sub, st.trans, st.chains, st.lifts
             )
             new = _statscut(
                 closed.where(F.col("p").isin(*comp)).join(
@@ -2188,7 +2046,6 @@ def entail(
         _conf_threshold(spark, k, 1) == 0
         for k in (
             "spark.graft.transitiveClosure.localThreshold",
-            "spark.graft.keyedTransitiveClosure.localThreshold",
             "spark.graft.unionElimination.localThreshold",
             "spark.graft.propertyClosure.localThreshold",
         )
@@ -2473,7 +2330,7 @@ def _local_entail(
     sub |= expr
     sub |= {(a, d) for a, prop, _c in restr for d in doms.get(prop, ())}
     phase("sub-edges+domain")
-    sub, tc = _local_union_elimination(sub, union_members, 5)
+    sub, tc = _local_union_elimination(sub, union_members)
     if sub is None:
         return None
     phase("subclass_tc")

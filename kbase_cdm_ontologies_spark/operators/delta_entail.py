@@ -99,6 +99,9 @@ from .closure import (
 # ~2M interned keys is tens of MB framed, inside the session's
 # broadcast budget; 8M risked hundreds of MB per broadcast
 _CONE_KEY_CAP = 2_000_000
+# subclass-closure / union-elimination alternations of the distributed
+# path before the delta fixpoint is declared divergent
+_OUTER_ROUNDS = 10
 
 _UNION_GROWTH = (
     "entail_delta: delta adds members to an existing union expression "
@@ -185,19 +188,14 @@ class EntailState:
 
 
 def entail_with_state(
-    statements: DataFrame,
-    class_nodes: DataFrame,
-    property_local_threshold: int | None = None,
+    statements: DataFrame, class_nodes: DataFrame
 ) -> tuple[DataFrame, EntailState]:
     """Full entail() that also returns the saturated EntailState for
     later entail_delta() calls. The edge output is identical to
     entail()'s."""
     cap: dict = {}
     edges = _statscut(
-        entail(
-            statements, class_nodes, property_local_threshold,
-            state_capture=cap,
-        ),
+        entail(statements, class_nodes, state_capture=cap),
         eager=True,
     )
     state = EntailState(
@@ -312,7 +310,6 @@ def entail_delta(
     state: EntailState,
     delta_statements: DataFrame,
     delta_class_nodes: DataFrame | None = None,
-    max_outer_rounds: int = 10,
 ) -> tuple[DataFrame, EntailState]:
     """Extend a saturated entailment with new statements — returns the
     full updated edge set (== entail() on the union, asserted by
@@ -538,7 +535,7 @@ def entail_delta(
                 F.countDistinct("member").alias("k")
             )
         )
-    for _rnd in range(max_outer_rounds):
+    for _rnd in range(_OUTER_ROUNDS):
         if n_frontier > 0:
             _, new = _seminaive_closure(
                 known, frontier, keyed=False, keep_self=False,
@@ -568,7 +565,7 @@ def entail_delta(
     else:
         raise RuntimeError(
             f"entail_delta: subclass/union fixpoint did not converge "
-            f"in {max_outer_rounds} rounds"
+            f"in {_OUTER_ROUNDS} rounds"
         )
     delta_r = news[0]
     for f in news[1:]:
@@ -696,7 +693,7 @@ def entail_delta(
         links_new, links_d = _generic_property_fixpoint(
             spark, state.links, transitive, chains,
             [(p, q) for p, qs in hierarchy.items() for q in qs if q != p],
-            None, None, max_rounds=10, seed_delta=seed, return_new=True,
+            seed_delta=seed, return_new=True,
         )
         links_d = _statscut(links_d, eager=True)
 

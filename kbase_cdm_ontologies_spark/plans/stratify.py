@@ -37,13 +37,9 @@ for its recursive structure:
   each other through chains) — the global semi-naive loop, restricted
   to the component's property slice.
 
-Union rules (``union_members``) aggregate over every member's links
-each round and can first meet at any lifted property, which makes
-every lift active and every property potentially co-recursive —
-``build_schedule`` returns ``None`` and the caller keeps the single
-global fixpoint. (The reference corpus routes its class-level union
-semantics through ``union_eliminated_subclass``, not through property
-links, so this bail-out is rare in practice.)
+Class-level union semantics never reach this program: entail() derives
+them as subclass edges (``union_eliminated_subclass``) before the
+property rules run.
 """
 
 from __future__ import annotations
@@ -182,20 +178,12 @@ def _tarjan_sccs(nodes: set, edges: dict) -> list:
     return comps
 
 
-def build_schedule(
-    hierarchy: dict,
-    transitive: set,
-    chains: list,
-    union_members: dict | None,
-) -> Schedule | None:
-    """Compile the rule set into a stratified schedule, or ``None``
-    when union rules force the single global fixpoint (see module
-    docstring). ``hierarchy`` must be the reflexive-transitive
-    subPropertyOf closure (as ``property_schema`` produces) — the
-    classification relies on ``p ⊑* q`` being a DIRECT row, so a lift
-    through an intermediate inert property never needs staging."""
-    if union_members:
-        return None
+def build_schedule(hierarchy: dict, transitive: set, chains: list) -> Schedule:
+    """Compile the rule set into a stratified schedule. ``hierarchy``
+    must be the reflexive-transitive subPropertyOf closure (as
+    ``property_schema`` produces) — the classification relies on
+    ``p ⊑* q`` being a DIRECT row, so a lift through an intermediate
+    inert property never needs staging."""
     hier_rows = [(p, q) for p, qs in hierarchy.items() for q in qs if q != p]
     p1s = {c[0] for c in chains}
     p2s = {c[1] for c in chains}

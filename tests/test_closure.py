@@ -16,8 +16,7 @@ from kbase_cdm_ontologies_spark.operators.closure import (
 
 LOCAL_KEYS = tuple(
     f"spark.graft.{k}.localThreshold" for k in (
-        "transitiveClosure", "keyedTransitiveClosure",
-        "unionElimination", "propertyClosure",
+        "transitiveClosure", "unionElimination", "propertyClosure",
     )
 )
 
@@ -309,7 +308,6 @@ def test_property_closure_bytes_guard_falls_back_to_distributed(spark):
     }
     assert "property_closure.collect" in closure.phase_walls()
     key = "spark.graft.propertyClosure.driverMaxBytes"
-    closure._PHASE_WALLS.clear()
     spark.conf.set(key, "1")
     try:
         via_guard = {
@@ -398,7 +396,7 @@ def test_cyclic_subproperty_hierarchy(spark):
     assert got == {("x", "p", "y"), ("x", "q", "y")}
 
 
-def _py_property_saturation(edges, hierarchy, transitive, chains, union_members=None):
+def _py_property_saturation(edges, hierarchy, transitive, chains):
     """Independent fixpoint oracle over (s, p, o) sets."""
     cur = set(edges)
     while True:
@@ -406,19 +404,6 @@ def _py_property_saturation(edges, hierarchy, transitive, chains, union_members=
         for s, p, o in cur:
             for q in hierarchy.get(p, ()):
                 new.add((s, q, o))
-        if union_members:
-            by_src = {}
-            for s, p, o in new:
-                by_src.setdefault(s, set()).add((p, o))
-            for bn, ms in union_members.items():
-                if not ms:
-                    continue
-                common = None
-                for m in ms:
-                    lm = by_src.get(m, set())
-                    common = set(lm) if common is None else (common & lm)
-                for p, o in common or ():
-                    new.add((bn, p, o))
         for t in transitive:
             adj = {}
             for s, p, o in new:
@@ -554,7 +539,9 @@ def test_property_closure_stratified_shapes(spark):
     """Deterministic schemas that hit every scheduler classification:
     prefix-chain-into-transitive (the dense-scale shape), suffix
     chains, static-static chain feeds, lifts into a transitive
-    property, and a mutually-recursive two-property SCC (generic)."""
+    property, and a mutually-recursive two-property SCC (generic).
+    The dense-scale shape also runs in bench.py's positional call
+    shape, whose fifth argument is None."""
     from kbase_cdm_ontologies_spark.operators.closure import property_closure
 
     cases = [
@@ -614,42 +601,12 @@ def test_property_closure_stratified_shapes(spark):
                 ).collect()
             }
             assert got == want, (i, thr, sorted(got ^ want)[:8])
-
-
-def test_property_closure_union_rule_fuzz(spark):
-    """Union link rule (a union expression node inherits the COMMON
-    links of its members — the LINK_UNION rule of the parity oracle)
-    against an independent Python fixpoint, in BOTH regimes, with
-    chains feeding on union-derived links."""
-    import random
-
-    from kbase_cdm_ontologies_spark.operators.closure import property_closure
-
-    rng = random.Random(1234)
-    props = ["p0", "p1", "p2"]
-    hierarchy = {"p0": {"p0", "p2"}, "p1": {"p1"}, "p2": {"p2"}}
-    for trial in range(4):
-        nodes = [f"n{i}" for i in range(8)]
-        unions = {"_:u0": rng.sample(nodes, 2), "_:u1": rng.sample(nodes + ["_:u0"], 2)}
-        edges = {
-            (rng.choice(nodes + list(unions)), rng.choice(props), rng.choice(nodes))
-            for _ in range(20)
-        }
-        transitive = {"p2"} if trial % 2 else set()
-        chains = [("p0", "p1", "p1")] if trial >= 2 else []  # self-feeding target
-        want = _py_property_saturation(
-            edges, hierarchy, transitive, chains, union_members=unions
-        )
-        df = spark.createDataFrame(sorted(edges), ["s", "p", "o"])
-        for thr in (2_000_000, 0):
-            got = {
-                (r["s"], r["p"], r["o"])
-                for r in property_closure(
-                    df, hierarchy, transitive, chains,
-                    union_members=unions, local_threshold=thr,
-                ).collect()
-            }
-            assert got == want, (trial, thr, sorted(got ^ want)[:6])
+        if i == 0:  # got: the local_threshold=0 keyword call's edges
+            bench_shape = property_closure(
+                df, case["hierarchy"], case["transitive"], case["chains"],
+                None, local_threshold=0,
+            )
+            assert {(r["s"], r["p"], r["o"]) for r in bench_shape.collect()} == got
 
 
 def test_entail_degenerate_inputs(spark):

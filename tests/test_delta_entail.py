@@ -144,11 +144,11 @@ def _base_fixture():
     ]
 
 
-def test_delta_matches_full_rich_fixture(spark):
-    """Delta touches every family: new terms under old cone, a new
-    restriction over an old filler, a new individual, a new class
-    declaration for a pre-existing bare node."""
-    delta = [
+def _rich_delta():
+    """A delta onto _base_fixture() that touches every family: new
+    terms under old cone, a new restriction over an old filler, a new
+    individual, a new class declaration for a pre-existing bare node."""
+    return [
         ("N:1", "rdf:type", "owl:Class"),
         ("N:2", "rdf:type", "owl:Class"),
         # new leaves under the old chain
@@ -167,7 +167,10 @@ def test_delta_matches_full_rich_fixture(spark):
         ("I:y1", "rdf:type", "N:2"),
         ("I:x1", "rdf:type", "N:1"),
     ]
-    _check_delta_matches_full(spark, _base_fixture(), delta)
+
+
+def test_delta_matches_full_rich_fixture(spark):
+    _check_delta_matches_full(spark, _base_fixture(), _rich_delta())
 
 
 def test_delta_schema_growth(spark):
@@ -448,23 +451,78 @@ def _random_units(rng, tag, classes, props, n_units):
     return units
 
 
-@pytest.mark.parametrize("seed", [3, 17, 41, 77])
-def test_delta_fuzz_vs_full(spark, seed):
-    """Random ontologies, random axiom-unit split into base/delta —
-    incremental must equal full recompute bit-for-bit."""
+def _fuzz_split(seed):
+    """A random ontology of 14 classes, 5 properties and 38 axiom
+    units, split into (base rows, delta rows) at 30 units."""
     rng = random.Random(seed)
     classes = [f"C:{i}" for i in range(14)]
     props = [f"P:{i}" for i in range(5)]
     decls = [(c, "rdf:type", "owl:Class") for c in classes]
     base_units = _random_units(rng, "b", classes, props, 30)
     delta_units = _random_units(rng, "d", classes, props, 8)
-    base_rows = decls + [r for u in base_units for r in u]
-    delta_rows = [r for u in delta_units for r in u]
+    return (
+        decls + [r for u in base_units for r in u],
+        [r for u in delta_units for r in u],
+    )
+
+
+@pytest.mark.parametrize("seed", [3, 17, 41, 77])
+def test_delta_fuzz_vs_full(spark, seed):
+    """Random ontologies, random axiom-unit split into base/delta —
+    incremental must equal full recompute bit-for-bit."""
+    base_rows, delta_rows = _fuzz_split(seed)
     # both regimes on two seeds; the other seeds run the default only
     _check_delta_matches_full(
         spark, base_rows, delta_rows,
         REGIMES if seed in (3, 17) else REGIMES[:1],
     )
+
+
+def _empty_state(spark):
+    """An EntailState of nothing: every frame empty (string columns
+    under the state's column names) and an empty property schema."""
+
+    def empty(*cols):
+        return spark.createDataFrame([], ", ".join(f"{c} string" for c in cols))
+
+    return EntailState(
+        pruned=empty(*COLS),
+        schema_rows=empty(*COLS),
+        sub=empty("s", "o"),
+        rtc=empty("s", "o"),
+        restr=empty("a", "prop", "c"),
+        links=empty("s", "p", "o"),
+        type_asserts=empty("ind", "cls"),
+        edges=empty(*COLS),
+        class_nodes=empty("id"),
+        union_membership=empty("bn", "member"),
+        schema=({}, set(), []),
+    )
+
+
+@pytest.mark.parametrize("source", ["rich", 3, 17])
+def test_delta_from_empty_state_equals_entail(spark, source):
+    """entail_delta(EMPTY, X) == entail(X) in both entail_delta
+    regimes (driver re-saturation, distributed delta path). X is the
+    rich fixture (base ∪ delta) or a fuzz ontology. entail(X) runs its
+    default (driver) regime; entail()'s hybrid answer on these inputs
+    is the oracle of test_delta_matches_full_rich_fixture and
+    test_delta_fuzz_vs_full."""
+    if source == "rich":
+        rows = _base_fixture() + _rich_delta()
+    else:
+        rows = [r for part in _fuzz_split(source) for r in part]
+    x = _df(spark, rows)
+    with _confs(spark, {DRIVER_KEY: None}):
+        want = _edges(entail(x, _class_nodes(spark, x)))
+    empty = _empty_state(spark)
+    for regime in REGIMES:
+        with _confs(spark, {DRIVER_KEY: regime}):
+            got = _edges(entail_delta(empty, x)[0])
+        assert got == want, (
+            f"regime={regime} missing={sorted(want - got)[:8]} "
+            f"extra={sorted(got - want)[:8]}"
+        )
 
 
 def test_delta_distributed_regime(spark):
@@ -474,7 +532,6 @@ def test_delta_distributed_regime(spark):
         "spark.graft.transitiveClosure.localThreshold",
         "spark.graft.unionElimination.localThreshold",
         "spark.graft.propertyClosure.localThreshold",
-        "spark.graft.keyedTransitiveClosure.localThreshold",
         # the distributed delta path only runs with its driver regime off
         DRIVER_KEY,
     ]
@@ -503,7 +560,6 @@ def test_delta_distributed_rule_free_schema(spark):
     keys = [
         "spark.graft.transitiveClosure.localThreshold",
         "spark.graft.propertyClosure.localThreshold",
-        "spark.graft.keyedTransitiveClosure.localThreshold",
         DRIVER_KEY,
     ]
     with _confs(spark, dict.fromkeys(keys, "0")):

@@ -1,6 +1,8 @@
 """Every top-level def of the package is reached from a run path, or is
-named in KEPT with the reason it stays; and the package reads exactly
-the Spark-conf keys config.py documents.
+named in KEPT with the reason it stays; every defaulted parameter of
+the graph layer is set by some run-path call, or is named in
+KEPT_PARAMS; and the package reads exactly the Spark-conf keys
+config.py documents.
 
 A pure-AST pass, no Spark. The roots are the module-level code of every
 package module (imports, constants and the `@q` query registrations)
@@ -229,6 +231,134 @@ def test_every_package_def_is_reached_or_kept():
     assert not stale, f"KEPT entries that are now reached or gone (drop them from KEPT): {stale}"
 
 
+# Modules whose every defaulted parameter (nested defs included) some
+# run-path call must set: a default no run path overrides is a knob
+# nobody turns, and belongs in the body as a constant.
+PARAM_MODULES = (
+    "kbase_cdm_ontologies_spark/operators/closure.py",
+    "kbase_cdm_ontologies_spark/operators/delta_entail.py",
+    "kbase_cdm_ontologies_spark/operators/canonicalize.py",
+    "kbase_cdm_ontologies_spark/plans/stratify.py",
+)
+# (def, parameter) -> why a default that only tests override stays.
+# The set of unset parameters must equal these keys exactly.
+KEPT_PARAMS = {
+    ("union_eliminated_subclass", "local_threshold"):
+        "tests force the distributed loop to check it against the driver fixpoint",
+    ("apply_canonical", "broadcast_max_rows"):
+        "tests force the shuffled join a canonical map over the cap takes",
+    ("_linear_fixpoint", "cap"):
+        "tests force the doubling fallback a diameter over the cap takes",
+}
+
+
+def _is_default(expr: ast.expr, default: ast.expr) -> bool:
+    """expr is the default itself: the same expression, or a literal of
+    the same type and value."""
+    if ast.dump(expr) == ast.dump(default):
+        return True
+    try:
+        a, b = ast.literal_eval(expr), ast.literal_eval(default)
+    except (ValueError, TypeError):
+        return False
+    return type(a) is type(b) and a == b
+
+
+def unset_params(modules=PARAM_MODULES) -> dict[tuple[str, str], str]:
+    """(def name, parameter) -> "file:line" for every defaulted
+    parameter of every def in `modules` that no call in run code sets.
+    Run code is every package module and entry file, minus the bodies
+    of the top-level defs no run path reaches. A call sets a parameter
+    by keyword or by position with an expression that is not its
+    default; a **kwargs call sets them all. Calls resolve by bare name
+    (through a from-import's alias), so a call to a same-named def
+    elsewhere counts too: the pass can miss an unset parameter, never
+    report a set one."""
+    # def name -> [(positional parameter names, {name: default}, where)]
+    defs: dict[str, list] = {}
+    for rel in modules:
+        tree = ast.parse((ROOT / rel).read_text(), rel)
+        methods = {
+            id(f)
+            for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+            for f in c.body
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            pos = [x.arg for x in a.posonlyargs + a.args]
+            defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            defaults |= {
+                x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            }
+            if id(node) in methods:
+                pos = pos[1:]  # self / cls: a call binds it by attribute
+            if defaults:
+                defs.setdefault(node.name, []).append(
+                    (pos, defaults, f"{rel}:{node.lineno}")
+                )
+    unset = {
+        (name, p): where
+        for name, sigs in defs.items()
+        for _pos, defaults, where in sigs
+        for p in defaults
+    }
+    unreached = {
+        loc for locs in unreached_defs().values() for loc in locs
+    }
+    for path in list(MODULES.values()) + ENTRY_FILES:
+        rel = path.relative_to(ROOT).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        skip = {
+            id(s) for s in tree.body
+            if isinstance(s, _DEFS) and f"{rel}:{s.lineno}" in unreached
+        }
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        stack = [n for n in tree.body if id(n) not in skip]
+        while stack:
+            node = stack.pop()
+            stack.extend(ast.iter_child_nodes(node))
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            name = alias.get(name, name)
+            for pos, defaults, _where in defs.get(name, ()):
+                given: list[tuple[str, ast.expr | None]] = []
+                for i, arg in enumerate(node.args):
+                    if isinstance(arg, ast.Starred):
+                        given += [(p, None) for p in pos[i:]]
+                        break
+                    if i < len(pos):
+                        given.append((pos[i], arg))
+                for kw in node.keywords:
+                    if kw.arg is None:  # **kwargs
+                        given += [(p, None) for p in defaults]
+                    else:
+                        given.append((kw.arg, kw.value))
+                for p, expr in given:
+                    if p in defaults and (
+                        expr is None or not _is_default(expr, defaults[p])
+                    ):
+                        unset.pop((name, p), None)
+    return unset
+
+
+def test_every_defaulted_parameter_is_set_or_kept():
+    unset = unset_params()
+    new = {k: unset[k] for k in sorted(set(unset) - set(KEPT_PARAMS))}
+    stale = sorted(set(KEPT_PARAMS) - set(unset))
+    assert not new, (
+        f"defaulted parameters no run path sets (make them constants): {new}"
+    )
+    assert not stale, f"KEPT_PARAMS entries that are now set or gone: {stale}"
+
+
 _CONF_KEY = re.compile(r"spark\.graft\.[A-Za-z]+\.[A-Za-z]+")
 
 
@@ -250,4 +380,4 @@ def test_conf_keys_read_equal_config_docstring():
     doc = ast.get_docstring(ast.parse((PACKAGE / "config.py").read_text()))
     documented = set(_CONF_KEY.findall(doc))
     assert read == documented
-    assert len(read) == 7
+    assert len(read) == 6
