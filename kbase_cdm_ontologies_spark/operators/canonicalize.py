@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import conf_threshold as _conf_threshold
+from ..plans import route
 from ..plans.stats_cut import cut as _statscut
 
 
@@ -106,19 +106,15 @@ def connected_components(
     one task are pure scheduler latency. At 100 TB the first rounds do
     the heavy lifting distributed; the contracted tail (≤ ~16 MB of id
     pairs at the default threshold) finishes in milliseconds locally.
-    Set local_threshold=0 to force the fully distributed loop.
+    local_threshold=None reads its plans/route.py key; 0 forces the
+    fully distributed loop.
 
     30 rounds bound the loop (log2 of any practical component count);
     a non-converged exit raises — the divergence alarm the
-    build plan calls for (SURVEY.md §7.4).
-
-    local_threshold=None reads
-    spark.graft.connectedComponents.localThreshold (default 500k) —
-    the shared config namespace for every hybrid-regime row guard."""
-    if local_threshold is None:
-        local_threshold = _conf_threshold(
-            pairs, "spark.graft.connectedComponents.localThreshold", 500_000
-        )
+    build plan calls for (SURVEY.md §7.4)."""
+    local_threshold = route.threshold(
+        pairs, route.CONNECTED_COMPONENTS, local_threshold
+    )
     # no stats-cut: nodes feeds exactly ONE join at the end, so the
     # BigInteger stats blow-up the cut guards against cannot occur, and
     # dropping it saves one checkpoint job per call
@@ -149,24 +145,15 @@ def connected_components(
         return int(row["n"]), int(row["h"])
 
     converged = False
-    local = False
-    local_rows = None
-    # threshold probe doubles as the local-path data fetch: ONE
-    # limit-capped collect on the materialized edge set replaces the
-    # count job + a second full collect when the graph is already
-    # under the threshold (the common dimension-scale call). On bigger
-    # graphs the capped collect is one cheap extra job and the loop
-    # proceeds exactly as before.
-    if local_threshold > 0:
-        probe = e.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            local = True
-            local_rows = probe
-    if not local:
+    # one capped collect is both the size probe and, for a graph already
+    # under the threshold (the common dimension-scale call), its fetch
+    got = route.capped_collect([e], local_threshold)
+    if got is None:
         sig_prev = _sig(e)
         for _ in range(_CC_ROUNDS):
-            if sig_prev[0] <= local_threshold:
-                local = True
+            if local_threshold and sig_prev[0] <= local_threshold:
+                # the contracted tail fits: fetch it for the driver finish
+                got = route.capped_collect([e], local_threshold)
                 break
             e2 = _statscut(_round(e))
             sig_new = _sig(e2)
@@ -179,19 +166,11 @@ def connected_components(
                 converged = True
                 break
             e, sig_prev = e2, sig_new
-    if local:
-        if local_rows is None:
-            local_rows = e.collect()
-        pairs_local = _local_union_find(
-            [(r["u"], r["v"]) for r in local_rows]
-        )
-        # Arrow batch upload: the plain-list path pickles row-by-row
-        # (~0.3 s per 50k rows inside the timed query)
-        import pandas as pd
-
-        stars = e.sparkSession.createDataFrame(
-            pd.DataFrame(pairs_local, columns=["u", "canonical"]),
-            schema=e.select("u", F.col("v").alias("canonical")).schema,
+    if got is not None:
+        stars = route.upload(
+            e.sparkSession,
+            _local_union_find(got[0]),
+            e.select("u", F.col("v").alias("canonical")).schema,
         )
     elif not converged:
         raise RuntimeError(f"connected_components: no convergence in {_CC_ROUNDS} rounds")

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import conf_threshold as _conf_threshold
+from ..plans import route
 from ..plans.loop_tuning import ShufflePartitionTuner
 from ..plans.stats_cut import cut as _statscut
 from ..plans.stratify import build_schedule, may_fire, merge_strata
@@ -92,23 +92,11 @@ def prune_for_closure(statements: DataFrame) -> DataFrame:
     )
 
 
-def _arrow_df(spark, rows, schema):
-    """createDataFrame via pandas/Arrow for driver-computed results —
-    the plain-list path pickles row-by-row (~10s per million rows);
-    Arrow batches cut that by an order of magnitude."""
-    import pandas as pd
-
-    names = [f.name for f in schema.fields]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=names), schema=schema
-    )
-
-
 def _frame(spark, rows, names) -> DataFrame:
     """Driver-computed rows as a frame of nullable string columns
     `names`, sorted (nulls first) so re-runs write identical files."""
     schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-    return _arrow_df(
+    return route.upload(
         spark,
         sorted(rows, key=lambda r: tuple((x is not None, x or "") for x in r)),
         schema,
@@ -328,30 +316,38 @@ def transitive_closure(
     (non-reflexive). Semi-naive frontier doubling: 20 rounds cover
     diameter 2^20.
 
-    Hybrid execution like connected_components: edge sets under
-    local_threshold are closed with one driver-side BFS (guarded by a
-    pair cap — a dense closure falls back to the distributed loop);
-    larger inputs run the semi-naive frontier rounds. local_threshold=0
-    forces the distributed loop; None reads
-    spark.graft.transitiveClosure.localThreshold (default 100k)."""
-    if local_threshold is None:
-        local_threshold = _conf_threshold(
-            edges, "spark.graft.transitiveClosure.localThreshold", 100_000
-        )
-    c = _statscut(
-        edges.select("s", "o")
-        .where(F.col("s") != F.col("o"))
-        .dropDuplicates()
+    Hybrid (_hybrid_closure): edge sets under local_threshold (None:
+    its plans/route.py key) are closed with one driver-side BFS; 0
+    forces the semi-naive frontier rounds."""
+    return _hybrid_closure(
+        edges.select("s", "o"),
+        route.threshold(edges, route.TRANSITIVE_CLOSURE, local_threshold),
+        "transitive_closure",
     )
-    n_c = c.count() if local_threshold else None
-    if local_threshold and n_c <= local_threshold:
-        closed = _local_closure([("_", r["s"], r["o"]) for r in c.collect()], 5_000_000)
+
+
+def _hybrid_closure(edges: DataFrame, local_threshold: int, op: str) -> DataFrame:
+    """Strict closure of edges (s, o), or (p, s, o) closed per key p:
+    one driver-side BFS when the deduplicated edges fit
+    route.capped_collect's local_threshold and the closure its 5M pair
+    cap, the semi-naive frontier rounds otherwise."""
+    keyed = "p" in edges.columns
+    c = _statscut(edges.where(F.col("s") != F.col("o")).dropDuplicates())
+    got = route.capped_collect([c], local_threshold)
+    if got is not None:
+        rows = got[0] if keyed else [("_", s, o) for s, o in got[0]]
+        closed = _local_closure(rows, 5_000_000)
         if closed is not None:
-            return _arrow_df(
-                c.sparkSession, [(s, o) for _k, s, o in closed], c.schema
+            return route.upload(
+                c.sparkSession,
+                closed if keyed else [(s, o) for _k, s, o in closed],
+                c.schema,
             )
+    # the loop's shuffle sizing: a count only on the over-cap path, none
+    # when the caller forced the loop
+    n_c = (len(got[0]) if got else c.count()) if local_threshold else None
     return _seminaive_closure(
-        c, c, keyed=False, keep_self=False, max_rounds=20, n_input=n_c,
+        c, c, keyed=keyed, keep_self=False, max_rounds=20, op=op, n_input=n_c,
     )
 
 
@@ -449,30 +445,24 @@ def union_eliminated_subclass(
     saves entail() an entire re-closure of the augmented edge set
     (measured 3.8 s on the reference corpus).
 
-    Hybrid like the other closure operators: a subclass+membership
-    graph under local_threshold edges (conf:
-    spark.graft.unionElimination.localThreshold, default 200k — the
-    schema layer of an ontology federation is dictionary-scale) runs
-    the identical fixpoint driver-side (the distributed loop costs
-    ~15 Spark actions of pure scheduler latency at that size);
-    local_threshold=0 forces the distributed loop."""
-    if local_threshold is None:
-        local_threshold = _conf_threshold(
-            sub, "spark.graft.unionElimination.localThreshold", 200_000
-        )
-    n_prev = sub.count()
-    if local_threshold and n_prev <= local_threshold:
-        edges = {(r["s"], r["o"]) for r in sub.collect()}
+    Hybrid like the other closure operators: when sub and the membership
+    each fit local_threshold (None: its plans/route.py key), the
+    identical fixpoint runs driver-side, where the distributed loop
+    costs ~15 Spark actions of scheduler latency; 0 forces the loop."""
+    local_threshold = route.threshold(sub, route.UNION_ELIMINATION, local_threshold)
+    got = route.capped_collect([sub, union_membership], local_threshold)
+    if got is not None:
         mem: dict = {}
-        for r in union_membership.collect():
-            mem.setdefault(r["bn"], set()).add(r["member"])
-        out_edges, out_tc = _local_union_elimination(edges, mem)
+        for bn, m in got[1]:
+            mem.setdefault(bn, set()).add(m)
+        out_edges, out_tc = _local_union_elimination(set(got[0]), mem)
         if out_edges is not None:
             spark = sub.sparkSession
             return (
-                _arrow_df(spark, sorted(out_edges), sub.schema),
-                _arrow_df(spark, sorted(out_tc), sub.schema),
+                route.upload(spark, sorted(out_edges), sub.schema),
+                route.upload(spark, sorted(out_tc), sub.schema),
             )
+    n_prev = len(got[0]) if got is not None else sub.count()
     card = F.broadcast(
         union_membership.groupBy("bn").agg(F.countDistinct("member").alias("k"))
     )
@@ -558,28 +548,13 @@ def keyed_transitive_closure(
     transitive property simultaneously — the join key is (key, mid
     node), so hub middle nodes of one property don't serialize the
     others, and AQE's skew-join splits hot (p, mid) keys at scale.
-    Inputs of at most local_threshold edges take the driver-BFS fast
-    path (same hybrid pattern as transitive_closure); 0 forces the
-    distributed loop."""
-    c = _statscut(
-        edges.select("p", "s", "o")
-        .where(F.col("s") != F.col("o"))
-        .dropDuplicates()
-    )
-    n_c = c.count() if local_threshold else None
-    if local_threshold and n_c <= local_threshold:
-        closed = _local_closure(
-            [(r["p"], r["s"], r["o"]) for r in c.collect()], 5_000_000
-        )
-        if closed is not None:
-            return _arrow_df(c.sparkSession, closed, c.schema)
-    # no shuffle_hash hint in the frontier join: hub (p, mid) keys are
-    # REAL in ontology property graphs and AQE's skew splitting only
-    # applies to sort-merge joins — the hint produced a measured
-    # one-task straggler (>10 min) on the reference corpus
-    return _seminaive_closure(
-        c, c, keyed=True, keep_self=False, max_rounds=20,
-        op="keyed_transitive_closure", n_input=n_c,
+    Hybrid like transitive_closure; 0 forces the distributed loop.
+    No shuffle_hash hint in the frontier join: hub
+    (p, mid) keys are REAL in ontology property graphs and AQE's skew
+    splitting only applies to sort-merge joins — the hint produced a
+    measured one-task straggler (>10 min) on the reference corpus."""
+    return _hybrid_closure(
+        edges.select("p", "s", "o"), local_threshold, "keyed_transitive_closure"
     )
 
 
@@ -1355,20 +1330,16 @@ def property_closure(
 
     Hybrid execution like the other closure operators: an ontology's
     property-edge graph is dictionary-scale relative to the corpus
-    (the reference's full test tier is ~1M base links), so below
-    local_threshold rows AND spark.graft.propertyClosure.driverMaxBytes
-    (default 256 MB) estimated payload the saturation runs driver-side
-    with the identical rule set. local_threshold=0 forces the
-    distributed loop. keep_steps keeps the synthetic ``_:step_*``
+    (the reference's full test tier is ~1M base links), so within
+    local_threshold rows and the driverMaxBytes budget (plans/route.py)
+    the saturation runs driver-side with the identical rule set; 0
+    forces the distributed loop. keep_steps keeps the synthetic ``_:step_*``
     chain-step rows (entail_delta's warm start needs them)."""
     spark = base_edges.sparkSession
     # this call's phases only: drop what an earlier call left behind
     for k in [k for k in _PHASE_WALLS if k.startswith("property_closure.")]:
         del _PHASE_WALLS[k]
-    if local_threshold is None:
-        local_threshold = _conf_threshold(
-            base_edges, "spark.graft.propertyClosure.localThreshold", 2_000_000
-        )
+    local_threshold = route.threshold(spark, route.PROPERTY_CLOSURE, local_threshold)
     hier_rows = [
         (p, q) for p, qs in hierarchy.items() for q in qs if q != p
     ]
@@ -1396,38 +1367,26 @@ def property_closure(
 
     _pphase("base_materialize")
     needs_fixpoint = bool(transitive or chains)
-    if local_threshold and needs_fixpoint:
-        if r.count() <= local_threshold:
-            # bytes-aware driver guard: the row threshold alone could
-            # admit multi-GB string payloads on a small-driver cluster
-            max_bytes = _conf_threshold(
-                spark, "spark.graft.propertyClosure.driverMaxBytes", 256 << 20
-            )
-            est = r.select(
-                F.sum(F.length("s") + F.length("p") + F.length("o")).alias("b")
-            ).collect()[0]["b"]
-            if (est or 0) <= max_bytes:
-                _pphase("count+bytes_guard")
-                # Arrow collection: toPandas() batches columns through
-                # Arrow (~5x faster than collect()'s per-row pickling
-                # at the 2M-row driver ceiling)
-                pdf = r.toPandas()
-                rows_in = set(
-                    zip(pdf["s"].tolist(), pdf["p"].tolist(), pdf["o"].tolist())
-                )
-                _pphase("collect")
-                closed = _local_property_saturation(
-                    rows_in, hierarchy, transitive, chains, keep_steps=keep_steps
-                )
-                _pphase("saturate")
-                # sorted: set-iteration order varies with string
-                # hashing across processes, and byte-identical re-runs
-                # (export content hashes, parquet diffs) are a stated
-                # engine property; the sort costs <1 s at the 2M-row
-                # driver-path ceiling
-                out = _arrow_df(spark, sorted(closed), r.schema)
-                _pphase("sort+arrow")
-                return out
+    # bytes-aware driver guard: the row threshold alone could admit
+    # multi-GB string payloads on a small-driver cluster
+    got = route.capped_collect(
+        [r], local_threshold if needs_fixpoint else 0,
+        max_bytes=route.threshold(spark, route.PROPERTY_MAX_BYTES),
+        guarded=lambda: _pphase("count+bytes_guard"),
+    )
+    if got is not None:
+        _pphase("collect")
+        closed = _local_property_saturation(
+            set(got[0]), hierarchy, transitive, chains, keep_steps=keep_steps
+        )
+        _pphase("saturate")
+        # sorted: set-iteration order varies with string hashing across
+        # processes, and byte-identical re-runs (export content hashes,
+        # parquet diffs) are a stated engine property; the sort costs
+        # <1 s at the 2M-row driver-path ceiling
+        out = route.upload(spark, sorted(closed), r.schema)
+        _pphase("sort+arrow")
+        return out
 
     def expand_hierarchy(df: DataFrame) -> DataFrame:
         if not hier_rows:
@@ -2040,18 +1999,9 @@ def entail(
         _PHASE_WALLS[ns + name] = round(now - _t, 3)
         _t = now
 
-    # a 0 in any local threshold forces the distributed fixpoints, so
-    # callers that force them through confs alone never run the driver
-    forced = property_local_threshold == 0 or any(
-        _conf_threshold(spark, k, 1) == 0
-        for k in (
-            "spark.graft.transitiveClosure.localThreshold",
-            "spark.graft.unionElimination.localThreshold",
-            "spark.graft.propertyClosure.localThreshold",
-        )
-    )
-    driver_max = 0 if forced or state_capture is not None else _conf_threshold(
-        spark, "spark.graft.deltaEntail.driverThreshold", 100_000
+    forced = route.forced(spark, property_local_threshold)
+    driver_max = 0 if forced or state_capture is not None else route.threshold(
+        spark, route.DRIVER_ENTAIL
     )
     # materialize the pruned+interned statements ONCE: property_schema,
     # expression_edges, the domain rule, restriction_nodes, and the
@@ -2412,34 +2362,28 @@ _SPO = ["subject", "predicate", "object"]
 
 
 def _driver_entail(pruned, class_nodes, max_rows, saved=None, phase=lambda _n: None):
-    """The driver regime of entail() and entail_delta: ONE tagged Arrow
-    collect of the pruned rows and class nodes (with a saved state's
-    `saved` = (pruned, class_nodes), so entail_delta re-saturates
-    old ∪ new), capped at max_rows + 1 rows per part, then _local_entail.
-    Returns (saturated state, rows, class ids, saved rows), or None, and
-    the caller runs its distributed path, when a part holds more than
-    max_rows rows or _local_entail returns None; its base guard is
-    property_closure's (spark.graft.propertyClosure.localThreshold rows,
-    spark.graft.propertyClosure.driverMaxBytes)."""
-    frames = [pruned, class_nodes] + (list(saved) if saved is not None else [])
-    tagged = None
-    for k, df in zip((1, 3, 0, 2), frames):
-        cols = _SPO if k < 2 else [F.col("id").alias("subject")]
-        df = df.select(F.lit(k).alias("k"), *cols)
-        tagged = df if tagged is None else tagged.unionByName(
-            df, allowMissingColumns=True
-        )
-    got = tagged.limit(len(frames) * (max_rows + 1)).toArrow().to_pydict()
-    parts: tuple[list, ...] = ([], [], [], [])
-    for k, s, p, o in zip(got["k"], got["subject"], got["predicate"], got["object"]):
-        parts[k].append((s, p, o))
+    """The driver regime of entail() and entail_delta: ONE capped collect
+    (route.capped_collect, max_rows rows per frame) of the pruned rows
+    and class nodes, then _local_entail. With a saved state's `saved` =
+    (pruned, class_nodes, rtc, links), its pruned rows and class nodes
+    join the collect, so entail_delta re-saturates old ∪ new, and its
+    rtc and links only need to fit. Returns (saturated state, rows,
+    class ids, saved rows), or None, and the caller runs its distributed
+    path, when a frame holds more than max_rows rows or _local_entail
+    returns None under property_closure's base guard."""
+    frames = [pruned, class_nodes] + list(saved or ())
+    cols = [_SPO, ["id"], _SPO, ["id"], [F.lit(0)], [F.lit(0)]]
+    got = route.capped_collect(
+        [df.select(*c) for df, c in zip(frames, cols)], max_rows
+    )
     phase("prune+non_el+intern")
-    if max(map(len, parts)) > max_rows:
+    if got is None:
         return None
-    rows = set(parts[0]) | set(parts[1])
-    classes = {s for s, _p, _o in parts[2] + parts[3]}
+    new_rows, new_classes, old_rows, old_classes = (got + [[], []])[:4]
+    rows = set(new_rows) | set(old_rows)
+    classes = {c for (c,) in new_classes + old_classes}
     sat = _local_entail(rows, classes, phase, (
-        _conf_threshold(pruned, "spark.graft.propertyClosure.localThreshold", 2_000_000),
-        _conf_threshold(pruned, "spark.graft.propertyClosure.driverMaxBytes", 256 << 20),
+        route.threshold(pruned, route.PROPERTY_CLOSURE),
+        route.threshold(pruned, route.PROPERTY_MAX_BYTES),
     ))
-    return None if sat is None else (sat, rows, classes, parts[0])
+    return None if sat is None else (sat, rows, classes, old_rows)

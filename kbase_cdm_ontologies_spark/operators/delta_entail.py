@@ -40,12 +40,11 @@ one NEW fact are (re)derived. Concretely, for a statement delta Δ:
 
 Regimes. The steps above are the distributed path: each is a few Spark
 jobs over cone-sized frames, so a dictionary-scale update pays job
-latency, not work. When the saved state fits on the driver — rtc,
-links, pruned and the delta each at most
-spark.graft.deltaEntail.driverThreshold rows (default 100k), read by
-limit-capped probes — entail_delta instead runs entail()'s driver
-regime, closure._driver_entail, over the saved pruned rows plus the
-delta: one Arrow collect, one re-saturation of old ∪ new with
+latency, not work. When the saved state fits on the driver
+(deltaEntail.driverThreshold, plans/route.py), entail_delta instead
+runs entail()'s driver regime, closure._driver_entail: one capped
+Arrow collect that sizes every frame and fetches the saved pruned rows
+plus the delta, one re-saturation of old ∪ new with
 closure._local_entail, and every state frame rebuilt from the result
 with the distributed path's column names and types. A state over the
 threshold, or a closure over the driver pair cap or base guard, runs
@@ -74,11 +73,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import route
 from ..plans.stats_cut import cut as _statscut
 from .closure import (
     _SPO,
     _chain_compose,
-    _conf_threshold,
     _domain_edges,
     _driver_entail,
     _frame,
@@ -264,17 +263,12 @@ def _driver_delta(
     """entail_delta's driver regime: closure._driver_entail over the
     saved rows + the delta rows, and every state frame rebuilt from the
     result. Returns None, and the caller runs the distributed path, when
-    a saved rtc/links frame holds more than max_rows rows or
-    _driver_entail returns None."""
+    a saved rtc/links frame holds more than max_rows rows (sized in the
+    same capped collect) or _driver_entail returns None."""
     spark = pruned_delta.sparkSession
-    # limit-capped probes: a corpus-sized state must not pay a full
-    # count just to learn that it is over the threshold
-    for saved in (state.rtc, state.links):
-        if saved.select(F.lit(0)).limit(max_rows + 1).toArrow().num_rows > max_rows:
-            return None
     out = _driver_entail(
         pruned_delta, delta_class_nodes, max_rows,
-        saved=(state.pruned, state.class_nodes),
+        saved=(state.pruned, state.class_nodes, state.rtc, state.links),
     )
     if out is None:
         return None
@@ -343,13 +337,12 @@ def entail_delta(
         .select(*_SPO)
         .dropDuplicates()
     )
-    driver_max = _conf_threshold(
-        spark, "spark.graft.deltaEntail.driverThreshold", 100_000
+    out = _driver_delta(
+        state, pruned_delta, delta_class_nodes,
+        route.threshold(spark, route.DRIVER_ENTAIL),
     )
-    if driver_max:
-        out = _driver_delta(state, pruned_delta, delta_class_nodes, driver_max)
-        if out is not None:
-            return out
+    if out is not None:
+        return out
     pruned_delta = _statscut(pruned_delta, eager=True)
     pruned_delta = _statscut(
         _anti_vs_big(pruned_delta, state.pruned, _SPO, "subject"),

@@ -34,6 +34,7 @@ from ..operators import (
     triples as triples_op,
 )
 from .checkpoint import CheckpointManager, code_hash
+from .stats_cut import cut
 
 
 def class_node_ids(statements: DataFrame) -> DataFrame:
@@ -141,9 +142,12 @@ def run_pipeline(
     )
 
     def compute_edges() -> DataFrame:
-        canon_stmts = canonicalize.apply_canonical(
+        # cut once: entail()'s non-EL drop, its interning and its
+        # driver collect each read the canonicalized statements, and a
+        # lazy frame would re-run the canonical-map joins for every one
+        canon_stmts = cut(canonicalize.apply_canonical(
             statements, cmap, ["subject", "object"]
-        )
+        ))
         class_nodes = class_node_ids(canon_stmts)
         onto_edges = closure.entail(canon_stmts, class_nodes)
         svo_edges = linked.select(

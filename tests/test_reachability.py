@@ -2,7 +2,7 @@
 named in KEPT with the reason it stays; every defaulted parameter of
 the graph layer is set by some run-path call, or is named in
 KEPT_PARAMS; and the package reads exactly the Spark-conf keys
-config.py documents.
+plans/route.py documents.
 
 A pure-AST pass, no Spark. The roots are the module-level code of every
 package module (imports, constants and the `@q` query registrations)
@@ -239,6 +239,7 @@ PARAM_MODULES = (
     "kbase_cdm_ontologies_spark/operators/delta_entail.py",
     "kbase_cdm_ontologies_spark/operators/canonicalize.py",
     "kbase_cdm_ontologies_spark/plans/stratify.py",
+    "kbase_cdm_ontologies_spark/plans/route.py",
 )
 # (def, parameter) -> why a default that only tests override stays.
 # The set of unset parameters must equal these keys exactly.
@@ -364,7 +365,7 @@ _CONF_KEY = re.compile(r"spark\.graft\.[A-Za-z]+\.[A-Za-z]+")
 
 def test_conf_keys_read_equal_config_docstring():
     """The spark.graft.* keys the package reads, each spelled as one
-    whole string literal, are exactly the keys config.py's docstring
+    whole string literal, are exactly the keys plans/route.py's docstring
     lists; no key is built by an f-string the scan could not see."""
     read: set[str] = set()
     for path in MODULES.values():
@@ -377,7 +378,7 @@ def test_conf_keys_read_equal_config_docstring():
             elif isinstance(n, ast.Constant) and isinstance(n.value, str):
                 if _CONF_KEY.fullmatch(n.value):
                     read.add(n.value)
-    doc = ast.get_docstring(ast.parse((PACKAGE / "config.py").read_text()))
+    doc = ast.get_docstring(ast.parse((PACKAGE / "plans" / "route.py").read_text()))
     documented = set(_CONF_KEY.findall(doc))
     assert read == documented
     assert len(read) == 6
